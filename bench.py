@@ -56,43 +56,14 @@ def main() -> None:
     import __spark_entry__ as entrymod
     from mcp_clickhouse_spark.session import get_spark
 
-    # Size shuffle partitions to the data volume (SURVEY.md 'spill-aware'):
-    # ~32 MB of input per partition, never below 8. At 100 TB the same rule
-    # yields tens of thousands of partitions; at sf0.1 it avoids drowning
-    # 35 MB of data in per-task overhead.
-    total_bytes = sum(
-        os.path.getsize(os.path.join(sf_dir, f))
-        for f in os.listdir(sf_dir)
-        if f.endswith(".parquet")
-    )
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
-    partitions = int(
-        os.environ.get(
-            "SPARK_GRAFT_SHUFFLE_PARTITIONS",
-            max(8, min(total_bytes // (32 << 20), 4 * cpus)),
-        )
-    )
-    # No maxPartitionBytes override: the testdata files are single-row-group
-    # parquet, so scan splits can't subdivide them anyway (row group = task),
-    # and an A/B under this exact protocol (default vs 32 MB vs 64 MB) showed
-    # only noise-level differences — the round-2 "split-bytes win" did not
-    # reproduce.  At 100 TB multi-row-group files the 128 MB default is the
-    # right split size regardless.
-    spark = get_spark(
-        app_name="mcp-clickhouse-spark-bench",
-        shuffle_partitions=int(partitions),
-    )
-    # Adaptive execution is sized to the data like the shuffle partitions
-    # are: AQE's value is runtime re-planning (skew splits, broadcast
-    # conversion, partition coalescing) on plans whose statistics are wrong
-    # at scale — but it materializes a scheduler job per exchange, a fixed
-    # ~50-150 ms tax per query stage that dominates when the whole input is
-    # megabytes.  A/B (scripts/floor_probe.py, interleaved min-of-3): AQE off
-    # is faster on EVERY headline query at sf0.1 — q1 0.56→0.34,
-    # join_star 0.82→0.58, total −1.5 s.  At ≥1 GiB input the tax vanishes
-    # into real work and AQE stays on, which is the 100 TB configuration.
-    if total_bytes < (1 << 30):
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
+    # The served session policy, exactly as MCPSparkServer builds it: shuffle
+    # partitions max(cores, 4), AQE on.  AQE off was measured faster on every
+    # headline query at sf0.1 on 32 cores (interleaved min-of-3: q1
+    # 0.56→0.34 s, join_star 0.82→0.58 s, total −1.5 s) — its per-exchange
+    # scheduler job dominates when the input is megabytes — but whether the
+    # served policy should switch it off for small inputs is measured on the
+    # tool path, not decided here.
+    spark = get_spark(app_name="mcp-clickhouse-spark-bench")
     qs = entrymod.queries()
 
     # Materialize via Arrow (df.toArrow): the full result set crosses the
@@ -137,12 +108,12 @@ def main() -> None:
     spread = {name: round(max(s) - min(s), 3) for name, s in samples.items()}
 
     # Additive keys (contract: never remove/rename): the effective
-    # parallelism knobs, so a cross-core-count comparison is interpretable.
-    # At small SFs the bytes-derived shuffle-partition floor (8) and the
-    # small-table scan-split cap (8 files) bound most stages at 8 tasks
-    # regardless of cores — tables >= 500k rows scale their scan split with
-    # max(8, cpus // 2) (session._split_file_cap), which is where 8-vs-32
-    # core runs genuinely diverge once the data is big enough.
+    # parallelism of the live session, so a cross-core-count comparison is
+    # interpretable.  At small SFs the small-table scan-split cap (8 files)
+    # bounds scan stages at 8 tasks regardless of cores — tables >= 1M rows
+    # scale their scan split with max(8, cores // 2)
+    # (session._split_file_cap), which is where 8-vs-32 core runs genuinely
+    # diverge once the data is big enough.
     from mcp_clickhouse_spark.session import _split_file_cap
 
     print(
@@ -155,9 +126,9 @@ def main() -> None:
                 "spread": spread,
                 "rounds": ROUNDS,
                 "sf": sf,
-                "cpus": cpus,
-                "shuffle_partitions": int(partitions),
-                "scan_split_cap_big_tables": _split_file_cap(10**9),
+                "cpus": spark.sparkContext.defaultParallelism,
+                "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
+                "scan_split_cap_big_tables": _split_file_cap(spark, 10**9),
             }
         )
     )

@@ -8,23 +8,36 @@ singletons.  Where the reference configures a ClickHouse connection
 warehouse directory of parquet tables plays the role of the database, and
 ``local[N]`` master string the role of the server address.
 
-Environment variables:
+Environment variables (every one the package reads; tests/test_config.py
+checks this list against the code):
 
 Engine (`SparkEngineConfig`, reference ClickHouseConfig/ChDBConfig):
     MCP_SPARK_ENABLED             enable the engine + its tools (default true)
     MCP_SPARK_WAREHOUSE           parquet warehouse dir (default
                                   $SPARK_GRAFT_SF_DIR or /root/testdata/sf0.1)
     MCP_SPARK_MASTER              Spark master (default local[$SPARK_GRAFT_CPUS])
-    MCP_SPARK_SHUFFLE_PARTITIONS  shuffle partition override (default: sized
-                                  from CPU count by session.get_spark)
-    MCP_SPARK_DRIVER_MEMORY       driver heap (default $SPARK_GRAFT_DRIVER_MEM
-                                  or 8g)
 
 Server (`MCPServerConfig`, reference MCPServerConfig, mcp_env.py:261-289):
     MCP_SPARK_SERVER_TRANSPORT    "stdio" | "http" | "sse" (default stdio)
     MCP_SPARK_BIND_HOST           bind host for http/sse (default 127.0.0.1)
     MCP_SPARK_BIND_PORT           bind port for http/sse (default 8000)
-    MCP_SPARK_QUERY_TIMEOUT       SELECT tool timeout seconds (default 30)
+    MCP_SPARK_QUERY_TIMEOUT       SELECT tool timeout seconds (default 30); the
+                                  only timeout knob — SETTINGS
+                                  max_execution_time can only lower it
+
+Session (read by `session.get_spark` / `session._split_layout`):
+    SPARK_GRAFT_SF_DIR            warehouse fallback when MCP_SPARK_WAREHOUSE
+                                  is unset
+    SPARK_GRAFT_CPUS              cores of the default local master (default:
+                                  all cores); shuffle partitions follow the
+                                  session's parallelism, max(cores, 4)
+    SPARK_GRAFT_DRIVER_MEM        spark.driver.memory (default 8g)
+    SPARK_GRAFT_WAREHOUSE         cache dir for split-layout rewrites (default
+                                  /tmp/spark_graft_warehouse)
+
+Inventory (`inventory.registry.run_prepared`):
+    SPARK_GRAFT_NO_PLAN_CACHE     set to rebuild every query from Python
+                                  instead of replaying the memoized plan
 """
 
 from __future__ import annotations
@@ -66,31 +79,16 @@ class SparkEngineConfig:
         )
 
     @property
-    def cpus(self) -> int:
-        return int(os.getenv("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
-
-    @property
-    def master(self) -> str:
-        return os.getenv("MCP_SPARK_MASTER", f"local[{self.cpus}]")
-
-    @property
-    def shuffle_partitions(self) -> int | None:
-        raw = os.getenv("MCP_SPARK_SHUFFLE_PARTITIONS")
-        return int(raw) if raw else None
-
-    @property
-    def driver_memory(self) -> str:
-        return os.getenv("SPARK_GRAFT_DRIVER_MEM", "8g")
+    def master(self) -> str | None:
+        """None = ``session.get_spark``'s default, local[$SPARK_GRAFT_CPUS]."""
+        return os.getenv("MCP_SPARK_MASTER")
 
     def get_session_config(self) -> dict:
         """kwargs ready for :func:`session.get_spark` (the analog of the
         reference's ``get_client_config`` → ``clickhouse_connect.get_client``,
-        mcp_env.py:135-165)."""
-        return {
-            "master": self.master,
-            "shuffle_partitions": self.shuffle_partitions,
-            "extra_conf": {"spark.driver.memory": self.driver_memory},
-        }
+        mcp_env.py:135-165).  Sizing is not configured here: get_spark
+        derives it from the session it builds."""
+        return {"master": self.master}
 
     def _validate(self) -> None:
         """Missing warehouse = missing required env (mcp_env.py:167-180)."""

@@ -12,7 +12,6 @@ is strictly better: each query runs under a Spark job group, and on timeout
 
 from __future__ import annotations
 
-import os
 import threading
 import uuid
 from concurrent.futures import Future, ThreadPoolExecutor, TimeoutError as FutureTimeout
@@ -22,7 +21,6 @@ from pyspark.sql import SparkSession
 
 # Same bound as the reference (:66).
 MAX_CONCURRENT_QUERIES = 10
-DEFAULT_TIMEOUT_SECS = float(os.environ.get("MCP_QUERY_TIMEOUT", "30"))
 
 QUERY_EXECUTOR = ThreadPoolExecutor(
     max_workers=MAX_CONCURRENT_QUERIES, thread_name_prefix="mcp-spark-query"
@@ -36,14 +34,14 @@ class QueryTimeoutError(TimeoutError):
 def run_with_timeout(
     spark: SparkSession,
     fn: Callable[[], Any],
-    timeout_secs: float | None = None,
+    timeout_secs: float,
 ) -> Any:
-    """Run ``fn`` on the shared pool under a job group; cancel it on timeout.
+    """Run ``fn`` on the shared pool under a job group; cancel it after
+    ``timeout_secs`` (resolved by the caller from MCP_SPARK_QUERY_TIMEOUT).
 
     The job group is set on the worker thread (job groups are thread-local
     in Spark), so cancelJobGroup targets exactly this query's jobs.
     """
-    timeout = DEFAULT_TIMEOUT_SECS if timeout_secs is None else timeout_secs
     group = f"mcp-query-{uuid.uuid4()}"
     started = threading.Event()
 
@@ -58,7 +56,7 @@ def run_with_timeout(
 
     future: Future = QUERY_EXECUTOR.submit(target)
     try:
-        return future.result(timeout=timeout)
+        return future.result(timeout=timeout_secs)
     except FutureTimeout:
         future.cancel()  # if not yet started
         if started.is_set():
@@ -83,5 +81,5 @@ def run_with_timeout(
 
             threading.Thread(target=_sweep, daemon=True, name="mcp-cancel-sweep").start()
         raise QueryTimeoutError(
-            f"Query timed out after {timeout} seconds and was cancelled"
+            f"Query timed out after {timeout_secs} seconds and was cancelled"
         ) from None

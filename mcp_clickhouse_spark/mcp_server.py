@@ -33,7 +33,7 @@ from dataclasses import dataclass
 from typing import Any, Callable
 
 from mcp_clickhouse_spark import tools as t
-from mcp_clickhouse_spark.config import get_engine_config, get_mcp_config
+from mcp_clickhouse_spark.config import get_engine_config
 from mcp_clickhouse_spark.prompt import INITIAL_PROMPT
 
 logger = logging.getLogger("mcp-clickhouse-spark")
@@ -108,7 +108,6 @@ class MCPSparkServer:
     def _register_defaults(self) -> None:
         if not get_engine_config().enabled:  # mirrors CLICKHOUSE_ENABLED gating
             return
-        timeout = get_mcp_config().query_timeout
         self.add_tool(
             ToolSpec(
                 name="list_databases",
@@ -163,7 +162,7 @@ class MCPSparkServer:
                     "required": ["query"],
                 },
                 fn=lambda query, dialect="spark": t.run_select_query(
-                    self.spark(), query, timeout_secs=timeout, dialect=dialect
+                    self.spark(), query, dialect=dialect
                 ),
             )
         )
@@ -187,7 +186,7 @@ class MCPSparkServer:
                     "required": ["query"],
                 },
                 fn=lambda query, dialect="spark": t.run_embedded_select_query(
-                    self.spark(), query, timeout_secs=timeout, dialect=dialect
+                    self.spark(), query, dialect=dialect
                 ),
             )
         )

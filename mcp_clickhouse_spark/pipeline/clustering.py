@@ -120,7 +120,7 @@ def connected_components(
         # (the convergence signature, which must run anyway) materializes
         # the blocks and truncates lineage in the same job.  Eager
         # checkpoints cost a dedicated materialization job each: 8 jobs per
-        # dedup_clusters run → 4 (scripts/cc_probe.py), labels identical.
+        # dedup_clusters run → 4, labels identical.
         .localCheckpoint(eager=False)
     )
     nodes = edges.select(F.col("src").alias("node")).union(

@@ -555,8 +555,8 @@ def bucket_pairs(banded: DataFrame, id_col: str, max_bucket_size: int) -> DataFr
 def should_precompute_sets(n_pairs: int, n_docs: int) -> bool:
     """The jaccard_verify cost model: post-join computes 2·|pairs|
     shingle-hash sets, docs-side computes |docs| — precompute when the
-    pair side would do more set computations.  Measured at sf1
-    (scripts/stage_probe.py, round 9): 259,700 candidates over 50,000
+    pair side would do more set computations.  Measured at sf1 (per-stage
+    profile, round 9): 259,700 candidates over 50,000
     docs verify in 6.8 s precomputed vs 35.2 s post-join (5.2×), while
     the sparse sf0.1 shape (347 pairs / 5,000 docs) stays post-join."""
     return 2 * n_pairs > n_docs

@@ -34,22 +34,20 @@ TESTDATA_TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
-def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
-
-
 def get_spark(
     app_name: str = "mcp-clickhouse-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the long-lived session — the chDB-session analog.
 
+    This is the one sizing policy: the server, the tests, bench.py and the
+    profiling scripts all run the session it builds.
+
     Config stance:
+      - ``local[$SPARK_GRAFT_CPUS]`` unless a master is given.
+      - Shuffle partitions = ``max(defaultParallelism, 4)``, read from the
+        session itself, so a cluster master sizes them to its executors.
       - AQE on: runtime coalescing of shuffle partitions, skew-join splitting
         and broadcast-join conversion replace hand-tuned plans at scale.
       - Arrow on: every Pandas-UDF boundary is Arrow-batched.
@@ -60,15 +58,11 @@ def get_spark(
         raw int64 and normalize to µs in :func:`read_table` — distributed,
         no driver round-trip.
     """
-    cpus = default_parallelism()
     if master is None:
-        master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = max(cpus, 4)
+        master = f"local[{int(os.environ.get('SPARK_GRAFT_CPUS', os.cpu_count() or 4))}]"
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -102,7 +96,10 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    partitions = max(spark.sparkContext.defaultParallelism, 4)
+    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
+    return spark
 
 
 # Lazy-DataFrame memo: re-calling spark.read.parquet re-lists files and
@@ -117,7 +114,7 @@ _TABLE_CACHE: dict[tuple[int, str, str], DataFrame] = {}
 # session has (row group = minimum split unit).  A warehouse owns its storage
 # layout, so on first access we rewrite such tables once into an N-file copy
 # under a content-keyed cache dir and read that from then on.  Interleaved
-# A/B at sf0.1 (scripts/mrg_probe.py): headline total 6.90 s → 4.53 s.
+# A/B at sf0.1: headline total 6.90 s → 4.53 s.
 # At 100 TB this code self-disables: real tables arrive as many files /
 # many row groups and take the `return path` below.
 _WAREHOUSE_ROOT = os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/spark_graft_warehouse")
@@ -126,8 +123,7 @@ _WAREHOUSE_ROOT = os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/spark_graft_ware
 # r16 defaults (75k rows/file, cap 8) left orders at 2 tasks and events at
 # 4 on a 32-core box — job-profile showed scan stages as the bottleneck of
 # the map-heavy queries (pipe_text_stats: 1.0 s of task time on 4 tasks).
-# Env-overridable so a deployment can retune without code changes; the
-# 100 TB case is unaffected (multi-row-group inputs skip the rewrite).
+# The 100 TB case is unaffected (multi-row-group inputs skip the rewrite).
 # Defaults re-measured r17 (interleaved A/B, min-of-3×3): 18,750 rows/file
 # brings orders (150k rows) from 2 scan tasks to 8 and events (300k) from 4
 # to 8 — every orders/events-scanning headline query improved (events
@@ -137,30 +133,32 @@ _WAREHOUSE_ROOT = os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/spark_graft_ware
 # Round-18 (VERDICT items 2/8 — make scan parallelism follow the session's
 # cores when the data warrants it): the flat cap of 8 left sf1's 6M-row
 # lineitem at 8 scan tasks on 32 cores.  The cap is now core-aware for BIG
-# tables only: rows >= _SPLIT_BIG_ROWS get max(8, cpus // 2) files, smaller
+# tables only: rows >= _SPLIT_BIG_ROWS get max(8, cores // 2) files, smaller
 # tables keep 8.  Measured at sf1/32 cores (interleaved ab_bench,
 # min-of-3): cap 8 → 7.250 s, cap 16 → 6.558 s, cap 32 → 7.005 s — 16
 # (= 32 cores // 2) is the sweet spot; at 8 cores the formula yields 8,
 # byte-identical to the r17 layout.  The 1M-row gate keeps the WHOLE
-# sf0.1 layout unchanged (in-tree env A/B: a 500k gate let lineitem cross
-# and cost ~+0.01 s each on q1/join_star; a flat 16 cap also cost +0.013 s
-# on join_asof) — sf0.1 stays parallelism-capped by design, which bench.py
-# now documents in its output; the scaling signal lives at sf1 and above.
-# SPARK_GRAFT_SPLIT_MAX_FILES remains the hard ceiling.
-_SPLIT_ROWS = int(os.environ.get("SPARK_GRAFT_SPLIT_ROWS", 18_750))
-_SPLIT_MAX_FILES = int(os.environ.get("SPARK_GRAFT_SPLIT_MAX_FILES", 32))
-_SPLIT_BIG_ROWS = int(os.environ.get("SPARK_GRAFT_SPLIT_BIG_ROWS", 1_000_000))
+# sf0.1 layout unchanged (A/B: a 500k gate let lineitem cross and cost
+# ~+0.01 s each on q1/join_star; a flat 16 cap also cost +0.013 s on
+# join_asof) — sf0.1 stays parallelism-capped by design, which bench.py
+# documents in its output; the scaling signal lives at sf1 and above.
+# _SPLIT_MAX_FILES is the hard ceiling.
+_SPLIT_ROWS = 18_750
+_SPLIT_MAX_FILES = 32
+_SPLIT_BIG_ROWS = 1_000_000
 
 
-def _split_file_cap(rows: int) -> int:
-    cap = 8 if rows < _SPLIT_BIG_ROWS else max(8, default_parallelism() // 2)
-    return min(cap, _SPLIT_MAX_FILES)
+def _split_file_cap(spark: SparkSession, rows: int) -> int:
+    if rows < _SPLIT_BIG_ROWS:
+        return 8
+    return min(max(8, spark.sparkContext.defaultParallelism // 2), _SPLIT_MAX_FILES)
+
+
 # CPU-heavy per-row consumers (shingling, vector math) want scan parallelism
-# even at small row counts
-_SPLIT_CPU_TABLES = {
-    "documents": int(os.environ.get("SPARK_GRAFT_SPLIT_DOCS", 4)),
-    "embeddings": int(os.environ.get("SPARK_GRAFT_SPLIT_EMB", 4)),
-}
+# even at small row counts.  Doubling documents to 8 files was measured as
+# a wash at sf0.1 on 32 cores (pipe_text_stats −0.02 s, pipe_minhash_lsh
+# +0.07 s).
+_SPLIT_CPU_TABLES = {"documents": 4, "embeddings": 4}
 _SPLIT_CPU_MIN_ROWS = 2_000
 
 
@@ -177,7 +175,7 @@ def _split_layout(spark: SparkSession, path: str, name: str) -> str:
     if meta.num_row_groups != 1:
         return path
     rows = meta.num_rows
-    n = min((rows + _SPLIT_ROWS - 1) // _SPLIT_ROWS, _split_file_cap(rows))
+    n = min((rows + _SPLIT_ROWS - 1) // _SPLIT_ROWS, _split_file_cap(spark, rows))
     if name in _SPLIT_CPU_TABLES and rows >= _SPLIT_CPU_MIN_ROWS:
         n = max(n, _SPLIT_CPU_TABLES[name])
     if n < 2:

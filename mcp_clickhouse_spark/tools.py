@@ -26,6 +26,7 @@ from typing import Any, Optional, Sequence, Union
 from pyspark.sql import DataFrame, SparkSession
 
 from mcp_clickhouse_spark.catalog import describe_table, list_database_names, list_table_names
+from mcp_clickhouse_spark.config import get_mcp_config
 from mcp_clickhouse_spark.executor import QueryTimeoutError, run_with_timeout
 from mcp_clickhouse_spark.pagination import PageState, consume_token, mint_token
 from mcp_clickhouse_spark.readonly import (
@@ -147,11 +148,16 @@ def list_tables(
 
 def _apply_settings(
     query: str, dialect: str, timeout_secs: float | None
-) -> tuple[str, float | None]:
-    """Translate a ClickHouse ``SETTINGS`` clause into engine behavior:
-    ``max_execution_time`` (seconds) tightens the job-group timeout,
-    ``readonly`` ≥1 is the engine's permanent contract (no-op), and anything
-    else is stripped with a ``UserWarning`` — visible, not silent."""
+) -> tuple[str, float]:
+    """Resolve the call's timeout and translate a ClickHouse ``SETTINGS``
+    clause into engine behavior.
+
+    The timeout is ``timeout_secs`` when given, else MCP_SPARK_QUERY_TIMEOUT;
+    ``max_execution_time`` (seconds) can only tighten it, ``readonly`` ≥1 is
+    the engine's permanent contract (no-op), and anything else is stripped
+    with a ``UserWarning`` — visible, not silent."""
+    if timeout_secs is None:
+        timeout_secs = get_mcp_config().query_timeout
     if dialect != "clickhouse":
         return query, timeout_secs
     import warnings
@@ -167,7 +173,7 @@ def _apply_settings(
                 warnings.warn(f"SETTINGS max_execution_time={v!r} is not a number; ignored")
                 continue
             if t > 0:
-                timeout_secs = t if timeout_secs is None else min(timeout_secs, t)
+                timeout_secs = min(timeout_secs, t)
         elif k == "readonly":
             if v.strip() not in ("1", "2"):
                 warnings.warn(

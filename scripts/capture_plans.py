@@ -5,6 +5,7 @@ Usage: python scripts/capture_plans.py <suffix> [query ...]
   suffix: 'before' or 'after' — file becomes plans/<round>/<query>_<suffix>.txt
   round: $SPARK_GRAFT_PLAN_ROUND (default r18).
   With no query list, captures every bench.py HEADLINE query.
+  Runs on the served session policy (session.get_spark).
 
 The judge cannot run Spark; these files are the committed evidence for
 plan-shape claims in OPTIMIZATION_<round>.md (exchange counts, join strategy,
@@ -32,16 +33,7 @@ def main() -> None:
     import __spark_entry__ as entrymod
     from mcp_clickhouse_spark.session import get_spark
 
-    total_bytes = sum(
-        os.path.getsize(os.path.join(sf_dir, f))
-        for f in os.listdir(sf_dir)
-        if f.endswith(".parquet")
-    )
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
-    partitions = max(8, min(total_bytes // (32 << 20), 4 * cpus))
-    spark = get_spark(app_name="capture-plans", shuffle_partitions=int(partitions))
-    if total_bytes < (1 << 30):
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark = get_spark(app_name="capture-plans")
 
     qs = entrymod.queries()
     outdir = (

@@ -2,7 +2,7 @@
 """Per-query JOB-level profile of the bench headline set (guide §1).
 
 Runs each headline query under the bench protocol (warm passes, then one
-timed pass) with spark.eventLog enabled and a per-query job description,
+timed pass) on the served session policy with spark.eventLog enabled and a per-query job description,
 then parses the event log to report, per query:
 
   - number of Spark jobs the single materialization launched (each job is
@@ -37,16 +37,8 @@ def main() -> None:
     from mcp_clickhouse_spark.session import get_spark
 
     os.makedirs(LOGDIR, exist_ok=True)
-    total_bytes = sum(
-        os.path.getsize(os.path.join(sf_dir, f))
-        for f in os.listdir(sf_dir)
-        if f.endswith(".parquet")
-    )
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
-    partitions = max(8, min(total_bytes // (32 << 20), 4 * cpus))
     spark = get_spark(
         app_name="job-profile",
-        shuffle_partitions=int(partitions),
         extra_conf={
             "spark.eventLog.enabled": "true",
             "spark.eventLog.dir": f"file://{LOGDIR}",
@@ -54,8 +46,6 @@ def main() -> None:
             "spark.eventLog.rolling.enabled": "false",
         },
     )
-    if total_bytes < (1 << 30):
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
     sc = spark.sparkContext
     app_id = sc.applicationId
     qs = entrymod.queries()

@@ -122,8 +122,7 @@ TIME_SHAPES = [
 def main() -> None:
     n_random = int(sys.argv[1]) if len(sys.argv) > 1 else 60
     rng = random.Random(1717)
-    spark = get_spark(app_name="parse-audit", master="local[8]",
-                      shuffle_partitions=8)
+    spark = get_spark(app_name="parse-audit", master="local[8]")
     spark.sparkContext.setLogLevel("ERROR")
     duck = duckdb.connect()
 

@@ -16,8 +16,7 @@ SF_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark(app_name="mcp-clickhouse-spark-tests", master="local[4]",
-                      shuffle_partitions=4)
+    spark = get_spark(app_name="mcp-clickhouse-spark-tests", master="local[4]")
     yield spark
 
 

@@ -4,7 +4,12 @@ env surface documented in config.py."""
 
 from __future__ import annotations
 
+import re
+from pathlib import Path
+
 import pytest
+
+import mcp_clickhouse_spark.config as config_module
 
 from mcp_clickhouse_spark.config import (
     MCPServerConfig,
@@ -32,30 +37,24 @@ def test_engine_defaults(monkeypatch):
         "MCP_SPARK_ENABLED",
         "MCP_SPARK_WAREHOUSE",
         "MCP_SPARK_MASTER",
-        "MCP_SPARK_SHUFFLE_PARTITIONS",
         "SPARK_GRAFT_SF_DIR",
-        "SPARK_GRAFT_CPUS",
-        "SPARK_GRAFT_DRIVER_MEM",
     ):
         monkeypatch.delenv(var, raising=False)
     cfg = SparkEngineConfig()
     assert cfg.enabled is True
     assert cfg.warehouse == "/root/testdata/sf0.1"
-    assert cfg.master.startswith("local[")
-    assert cfg.shuffle_partitions is None
-    assert cfg.driver_memory == "8g"
+    # No master configured: session.get_spark picks local[$SPARK_GRAFT_CPUS]
+    # and sizes the session itself.
+    assert cfg.master is None
+    assert cfg.get_session_config() == {"master": None}
 
 
 def test_engine_env_overrides(monkeypatch, tmp_path):
     monkeypatch.setenv("MCP_SPARK_WAREHOUSE", str(tmp_path))
     monkeypatch.setenv("MCP_SPARK_MASTER", "local[2]")
-    monkeypatch.setenv("MCP_SPARK_SHUFFLE_PARTITIONS", "8")
-    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "2g")
     cfg = SparkEngineConfig()
-    sess = cfg.get_session_config()
-    assert sess["master"] == "local[2]"
-    assert sess["shuffle_partitions"] == 8
-    assert sess["extra_conf"]["spark.driver.memory"] == "2g"
+    assert cfg.warehouse == str(tmp_path)
+    assert cfg.get_session_config() == {"master": "local[2]"}
 
 
 def test_engine_warehouse_fallback_to_sf_dir(monkeypatch, tmp_path):
@@ -144,3 +143,39 @@ def test_singletons_cached_until_reset(monkeypatch):
     reset_config_singletons()
     assert get_engine_config() is not a
     assert get_mcp_config() is not m
+
+
+# --- the documented env surface ----------------------------------------------
+
+_ENV_READ = re.compile(
+    r"""os\.(?:environ\.get|getenv)\(\s*["']([A-Z0-9_]+)["']"""
+    r"""|os\.environ\[\s*["']([A-Z0-9_]+)["']\s*\]"""
+)
+
+
+def test_every_env_var_read_is_documented():
+    """config.py's docstring is the one list of knobs: every environment
+    variable read anywhere in the package must appear in it."""
+    package = Path(config_module.__file__).parent
+    read = {
+        a or b
+        for path in package.rglob("*.py")
+        for a, b in _ENV_READ.findall(path.read_text())
+    }
+    assert "MCP_SPARK_QUERY_TIMEOUT" in read  # the scan itself works
+    documented = set(re.findall(r"\b[A-Z][A-Z0-9_]+\b", config_module.__doc__))
+    assert sorted(read - documented) == []
+
+
+# --- the one session policy --------------------------------------------------
+
+
+def test_session_sizing_policy(spark):
+    """session.get_spark sizes every session the same way: shuffle
+    partitions follow the session's own parallelism (never below 4), and
+    adaptive execution is on."""
+    sc = spark.sparkContext
+    assert spark.conf.get("spark.sql.shuffle.partitions") == str(
+        max(sc.defaultParallelism, 4)
+    )
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"

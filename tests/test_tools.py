@@ -222,6 +222,28 @@ def test_settings_passthrough_and_warnings(spark, users):
         )
 
 
+def test_apply_settings_only_lowers_configured_timeout(monkeypatch):
+    """The configured timeout (MCP_SPARK_QUERY_TIMEOUT) is the ceiling for a
+    direct tool call exactly as for a served one: SETTINGS
+    max_execution_time can lower it, never raise it."""
+    from mcp_clickhouse_spark.tools import _apply_settings
+
+    monkeypatch.setenv("MCP_SPARK_QUERY_TIMEOUT", "30")
+    sql, timeout = _apply_settings(
+        "SELECT 1 SETTINGS max_execution_time=60", "clickhouse", None
+    )
+    assert "SETTINGS" not in sql and timeout == 30
+    assert _apply_settings(
+        "SELECT 1 SETTINGS max_execution_time=5", "clickhouse", None
+    )[1] == 5
+    assert _apply_settings("SELECT 1", "spark", None) == ("SELECT 1", 30)
+    # An explicit timeout replaces the configured one; SETTINGS still only
+    # lowers it.
+    assert _apply_settings(
+        "SELECT 1 SETTINGS max_execution_time=60", "clickhouse", 2.0
+    )[1] == 2.0
+
+
 def test_extract_settings_unit():
     from mcp_clickhouse_spark.dialect import extract_settings
 
