@@ -24,6 +24,8 @@ Tie semantics: a right row with ts equal to the left row's ts matches
 
 from __future__ import annotations
 
+import functools
+import operator
 from typing import Sequence
 
 from pyspark.sql import DataFrame, Window
@@ -71,6 +73,9 @@ def asof_join(
     # would be pure overhead, so the plan stays unchanged there.  Estimate
     # unavailable (Spark Connect) → conservative no-prune branch.  Output
     # rows are identical either way: pruned right rows join to nothing.
+    # The semi-join matches keys null-safely, because the window below
+    # groups NULL keys together: a NULL-key left row does match a NULL-key
+    # right row.
     from mcp_clickhouse_spark.plans.inspect import (
         broadcast_threshold,
         estimated_size_bytes,
@@ -86,9 +91,11 @@ def asof_join(
         and 0 < l_size <= thresh
         and l_size * 16 <= r_size
     ):
+        keys = left.select(*[F.col(c).alias(f"__asof_k{i}") for i, c in enumerate(on)])
+        match = [F.col(c).eqNullSafe(F.col(f"__asof_k{i}")) for i, c in enumerate(on)]
         right = right.join(
-            F.broadcast(left.select(*[F.col(c) for c in on]).distinct()),
-            on=on,
+            F.broadcast(keys.distinct()),
+            on=functools.reduce(operator.and_, match),
             how="left_semi",
         )
 

@@ -17,7 +17,9 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Sequence
+
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -265,8 +267,6 @@ def incremental_dedup(
     the corpus key set is the thing you'd persist between ingests (it is
     orders of magnitude smaller than the corpus text).
     """
-    from pyspark.sql import Window
-
     if key_fn is None:
         from mcp_clickhouse_spark.pipeline.text import fingerprint_col
 
@@ -422,134 +422,150 @@ def minhash_lsh_candidates(
     for simhash: 6,992,500 candidate pairs from 250,000 docs when every doc
     has 49 exact twins, 27× the sf1 pair count for 5× the data).  Docs
     sharing a full signature form an exact-dup cluster; its min-id member
-    becomes the representative and the others attach as ``(rep, member)``
-    star pairs — O(m) rows per m-member cluster — and banding runs over
-    REPRESENTATIVES only, exactly the r10 simhash shape (simhash_near_dups
-    below).  Downstream jaccard_verify still true-Jaccard-checks every star
-    pair, and connected-components reconstructs the full clusters, so
-    nothing is lost.  ``collapse_identical=False`` restores the flat
-    all-members banding — the streaming twin
-    (streaming/ops.streaming_minhash_neardup) pins its replay against that
-    shape, since an incremental stream cannot know the global min-id
-    representative.
-
-    Banding is ONE shuffle end-to-end: the banded rows exchange once on
-    (band, bucket); a row_number window (reusing that exchange's
-    partitioning and sort) truncates oversize buckets, a collect_list on
-    the SAME partitioning (no second exchange — the distribution is
-    already satisfied) assembles each bucket's id list, and pairs explode
-    from the array with two chained generators — all without the former
-    self-join (two exchange reads), its persisted banded frame, or the
-    per-call ``isEmpty`` probe job that decided whether to cap (judge
-    round-3 item 7).  The collapse adds one exchange over |docs|
-    signature keys — linear, and it removes the quadratic pair volume.
+    becomes the representative, the others attach as ``(rep, member)``
+    star pairs, and banding runs over REPRESENTATIVES only — the shared
+    :func:`neardup_candidates` core.  Downstream jaccard_verify still
+    true-Jaccard-checks every star pair, and connected-components
+    reconstructs the full clusters, so nothing is lost.
+    ``collapse_identical=False`` restores the flat all-members banding —
+    the streaming twin (streaming/ops.streaming_minhash_neardup) pins its
+    replay against that shape, since an incremental stream cannot know the
+    global min-id representative.
 
     ``max_bucket_size`` caps the per-(band, bucket) population BEFORE pair
-    generation: a degenerate corpus (boilerplate/empty documents that all
-    collide into one bucket) would otherwise generate O(b²) pairs from a
-    single mega-bucket — the classic LSH scale failure.  Overflowing buckets
-    are deterministically truncated to the ``max_bucket_size`` lowest ids
-    (their members are near-identical by construction, and exact-hash dedup
-    upstream catches the fully identical ones).  Because the cap filter runs
-    BEFORE collect_list, no bucket array ever exceeds max_bucket_size
-    elements — per-task memory is bounded even on a 100 TB degenerate
-    corpus, unlike a collect-then-slice formulation.
+    generation (see :func:`bucket_pairs`): a degenerate corpus
+    (boilerplate/empty documents that all collide into one bucket) would
+    otherwise generate O(b²) pairs from a single mega-bucket — the classic
+    LSH scale failure.  Overflowing buckets keep their ``max_bucket_size``
+    lowest ids (their members are near-identical by construction, and
+    exact-hash dedup upstream catches the fully identical ones).
     """
-    if collapse_identical:
-        from pyspark.sql import Window
-
-        # window min DIRECTLY on the signature array (the r10 simhash
-        # convention): no per-group array buffer — a collect_list
-        # formulation measured ~0.3 s faster at sparse sf0.1 but holds
-        # every cluster member in one task buffer, which a 10⁸-member
-        # boilerplate cluster would OOM at 100 TB; WindowExec streams and
-        # spills.
-        rep_w = Window.partitionBy("signature")
-        with_rep = sigs.withColumn("_rep", F.min(id_col).over(rep_w))
-        # r18 (guide §2.4 — one pass instead of two): the former shape split
-        # with_rep into a star branch (member pairs) and a banding branch
-        # (reps only) and unioned them — the union's star side re-read the
-        # signature exchange and re-ran the whole Window a second time (an
-        # extra 8-task pass per execution; the exchange itself was shared by
-        # ReuseExchange, the window sort was not).  ONE generator now emits
-        # both kinds of bucket rows in the window's own stage:
-        #   - reps explode to their `bands` (band, bucket) rows as before;
-        #   - each non-rep member explodes to a synthetic 2-row bucket
-        #     (band = -1, bucket = the member's own id) holding exactly
-        #     {rep, member}, so bucket_pairs emits precisely the former
-        #     (rep, member) star pair.  band -1 can never collide with a
-        #     real band, and the member id is unique per member, so no
-        #     synthetic bucket ever merges with another.
-        # Equivalence is pinned two-sided in tests/test_r18_opt.py.  NULL
-        # ids are filtered explicitly — the old branch predicates (id =/!=
-        # rep) silently dropped them, the CASE below would not.
-        # The synthetic bucket reuses the member id as the bucket value,
-        # which needs a bigint id; any other id type falls back to the
-        # two-branch union shape (never hit by the inventory — doc ids are
-        # bigint everywhere).
-        if dict(sigs.dtypes).get(id_col) == "bigint":
-            bh = _band_hash_expr(rows_per_band, "signature")
-            gen = (
-                f"CASE WHEN {id_col} = _rep THEN"
-                f" transform(sequence(0, {int(bands) - 1}),"
-                f" b -> struct(b AS band, {bh} AS bucket, {id_col} AS _bid))"
-                f" ELSE array("
-                f" struct(-1 AS band, {id_col} AS bucket, _rep AS _bid),"
-                f" struct(-1 AS band, {id_col} AS bucket, {id_col} AS _bid))"
-                f" END"
-            )
-            banded = (
-                with_rep.where(F.col(id_col).isNotNull())
-                .select(F.explode(F.expr(gen)).alias("e"))
-                .select("e.band", "e.bucket", F.col("e._bid").alias(id_col))
-            )
-            return _persist(
-                bucket_pairs(banded, id_col, max_bucket_size).distinct()
-            )
-        with_rep = _persist(with_rep)
-        star = with_rep.where(F.col(id_col) != F.col("_rep")).select(
-            F.col("_rep").alias("id_a"), F.col(id_col).alias("id_b")
-        )
-        banded = with_rep.where(F.col(id_col) == F.col("_rep")).selectExpr(
-            id_col,
-            band_bucket_posexplode(bands, rows_per_band),
-        )
-        pairs = bucket_pairs(banded, id_col, max_bucket_size).unionByName(star)
-        return _persist(pairs.distinct())
-    banded = sigs.selectExpr(
-        id_col,
-        # one parsed expression: per band, hash the comma-joined band rows
-        band_bucket_posexplode(bands, rows_per_band),
+    if not collapse_identical:
+        banded = sigs.selectExpr(id_col, band_bucket_posexplode(bands, rows_per_band))
+        return _persist(bucket_pairs(banded, id_col, max_bucket_size))
+    band_rows = (
+        f"transform(sequence(0, {int(bands) - 1}), b -> struct(b AS band,"
+        f" {_band_hash_expr(rows_per_band, 'signature')} AS bucket))"
     )
-    return _persist(bucket_pairs(banded, id_col, max_bucket_size).distinct())
+    return _persist(
+        neardup_candidates(sigs, id_col, "signature", band_rows, max_bucket_size)
+    )
 
 
-def bucket_pairs(banded: DataFrame, id_col: str, max_bucket_size: int) -> DataFrame:
-    """Distinct-per-bucket (id_a < id_b) pairs from a (band, bucket, id)
-    frame — the shared pair-generation core of MinHash-LSH and
-    embedding-LSH near-dup.  One shuffle: window cap + collect_list reuse
-    the same (band, bucket) exchange; pairs explode from the bounded
-    arrays.  Callers ``.distinct()`` the result (the same pair can surface
-    from several bands)."""
-    from pyspark.sql import Window
+def neardup_candidates(
+    df: DataFrame,
+    id_col: str,
+    key_col: str,
+    band_rows: str,
+    max_bucket_size: int,
+    cols: Sequence = (),
+    payload: Sequence[str] = (),
+) -> DataFrame:
+    """Candidate pairs at KEY-CLUSTER granularity — the one collapse-and-band
+    core of MinHash-LSH, SimHash and embedding near-dup.
 
+    Rows with an identical ``key_col`` collapse to their lowest-id member,
+    the representative (a window min: WindowExec streams and spills, where a
+    collect_list would hold a 10⁸-member boilerplate cluster in one task
+    buffer).  ONE generator over the window's own stage then emits both
+    kinds of bucket row:
+
+    - a rep explodes to ``band_rows``, SQL for its
+      ``array<struct<band: int, bucket: bigint>>`` with ``band >= 0``;
+    - every other member explodes to a synthetic 2-row bucket
+      (band = -1, bucket = the member's own id) holding exactly
+      {rep, member}, so :func:`bucket_pairs` emits the (rep, member) star
+      pair.  Band -1 never collides with a real band and member ids are
+      unique, so no synthetic bucket merges with another.
+
+    One window pass and one generator: no union of a star branch with a
+    banding branch, which re-ran the window (and, for SimHash, the whole
+    fingerprint aggregation) a second time.
+
+    ``cols`` are projected next to the id and the rep below the generator,
+    for columns ``band_rows`` reads that ``df`` lacks (embedding plane sums
+    stay their own projected columns, see similarity.band_plane_exprs).
+    ``payload`` columns ride to both pair sides (``<col>_a``/``<col>_b``);
+    they must be functions of ``key_col``, because the rep's row in a
+    synthetic bucket carries the member's values.
+
+    NULL ids are dropped.  The id doubles as the synthetic bucket value, so
+    it must be bigint; cast any other id type before calling.
+    """
+    id_type = dict(df.dtypes)[id_col]
+    if id_type != "bigint":
+        raise ValueError(
+            f"near-dup id column {id_col!r} must be bigint, got {id_type};"
+            f" cast it to bigint first"
+        )
+    gen = (
+        f"CASE WHEN {id_col} = _rep THEN {band_rows}"
+        f" ELSE array_repeat(struct(-1 AS band, {id_col} AS bucket), 2) END"
+    )
+    banded = (
+        df.withColumn("_rep", F.min(id_col).over(Window.partitionBy(key_col)))
+        .where(F.col(id_col).isNotNull())
+        .select("*", *cols)
+        .select(id_col, "_rep", *payload, F.posexplode(F.expr(gen)).alias("_i", "_e"))
+        # slot 0 of a synthetic bucket is the rep; a rep's own rows keep its id
+        .select(
+            "_e.band",
+            "_e.bucket",
+            F.expr(f"IF(_i = 0, _rep, {id_col})").alias(id_col),
+            *payload,
+        )
+    )
+    return bucket_pairs(banded, id_col, max_bucket_size, payload)
+
+
+def bucket_pairs(
+    banded: DataFrame,
+    id_col: str,
+    max_bucket_size: int,
+    payload: Sequence[str] = (),
+) -> DataFrame:
+    """Distinct (id_a < id_b) pairs from a (band, bucket, id, *payload)
+    frame — the one pair generator of every LSH near-dup operator (the same
+    pair can surface from several bands).  ``payload`` columns come back as
+    ``<col>_a`` / ``<col>_b``.
+
+    One shuffle: a row_number window on the (band, bucket) exchange keeps
+    each bucket's ``max_bucket_size`` lowest ids, a collect_list on the
+    SAME partitioning assembles the bounded bucket arrays, and pairs
+    explode from them with two chained generators — no self-join.  The cap
+    runs before collect_list, so no bucket array exceeds
+    ``max_bucket_size`` and per-task memory stays bounded even on a
+    degenerate 100 TB corpus.  A cap below 2 would silently drop every
+    pair (each synthetic star bucket holds two rows), so it is rejected.
+    """
+    if max_bucket_size < 2:
+        raise ValueError(
+            f"max_bucket_size must be >= 2, got {max_bucket_size}:"
+            f" a bucket capped below two members yields no pairs"
+        )
     cap_w = Window.partitionBy("band", "bucket").orderBy(id_col)
-    capped = banded.withColumn("_rn", F.row_number().over(cap_w)).where(
-        F.col("_rn") <= max_bucket_size
-    )
-    buckets = capped.groupBy("band", "bucket").agg(
-        F.sort_array(F.collect_list(id_col)).alias("_ids")
-    )
-    return (
-        buckets.where(F.size("_ids") >= 2)
-        .select(F.col("_ids"), F.posexplode("_ids").alias("_i", "id_a"))
+    item = F.struct(id_col, *payload) if payload else F.col(id_col)
+    pairs = (
+        banded.withColumn("_rn", F.row_number().over(cap_w))
+        .where(F.col("_rn") <= max_bucket_size)
+        .groupBy("band", "bucket")
+        .agg(F.sort_array(F.collect_list(item)).alias("_ids"))
+        .where(F.size("_ids") >= 2)
+        .select("_ids", F.posexplode("_ids").alias("_i", "id_a"))
         .select(
             "id_a",
-            F.explode(
-                F.slice(F.col("_ids"), F.col("_i") + 2, F.size("_ids"))
-            ).alias("id_b"),
+            F.explode(F.slice("_ids", F.col("_i") + 2, F.size("_ids"))).alias("id_b"),
         )
     )
+    if payload:
+        pairs = pairs.select(
+            *[
+                F.col(f"id_{s}.{c}").alias(f"id_{s}" if c == id_col else f"{c}_{s}")
+                for s in "ab"
+                for c in (id_col, *payload)
+            ]
+        )
+    return pairs.distinct()
 
 
 def should_precompute_sets(n_pairs: int, n_docs: int) -> bool:
@@ -705,104 +721,47 @@ def simhash_near_dups(
     """(id_a, id_b, hamming) pairs with hamming(simhash) <= max_hamming,
     at FINGERPRINT-CLUSTER granularity.
 
-    Skew-proof shape (judge round-9 item 1):
+    Skew-proof shape (judge round-9 item 1), on the shared
+    :func:`neardup_candidates` core:
 
     1. **Identical fingerprints collapse first.**  Docs sharing a full
-       64-bit fingerprint form an exact-dup cluster; its min-id member
-       becomes the representative and the others attach as
-       ``(rep, member, 0)`` star pairs — O(m) rows per m-member cluster,
-       computed with a window min (no per-group array buffer).  The old
-       all-pairs form emitted O(m²) rows from every such cluster
-       (20,395,900 pairs at sf1), which is quadratic on a boilerplate-heavy
-       corpus; downstream connected-components reconstructs the identical
+       fingerprint form an exact-dup cluster; its min-id member becomes
+       the representative and the others attach as ``(rep, member, 0)``
+       star pairs — O(m) rows per m-member cluster.  The old all-pairs
+       form emitted O(m²) rows from every such cluster (20,395,900 pairs
+       at sf1), which is quadratic on a boilerplate-heavy corpus;
+       downstream connected-components reconstructs the identical
        clusters from the star pairs, so nothing is lost.
     2. **Pigeonhole blocking over REPRESENTATIVES only**: split the bits
        into ``blocks`` chunks; any pair within distance
        ``max_hamming (< blocks)`` agrees on ≥1 whole chunk → bucket by
-       chunk value, pair INSIDE buckets only, verify exact hamming via
-       bit_count(xor).  Chunk values are extracted with getbit + acc*2
-       (shift builtins only take literal amounts).
-    3. **Bucket cap** (the MinHash-LSH convention, dedup.py
-       ``bucket_pairs``): each (chunk_idx, chunk_val) bucket is
-       deterministically truncated to its ``max_bucket_size`` lowest rep
-       ids BEFORE pair generation — a degenerate chunk bucket (near-empty
-       docs whose fingerprints agree on one chunk) can no longer go
-       quadratic.  The cap runs before collect_list, so no bucket array
-       exceeds max_bucket_size and per-task memory stays bounded; pairs
-       then explode from the bounded arrays with chained generators (one
-       shuffle: window cap + collect_list reuse the same exchange — no
-       self-join).
-    """
-    from pyspark.sql import Window
+       (chunk index, chunk value), pair INSIDE buckets only, verify exact
+       hamming via bit_count(xor).  Chunk values are extracted with
+       getbit + acc*2 (shift builtins only take literal amounts).
+    3. **Bucket cap** (:func:`bucket_pairs`): each chunk bucket keeps its
+       ``max_bucket_size`` lowest rep ids BEFORE pair generation — a
+       degenerate chunk bucket (near-empty docs whose fingerprints agree
+       on one chunk) can no longer go quadratic.
 
-    rep_w = Window.partitionBy("simhash")
-    with_rep = hashes.withColumn("_rep", F.min(id_col).over(rep_w))
+    The fingerprint rides along as pair payload, so the hamming verify
+    needs no join back.
+    """
     width = SIMHASH_BITS // blocks
-    # r18 (guide §2.4, same fusion as minhash_lsh_candidates): the former
-    # shape computed the fingerprints TWICE — `reps` was a separate
-    # groupBy(simhash) whose partial aggregation runs before its exchange,
-    # so not even ReuseExchange could share it with the window branch.  ONE
-    # generator now emits both kinds of bucket rows from the window's own
-    # stage: reps explode to their `blocks` pigeonhole chunks; each non-rep
-    # member explodes to a synthetic 2-row bucket (chunk_idx = −1,
-    # chunk_val = the member's own id — collision-free vs real chunks and
-    # other members) holding {rep, member}, whose fingerprints are
-    # IDENTICAL by construction, so the shared hamming verify emits exactly
-    # the former (rep, member, 0) star pair.  NULL ids are filtered
-    # explicitly (the old branch predicates dropped them from stars and
-    # star members from banding; non-null ids are the operating contract).
-    # Requires a bigint id for the synthetic bucket — true of every caller
-    # (doc_id / vec_id).  Equivalence pinned in tests/test_r18_opt.py.
     chunk_val = (
         f"aggregate(sequence({width - 1}, 0, -1), CAST(0 AS BIGINT),"
         f" (acc, i) -> acc * 2 + getbit(simhash, b * {width} + i))"
     )
-    gen = (
-        f"CASE WHEN {id_col} = _rep THEN"
-        f" transform(sequence(0, {int(blocks) - 1}),"
-        f" b -> struct(b AS chunk_idx, {chunk_val} AS chunk_val,"
-        f" {id_col} AS _bid, simhash AS _bsh))"
-        f" ELSE array("
-        f" struct(-1 AS chunk_idx, {id_col} AS chunk_val, _rep AS _bid, simhash AS _bsh),"
-        f" struct(-1 AS chunk_idx, {id_col} AS chunk_val, {id_col} AS _bid, simhash AS _bsh))"
-        f" END"
+    band_rows = (
+        f"transform(sequence(0, {int(blocks) - 1}),"
+        f" b -> struct(b AS band, {chunk_val} AS bucket))"
     )
-    chunked = (
-        with_rep.where(F.col(id_col).isNotNull())
-        .select(F.explode(F.expr(gen)).alias("e"))
-        .select(
-            "e.chunk_idx",
-            "e.chunk_val",
-            F.col("e._bid").alias(id_col),
-            F.col("e._bsh").alias("simhash"),
-        )
-    )
-    cap_w = Window.partitionBy("chunk_idx", "chunk_val").orderBy(id_col)
-    capped = chunked.withColumn("_rn", F.row_number().over(cap_w)).where(
-        F.col("_rn") <= max_bucket_size
-    )
-    buckets = capped.groupBy("chunk_idx", "chunk_val").agg(
-        F.sort_array(F.collect_list(F.struct(F.col(id_col).alias("id"), "simhash"))).alias(
-            "_e"
-        )
-    )
-    cand = (
-        buckets.where(F.size("_e") >= 2)
-        .select(F.col("_e"), F.posexplode("_e").alias("_i", "a"))
-        .select(
-            F.col("a"),
-            F.explode(F.slice(F.col("_e"), F.col("_i") + 2, F.size("_e"))).alias("b"),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.simhash").alias("sh_a"),
-            F.col("b.simhash").alias("sh_b"),
-        )
-        .distinct()
+    cand = neardup_candidates(
+        hashes, id_col, "simhash", band_rows, max_bucket_size, payload=["simhash"]
     )
     return (
-        cand.withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
+        cand.withColumn(
+            "hamming", F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
+        )
         .where(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )
@@ -904,8 +863,6 @@ def span_dedup(
         # occurrence has a NULL id yields NULL min/max; countDistinct
         # counts 0 (<= max_docs → keep) and NULL<=>NULL = true matches
         # that, where plain == would silently drop the span.
-        from pyspark.sql import Window
-
         w = Window.partitionBy("chunk_key")
         flagged = spans.withColumn(
             "_keep", F.min(id_col).over(w).eqNullSafe(F.max(id_col).over(w))

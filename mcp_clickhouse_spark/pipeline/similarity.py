@@ -294,18 +294,16 @@ def embedding_neardup_pairs(
     per band is 2^-planes of the corpus pair space.
 
     **Identical vectors collapse first** (round 11 — the same
-    quadratic-in-cluster-size shape fixed in minhash_lsh_candidates this
-    round and simhash last round: m exact-duplicate embeddings — e.g.
-    re-embedded duplicate documents — share every band bucket and emitted
-    C(m, 2) pairs up to the cap, TRUNCATING members past it).  Vectors
-    sharing the exact array collapse to a min-id representative via a
-    window min (no per-group buffer); members attach as O(m) star pairs
-    that flow through the SAME cosine verify (identical vectors ⇒
-    cosine 1.0 ≥ any threshold), and banding runs over representatives.
+    quadratic-in-cluster-size shape fixed in minhash_lsh_candidates and
+    simhash: m exact-duplicate embeddings — e.g. re-embedded duplicate
+    documents — share every band bucket and emitted C(m, 2) pairs up to
+    the cap, TRUNCATING members past it).  Vectors sharing the exact array
+    collapse to a min-id representative through the shared
+    dedup.neardup_candidates core; members attach as O(m) star pairs that
+    flow through the SAME cosine verify (identical vectors ⇒ cosine 1.0 ≥
+    any threshold), and banding runs over representatives.
     ``collapse_identical=False`` restores the flat shape.
     """
-    from mcp_clickhouse_spark.pipeline.dedup import bucket_pairs
-
     # meta is the cosine lookup for BOTH pair sides — built over the FULL
     # corpus before any collapse, so star members resolve their vectors
     meta = corpus.select(
@@ -313,51 +311,10 @@ def embedding_neardup_pairs(
         F.col(vec_col).alias("_vec"),
         F.expr(_norm_sql(vec_col)).alias("_norm"),
     )
-    plane_cols, bucket_exprs = band_plane_exprs(
-        vec_col, bands, planes_per_band, dim
+    pairs = _embedding_candidates(
+        corpus, id_col, vec_col, bands, planes_per_band, dim,
+        max_bucket_size, collapse_identical,
     )
-    if collapse_identical:
-        # r18 (guide §2.4, the minhash_lsh_candidates fusion): ONE generator
-        # over the collapse window emits reps' band rows AND each member's
-        # synthetic 2-row bucket (band = −1, bucket = member id) holding
-        # {rep, member} — identical vectors ⇒ the shared cosine verify
-        # scores the former star pair at 1.0 ≥ any threshold.  Removes the
-        # union's second window pass and the with_rep persist.  The plane
-        # sums stay their own projected columns BELOW the generate (janino
-        # method-size split, see band_plane_exprs); the generate's CASE
-        # only references them.  NULL ids filtered explicitly (the old
-        # branch predicates dropped them silently).
-        rep_w = Window.partitionBy(vec_col)
-        with_rep = corpus.select(id_col, vec_col).withColumn(
-            "_rep", F.min(id_col).over(rep_w)
-        )
-        projected = with_rep.where(F.col(id_col).isNotNull()).select(
-            F.col(id_col), F.col("_rep"), *plane_cols
-        )
-        band_structs = ", ".join(
-            f"struct({b} AS band, CAST({e} AS BIGINT) AS bucket, {id_col} AS _bid)"
-            for b, e in enumerate(bucket_exprs)
-        )
-        gen = (
-            f"CASE WHEN {id_col} = _rep THEN array({band_structs})"
-            f" ELSE array("
-            f" struct(-1 AS band, {id_col} AS bucket, _rep AS _bid),"
-            f" struct(-1 AS band, {id_col} AS bucket, {id_col} AS _bid))"
-            f" END"
-        )
-        banded = (
-            projected.select(F.explode(F.expr(gen)).alias("e"))
-            .select("e.band", "e.bucket", F.col("e._bid").alias(id_col))
-        )
-    else:
-        projected = corpus.select(F.col(id_col), *plane_cols)
-        banded = projected.select(
-            F.col(id_col),
-            F.posexplode(
-                F.array(*[F.expr(e) for e in bucket_exprs])
-            ).alias("band", "bucket"),
-        )
-    pairs = bucket_pairs(banded, id_col, max_bucket_size).distinct()
     return (
         pairs.join(
             meta.select(
@@ -382,6 +339,45 @@ def embedding_neardup_pairs(
         .where(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
     )
+
+
+def _embedding_candidates(
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+    bands: int,
+    planes_per_band: int,
+    dim: int,
+    max_bucket_size: int,
+    collapse_identical: bool,
+) -> DataFrame:
+    """embedding_neardup_pairs' unverified (id_a, id_b) candidate pairs."""
+    from mcp_clickhouse_spark.pipeline.dedup import bucket_pairs, neardup_candidates
+
+    plane_cols, bucket_exprs = band_plane_exprs(
+        vec_col, bands, planes_per_band, dim
+    )
+    if collapse_identical:
+        # the plane sums stay their own projected columns BELOW the
+        # generator (janino method-size split, see band_plane_exprs); the
+        # band rows only reference them
+        band_rows = "array({})".format(
+            ", ".join(
+                f"struct({b} AS band, CAST({e} AS BIGINT) AS bucket)"
+                for b, e in enumerate(bucket_exprs)
+            )
+        )
+        return neardup_candidates(
+            corpus.select(id_col, vec_col), id_col, vec_col, band_rows,
+            max_bucket_size, cols=plane_cols,
+        )
+    banded = corpus.select(F.col(id_col), *plane_cols).select(
+        F.col(id_col),
+        F.posexplode(F.array(*[F.expr(e) for e in bucket_exprs])).alias(
+            "band", "bucket"
+        ),
+    )
+    return bucket_pairs(banded, id_col, max_bucket_size)
 
 
 def lsh_bucketed_topk(

@@ -99,3 +99,34 @@ def test_connected_components_raises_on_iteration_exhaustion(spark):
     df = spark.createDataFrame(edges, "id_a long, id_b long")
     with _pytest.raises(RuntimeError, match="did not converge"):
         connected_components(df, max_iterations=1)
+
+
+def test_connected_components_one_action_per_round(spark):
+    """r18: lazy localCheckpoints — the convergence signature is the ONLY
+    job a CC round launches (it materializes the round's checkpoint as a
+    side effect).  The eager form cost 2 jobs/round plus 2 upfront
+    materializations: this graph took 8 jobs before, 4 after."""
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11), (20, 20)], ["id_a", "id_b"]
+    )
+    sc = spark.sparkContext
+
+    def jobs() -> int:
+        return int(sc._jsc.sc().dagScheduler().nextJobId())
+
+    # count under AQE-off (the bench regime): AQE adds a scheduler job per
+    # exchange stage, which would drown the action count being pinned
+    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try:
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        got = sorted(map(tuple, dedup_clusters(pairs).collect()))  # warm
+        j0 = jobs()
+        assert sorted(map(tuple, dedup_clusters(pairs).collect())) == got
+        n_jobs = jobs() - j0
+        # initial signature + <=2 round signatures + final collect
+        assert n_jobs <= 4, n_jobs
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
+    # labels correct: {1,2,3} -> 1, {10,11} -> 10, {20} -> 20
+    assert got == [(1, 1, 3, True), (2, 1, 3, False), (3, 1, 3, False),
+                   (10, 10, 2, True), (11, 10, 2, False), (20, 20, 1, True)]

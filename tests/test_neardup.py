@@ -1,24 +1,21 @@
-"""Round-18 optimization round: equivalence pins for the operator internals
-that changed.
+"""Near-duplicate candidate generation (pipeline/dedup.neardup_candidates):
+MinHash-LSH, SimHash and embedding near-dup share one collapse-and-band
+generator — identical keys collapse to their min-id representative, members
+ride synthetic band=-1 buckets, and bucket_pairs emits the pairs.
 
-The headline change is pipe_minhash_lsh's candidate generator: the star/
-banding two-branch union became ONE generator (members ride synthetic
-band=-1 buckets).  Candidate PAIR SETS are the rows-only contract surface,
-so the pin is exact set equality against a faithful reconstruction of the
-pre-r18 shape, on adversarial synthetic corpora AND the real testdata.
+Candidate PAIR SETS are the rows-only contract surface, so each operator is
+pinned by exact set equality against a faithful reconstruction of its older
+two-branch shape (star pairs unioned with rep-only banding), on adversarial
+synthetic corpora AND the real testdata.  The reconstructions are the
+reference implementations.
 """
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
-
-
-@pytest.fixture(scope="module")
-def spark():
-    from mcp_clickhouse_spark.session import get_spark
-
-    return get_spark(app_name="test-r18-opt")
 
 
 def _legacy_candidates(sigs, id_col="doc_id", bands=8, rows_per_band=4,
@@ -115,7 +112,7 @@ def test_minhash_candidates_null_ids_dropped_like_legacy(spark):
     spark.catalog.clearCache()
 
 
-def test_minhash_candidates_match_legacy_on_testdata(spark):
+def test_minhash_candidates_match_legacy_on_testdata(spark, sf_dir):
     """Full-corpus pin at sf0.001 (real near-dup structure from the driver
     generator) and bucket-cap stress via a tiny max_bucket_size."""
     from mcp_clickhouse_spark.pipeline.dedup import (
@@ -125,7 +122,7 @@ def test_minhash_candidates_match_legacy_on_testdata(spark):
     )
     from mcp_clickhouse_spark.session import read_table
 
-    d = read_table(spark, "/root/testdata/sf0.001", "documents")
+    d = read_table(spark, sf_dir, "documents")
     sigs = minhash_signatures(d, num_hashes=32)
     for cap in (500, 2):  # default, and a cap small enough to truncate
         got = _pairs(
@@ -141,7 +138,7 @@ def test_minhash_candidates_match_legacy_on_testdata(spark):
         spark.catalog.clearCache()
 
 
-def test_minhash_lsh_full_query_rows_unchanged(spark):
+def test_minhash_lsh_full_query_rows_unchanged(spark, sf_dir):
     """End-to-end: the declared pipe_minhash_lsh output (id_a, id_b,
     jaccard) through the new candidate generator equals the legacy shape
     fed through the same verify."""
@@ -153,7 +150,7 @@ def test_minhash_lsh_full_query_rows_unchanged(spark):
     )
     from mcp_clickhouse_spark.session import read_table
 
-    d = read_table(spark, "/root/testdata/sf0.001", "documents")
+    d = read_table(spark, sf_dir, "documents")
     sigs = minhash_signatures(d, num_hashes=32)
     new = sorted(
         map(tuple, jaccard_verify(
@@ -169,89 +166,6 @@ def test_minhash_lsh_full_query_rows_unchanged(spark):
     assert new == legacy and len(new) > 0
     release_persisted()
     spark.catalog.clearCache()
-
-
-def test_connected_components_one_action_per_round(spark):
-    """r18: lazy localCheckpoints — the convergence signature is the ONLY
-    job a CC round launches (it materializes the round's checkpoint as a
-    side effect).  The eager form cost 2 jobs/round plus 2 upfront
-    materializations: this graph took 8 jobs before, 4 after."""
-    from mcp_clickhouse_spark.pipeline.clustering import dedup_clusters
-
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11), (20, 20)], ["id_a", "id_b"]
-    )
-    sc = spark.sparkContext
-
-    def jobs() -> int:
-        return int(sc._jsc.sc().dagScheduler().nextJobId())
-
-    # count under AQE-off (the bench regime): AQE adds a scheduler job per
-    # exchange stage, which would drown the action count being pinned
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        got = sorted(map(tuple, dedup_clusters(pairs).collect()))  # warm
-        j0 = jobs()
-        assert sorted(map(tuple, dedup_clusters(pairs).collect())) == got
-        n_jobs = jobs() - j0
-        # initial signature + <=2 round signatures + final collect
-        assert n_jobs <= 4, n_jobs
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-    # labels correct: {1,2,3} -> 1, {10,11} -> 10, {20} -> 20
-    assert got == [(1, 1, 3, True), (2, 1, 3, False), (3, 1, 3, False),
-                   (10, 10, 2, True), (11, 10, 2, False), (20, 20, 1, True)]
-
-
-def test_asof_prefilter_gated_on_selectivity(spark):
-    """r18 asof probe-side prune (guide §3.2): fires only when the left is
-    broadcast-small AND ≫smaller than the right; the bench shape (two
-    comparable filters of the same table) must keep its plan unchanged."""
-    from mcp_clickhouse_spark.operators.asof_join import asof_join
-    from mcp_clickhouse_spark.plans import explain_formatted
-    from mcp_clickhouse_spark.session import read_table
-
-    sf = "/root/testdata/sf0.01"
-    ev = read_table(spark, sf, "events")
-    # bench shape: comparable sides -> NO semi-join in the plan
-    left_big = ev.where(F.col("event_type") != "signup").select(
-        "event_id", "user_id", "ts"
-    )
-    right = ev.where(F.col("event_type") == "signup").select(
-        "user_id", "ts", "value"
-    )
-    plain = asof_join(left_big, right, on=["user_id"], left_ts="ts",
-                      right_ts="ts", right_cols=["value"])
-    assert "LeftSemi" not in explain_formatted(plain)
-
-    # selective probe: a parquet-backed tiny left (real size statistics —
-    # a createDataFrame local frame reads as unknown/Long.Max and correctly
-    # takes the conservative branch) against a 100x bigger right history
-    left_small = read_table(spark, "/root/testdata/sf0.001", "events").where(
-        F.col("event_type") != "signup"
-    ).select("event_id", "user_id", "ts")
-    right_big = read_table(spark, "/root/testdata/sf0.1", "events").where(
-        F.col("event_type") == "signup"
-    ).select("user_id", "ts", "value")
-    pruned = asof_join(left_small, right_big, on=["user_id"], left_ts="ts",
-                       right_ts="ts", right_cols=["value"])
-    assert "LeftSemi" in explain_formatted(pruned)
-    # rows identical to the ungated formulation (prune only removes right
-    # rows that join to nothing): rebuild with the estimator disabled
-    import unittest.mock as mock
-
-    with mock.patch(
-        "mcp_clickhouse_spark.plans.inspect.estimated_size_bytes",
-        return_value=None,
-    ):
-        ref = asof_join(left_small, right_big, on=["user_id"], left_ts="ts",
-                        right_ts="ts", right_cols=["value"])
-        assert "LeftSemi" not in explain_formatted(ref)
-        ref_rows = ref.collect()
-    got = pruned.collect()
-    assert sorted(map(tuple, got)) == sorted(map(tuple, ref_rows))
-    assert len(got) > 0
 
 
 def _legacy_simhash_neardups(hashes, id_col="doc_id", max_hamming=3,
@@ -316,11 +230,11 @@ def _legacy_simhash_neardups(hashes, id_col="doc_id", max_hamming=3,
     return intra.unionByName(cross)
 
 
-def test_simhash_neardups_unified_generator_matches_legacy(spark):
+def test_simhash_neardups_unified_generator_matches_legacy(spark, sf_dir):
     from mcp_clickhouse_spark.pipeline.dedup import simhash_64, simhash_near_dups
     from mcp_clickhouse_spark.session import read_table
 
-    d = read_table(spark, "/root/testdata/sf0.001", "documents")
+    d = read_table(spark, sf_dir, "documents")
     hashes = simhash_64(d)
     for mh, cap in ((3, 500), (6, 500), (3, 2)):
         got = sorted(
@@ -393,11 +307,11 @@ def _legacy_embedding_neardups(corpus, threshold=0.45, id_col="vec_id",
     )
 
 
-def test_embedding_neardups_unified_generator_matches_legacy(spark):
+def test_embedding_neardups_unified_generator_matches_legacy(spark, sf_dir):
     from mcp_clickhouse_spark.pipeline.similarity import embedding_neardup_pairs
     from mcp_clickhouse_spark.session import read_table
 
-    e = read_table(spark, "/root/testdata/sf0.001", "embeddings").select(
+    e = read_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
     # inject exact duplicates so the star/member path is exercised: ids
@@ -414,3 +328,144 @@ def test_embedding_neardups_unified_generator_matches_legacy(spark):
     # the injected duplicates surface as (rep, member) pairs at cosine 1.0
     stars = [(a, b) for a, b, c in got if b >= 900000 and c == 1.0]
     assert len(stars) == 3
+
+
+def _embeddings_with_dups(spark, sf_dir):
+    """The testdata embeddings plus exact copies of the 3 smallest vec_ids
+    (ids 900000+k), so the star/member path is exercised."""
+    from mcp_clickhouse_spark.session import read_table
+
+    e = read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    dup_src = e.orderBy("vec_id").limit(3).collect()
+    dups = spark.createDataFrame(
+        [(900000 + i, r["embedding"]) for i, r in enumerate(dup_src)], e.schema
+    )
+    return e.unionByName(dups)
+
+
+def _new_and_legacy(spark, op, sf_dir, cap):
+    """(new, legacy) sorted output rows of one operator on the testdata."""
+    from mcp_clickhouse_spark.pipeline.dedup import (
+        minhash_lsh_candidates,
+        minhash_signatures,
+        simhash_64,
+        simhash_near_dups,
+    )
+    from mcp_clickhouse_spark.pipeline.similarity import embedding_neardup_pairs
+    from mcp_clickhouse_spark.session import read_table
+
+    if op == "embedding":
+        e = _embeddings_with_dups(spark, sf_dir)
+        new = embedding_neardup_pairs(e, threshold=0.2, max_bucket_size=cap)
+        old = _legacy_embedding_neardups(e, threshold=0.2, max_bucket_size=cap)
+    else:
+        d = read_table(spark, sf_dir, "documents")
+        if op == "minhash":
+            sigs = minhash_signatures(d, num_hashes=32)
+            new = minhash_lsh_candidates(sigs, max_bucket_size=cap)
+            old = _legacy_candidates(sigs, max_bucket_size=cap)
+        else:
+            hashes = simhash_64(d)
+            new = simhash_near_dups(hashes, max_bucket_size=cap)
+            old = _legacy_simhash_neardups(hashes, max_bucket_size=cap)
+    return sorted(map(tuple, new.collect())), sorted(map(tuple, old.collect()))
+
+
+@pytest.mark.parametrize("scale", ["sf0.001", "sf0.01"])
+@pytest.mark.parametrize("op", ["minhash", "simhash", "embedding"])
+def test_neardup_matches_legacy_at_small_caps(spark, sf_dir, op, scale):
+    """Caps 2 (every real bucket truncates, synthetic buckets just fit) and
+    20 on both testdata scales: the shared generator's pair sets equal the
+    legacy two-branch reconstructions."""
+    from mcp_clickhouse_spark.pipeline.dedup import release_persisted
+
+    for cap in (2, 20):
+        got, want = _new_and_legacy(
+            spark, op, os.path.join(os.path.dirname(sf_dir), scale), cap
+        )
+        assert got == want and len(got) > 0, (op, cap)
+        release_persisted()
+        spark.catalog.clearCache()
+
+
+def test_simhash_and_embedding_null_ids_match_legacy(spark):
+    """NULL ids: members of a non-NULL cluster and a NULL-only cluster.
+    Both shapes drop them; no output pair may carry a NULL id."""
+    from mcp_clickhouse_spark.pipeline.dedup import simhash_64, simhash_near_dups
+    from mcp_clickhouse_spark.pipeline.similarity import embedding_neardup_pairs
+
+    rows = CORPUS + [
+        (None, "the quick brown fox jumps over the lazy dog again and again"),
+        (None, "null cluster only text that matches nothing else at all"),
+        (None, "null cluster only text that matches nothing else at all"),
+    ]
+    hashes = simhash_64(spark.createDataFrame(rows, "doc_id bigint, text string"))
+    vecs = spark.createDataFrame(
+        [(10, [1.0, 0.0, 0.0, 0.0]), (11, [1.0, 0.0, 0.0, 0.0]),
+         (None, [1.0, 0.0, 0.0, 0.0]), (20, [0.0, 1.0, 0.0, 0.0]),
+         (21, [0.0, 1.0, 0.1, 0.0]), (None, [0.0, 0.0, 0.0, 1.0]),
+         (None, [0.0, 0.0, 0.0, 1.0])],
+        "vec_id bigint, embedding array<float>",
+    )
+    for cap in (2, 20):
+        got = sorted(map(tuple, simhash_near_dups(
+            hashes, max_hamming=6, max_bucket_size=cap).collect()))
+        want = sorted(map(tuple, _legacy_simhash_neardups(
+            hashes, max_hamming=6, max_bucket_size=cap).collect()))
+        assert got == want and len(got) > 0, cap
+        got = sorted(map(tuple, embedding_neardup_pairs(
+            vecs, threshold=0.5, dim=4, max_bucket_size=cap).collect()))
+        want = sorted(map(tuple, _legacy_embedding_neardups(
+            vecs, threshold=0.5, dim=4, max_bucket_size=cap).collect()))
+        assert got == want and (10, 11, 1.0) in got, cap
+        assert all(None not in p for p in got)
+
+
+def _all_operators(df_docs, df_vecs, **kw):
+    """Build (not run) the three near-dup operators over the given frames."""
+    from mcp_clickhouse_spark.pipeline.dedup import (
+        minhash_lsh_candidates,
+        minhash_signatures,
+        simhash_64,
+        simhash_near_dups,
+    )
+    from mcp_clickhouse_spark.pipeline.similarity import embedding_neardup_pairs
+
+    return {
+        "minhash": lambda: minhash_lsh_candidates(
+            minhash_signatures(df_docs, num_hashes=32), **kw),
+        "simhash": lambda: simhash_near_dups(simhash_64(df_docs), **kw),
+        "embedding": lambda: embedding_neardup_pairs(df_vecs, dim=4, **kw),
+    }
+
+
+@pytest.mark.parametrize("id_type", ["int", "string"])
+def test_non_bigint_ids_rejected(spark, id_type):
+    """The id doubles as the synthetic bucket value, so every operator
+    rejects a non-bigint id up front, naming the column and its type."""
+    docs = spark.createDataFrame(
+        [(1, "a b c d"), (2, "a b c d")], f"doc_id {id_type}, text string"
+    )
+    vecs = spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.0, 0.0]), (2, [1.0, 0.0, 0.0, 0.0])],
+        f"vec_id {id_type}, embedding array<float>",
+    )
+    for build in _all_operators(docs, vecs).values():
+        with pytest.raises(ValueError, match=f"must be bigint, got {id_type}"):
+            build()
+
+
+@pytest.mark.parametrize("cap", [1, 0])
+def test_bucket_cap_below_two_rejected(spark, cap):
+    """A cap below 2 would drop every pair — each synthetic star bucket
+    holds exactly two rows — so all three operators reject it."""
+    docs = spark.createDataFrame(
+        [(1, "a b c d"), (2, "a b c d")], "doc_id bigint, text string"
+    )
+    vecs = spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.0, 0.0]), (2, [1.0, 0.0, 0.0, 0.0])],
+        "vec_id bigint, embedding array<float>",
+    )
+    for build in _all_operators(docs, vecs, max_bucket_size=cap).values():
+        with pytest.raises(ValueError, match="max_bucket_size must be >= 2"):
+            build()

@@ -117,32 +117,51 @@ def test_minhash_signature_plan_single_exchange(spark, sf):
     assert count_nodes(plan, "CartesianProduct") == 0
 
 
-def test_lsh_candidates_plan_no_join_no_cartesian(spark, sf):
-    """The candidate generator is aggregation+generate only: no self-join,
-    no cartesian product, and the window/groupBy share one (band, bucket)
-    exchange (2 total with the spread repartition)."""
+def _lsh_candidates(spark, sf, op):
     from mcp_clickhouse_spark.pipeline.dedup import (
         minhash_lsh_candidates,
         minhash_signatures,
+        simhash_64,
+        simhash_near_dups,
     )
+    from mcp_clickhouse_spark.pipeline.similarity import _embedding_candidates
     from mcp_clickhouse_spark.session import read_table
 
-    cand = minhash_lsh_candidates(
-        minhash_signatures(read_table(spark, sf, "documents"), num_hashes=32)
-    )
-    plan = explain_formatted(cand)
+    if op == "embedding":
+        e = read_table(spark, sf, "embeddings")
+        return _embedding_candidates(e, "vec_id", "embedding", 2, 6, 64, 1000, True)
+    d = read_table(spark, sf, "documents")
+    if op == "simhash":
+        return simhash_near_dups(simhash_64(d))
+    return minhash_lsh_candidates(minhash_signatures(d, num_hashes=32))
+
+
+@pytest.mark.parametrize(
+    "op, max_exchanges",
+    [
+        # spread repartition + key window + (band, bucket) + pairs-distinct
+        # (count_nodes dedups re-rendered cached subplans by node id)
+        ("minhash", 4),
+        # fingerprint aggregation + key window + (band, bucket) + distinct
+        ("simhash", 4),
+        # key window + (band, bucket) + distinct
+        ("embedding", 3),
+    ],
+    ids=["minhash", "simhash", "embedding"],
+)
+def test_lsh_candidates_plan_no_join_no_cartesian(spark, sf, op, max_exchanges):
+    """Candidate generation of every near-dup operator is aggregation +
+    generate only: no self-join, no cartesian product, and the bucket-cap
+    window and collect_list share one (band, bucket) exchange."""
+    plan = explain_formatted(_lsh_candidates(spark, sf, op))
     assert count_nodes(plan, "CartesianProduct") == 0
     assert count_nodes(plan, "SortMergeJoin") == 0
     assert count_nodes(plan, "Join") == 0
-    # round 11 (identical-signature collapse): 4 distinct exchanges —
-    # spread repartition + signature window + (band,bucket) +
-    # pairs-distinct (count_nodes dedups re-rendered cached subplans by
-    # node id)
-    assert count_nodes(plan, "Exchange") <= 4
-    # r18 unified generator: star and band rows come from ONE generate over
-    # ONE window pass — no Union of two with_rep-reading branches.  Window
-    # nodes: signature window + bucket-cap window + its two
-    # WindowGroupLimit halves (count_nodes substring-matches), no more.
+    assert count_nodes(plan, "Exchange") <= max_exchanges
+    # one collapse-and-band generator over ONE key-window pass — no Union
+    # of a star branch with a banding branch.  Window nodes: key window +
+    # bucket-cap window + its two WindowGroupLimit halves (count_nodes
+    # substring-matches), no more.
     assert count_nodes(plan, "Union") == 0
     assert count_nodes(plan, "Window") == 4
 
