@@ -102,12 +102,13 @@ def _reg_catalog(spark: SparkSession) -> None:
         if not name.startswith(("_system_", "_tf_"))
         # our own bound views are not user tables
     ]
-    # Each describe is 4-6 catalog RPCs (getTable / SHOW CREATE / stats
-    # / listColumns); serially that is O(tables) round-trips and a
-    # 300-view session blew the 30 s tool timeout (round 17).  Catalog
-    # reads are thread-safe (the executor layer already runs 10
-    # concurrent queries), so the sweep fans out — same values, same
-    # order (ex.map preserves it), ~8× less wall-clock.
+    # A describe costs ~30 ms for a temp view and ~95 ms for a catalog
+    # table (SHOW CREATE + DESCRIBE EXTENDED) on 4 cores, so a serial
+    # sweep is O(tables) round-trips; a 300-view session once blew the
+    # 30 s tool timeout (round 17).  Catalog reads are thread-safe (the
+    # executor layer already runs 10 concurrent queries), so the sweep
+    # fans out — same values, same order (ex.map preserves it), ~8× less
+    # wall-clock.
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=8) as ex:
@@ -148,6 +149,7 @@ def _reg_functions(spark: SparkSession) -> None:
     aggregate bases and their combinator chains (suffix heuristic over
     the registered chain spellings)."""
     from mcp_clickhouse_spark import dialect as _d
+    from mcp_clickhouse_spark.catalog import list_function_names
 
     agg_bases = set(_d._ORNULL_BASES) | set(_d._IF_ABLE_AGG_BASES) | {
         "count", "sum", "avg", "min", "max", "any", "anylast", "median",
@@ -174,8 +176,8 @@ def _reg_functions(spark: SparkSession) -> None:
     )
     rows = [(n, is_agg(n), 1, "", "dialect") for n in names]
     seen = set(names)
-    for f in spark.catalog.listFunctions():
-        n = f.name.lower()
+    for n in list_function_names(spark):
+        n = n.lower()
         if n not in seen:
             seen.add(n)
             rows.append((n, 0, 1, "", "spark"))

@@ -24,6 +24,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
+from mcp_clickhouse_spark.catalog import quote_ident, show_tables
+
 # ClickHouse format name → (spark format, reader options)
 FORMAT_ALIASES: dict[str, tuple[str, dict[str, str]]] = {
     "csv": ("csv", {"header": "false", "inferSchema": "true"}),
@@ -397,7 +399,7 @@ def bind_sql_table_functions(spark: SparkSession, sql: str) -> str:
         ).hexdigest()[:12]
         # Registering the same deterministic name twice is a no-op
         # behaviorally; skip the reader round-trip when it exists.
-        if not any(v.name == view for v in spark.catalog.listTables() if v.isTemporary):
+        if (view, True) not in show_tables(spark):
             if fname == "numbers":
                 if len(args) == 1:
                     df = spark.range(int(args[0]))
@@ -454,9 +456,7 @@ def bind_sql_table_functions(spark: SparkSession, sql: str) -> str:
                     db, rx = args[0], args[1]
                 pat_t = _re.compile(rx)
                 matches = sorted(
-                    (t.name, t.isTemporary)
-                    for t in spark.catalog.listTables(db)
-                    if pat_t.search(t.name)
+                    t for t in show_tables(spark, db) if pat_t.search(t[0])
                 )
                 if not matches:
                     raise ValueError(
@@ -464,7 +464,7 @@ def bind_sql_table_functions(spark: SparkSession, sql: str) -> str:
                     )
                 df = None
                 for n, is_tmp in matches:
-                    part = spark.table(n if is_tmp else f"{db}.{n}")
+                    part = spark.table(quote_ident(n) if is_tmp else quote_ident(db, n))
                     df = part if df is None else df.unionByName(
                         part, allowMissingColumns=True
                     )
