@@ -7,9 +7,13 @@ to Spark SQL: function renames, argument-order swaps, parametric-aggregate
 syntax (`quantile(0.5)(x)`), CAST type names, and a handful of structural
 templates (multiIf → CASE, JSONExtract* → get_json_object, …).
 
-The rewriter is lexical but structure-aware: it walks the SQL outside
-string literals, parses balanced argument lists, and rewrites innermost
-calls first — no regex false-positives on names inside strings.
+The rewriter is lexical but structure-aware.  Which characters are code,
+and which are quoted text or comments, comes from the one lexer the
+read-only gate and the binders use too (:mod:`mcp_clickhouse_spark.sqltext`).
+``translate()`` strips comments, runs each rewrite pass once over the whole
+statement, and then maps function calls in one bottom-up walk: a call's
+arguments are mapped before the call itself, and names inside quoted spans
+are never touched.
 
 Known semantic deltas (documented, not silently wrong):
   - cityHash64/sipHash64 → xxhash64: a 64-bit hash, but different VALUES
@@ -63,7 +67,17 @@ from __future__ import annotations
 
 import re
 import warnings
-from typing import Callable
+from contextvars import ContextVar
+from typing import Callable, Iterator
+
+from mcp_clickhouse_spark.sqltext import (
+    QUOTE_CHARS,
+    Scan,
+    find_balanced,
+    skip_quoted,
+    split_args,
+    strip_comments,
+)
 
 
 class DialectError(ValueError):
@@ -348,7 +362,7 @@ def ch_type_to_spark(t: str) -> str | None:
         el = ch_type_to_spark(inner)
         return f"ARRAY<{el}>" if el else None
     if name == "map":
-        kv = _split_args(inner)
+        kv = split_args(inner)
         if len(kv) != 2:
             return None
         k, v = ch_type_to_spark(kv[0]), ch_type_to_spark(kv[1])
@@ -1960,7 +1974,7 @@ def _array_reduce_in_ranges(a: list[str]) -> str:
             "arrayReduce over explicit arraySlice calls"
         )
     exprs = []
-    for pair in _split_args(m.group(1)):
+    for pair in split_args(m.group(1)):
         p = pair.strip()
         if p.startswith("(") and p.endswith(")"):
             p = p[1:-1]
@@ -1969,9 +1983,9 @@ def _array_reduce_in_ranges(a: list[str]) -> str:
         ):
             p = p[p.index("(") + 1 : -1]
             if p.lower().startswith("'_1'"):  # named_struct('_1', x, …)
-                parts = _split_args(p)
+                parts = split_args(p)
                 p = f"{parts[1]}, {parts[3]}"
-        two = _split_args(p)
+        two = split_args(p)
         if len(two) != 2:
             raise DialectError(
                 "arrayReduceInRanges: each range must be an "
@@ -2166,7 +2180,10 @@ def _extract_groups(args: list[str]) -> str:
     return f"CASE WHEN {s} RLIKE {pat} THEN array({groups}) ELSE array() END"
 
 
-_WEEK_BIND_SEQ = 0
+# Lambda variables (``__b<n>``, ``__wk<n>``) are numbered per translate()
+# call, so one input always translates to one text.  A context variable
+# gives each call, and each executor thread, its own counter.
+_LAMBDA_SEQ: ContextVar[Iterator[int]] = ContextVar("_LAMBDA_SEQ")
 
 
 def _week_mode_expr(arg: str, mode: int, year_week: bool) -> str:
@@ -2206,9 +2223,7 @@ def _week_mode_expr(arg: str, mode: int, year_week: bool) -> str:
     # OOM'd the JVM on toYearWeek(addDays(…toYearWeek(…)…)) ×3.  The
     # variable name is uniqued per call so nested week expressions
     # don't collide (Spark rejects duplicate lambda names in scope).
-    global _WEEK_BIND_SEQ
-    _WEEK_BIND_SEQ += 1
-    dd = f"__wk{_WEEK_BIND_SEQ}"
+    dd = f"__wk{next(_LAMBDA_SEQ.get())}"
     outer = f"CAST({arg} AS DATE)"
     y = f"year({dd})"
 
@@ -2286,11 +2301,6 @@ def _to_year_week(args: list[str]) -> str:
 _DECIMALISH = re.compile(r"(?i)\d\s*\.\s*\d|\d[eE][+-]?\d|\btofloat|\btodecimal")
 
 
-def _without_string_literals(text: str) -> str:
-    """Drop single-quoted spans so literal content never triggers sniffs."""
-    return re.sub(r"'(?:[^'\\]|\\.)*'", "''", text)
-
-
 _INT_LITERAL = re.compile(r"^[+-]?\d+L?$", re.IGNORECASE)
 _NUM_LITERAL = re.compile(
     r"^[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?[LDdFf]?$"
@@ -2318,7 +2328,7 @@ def _literal_array_kind(arg: str) -> str:
     else:
         return "unknown"
     try:
-        elems = [e.strip() for e in _split_args(inner)]
+        elems = [e.strip() for e in split_args(inner)]
     except Exception:  # pragma: no cover - unbalanced text
         return "unknown"
     if not elems or not all(
@@ -2364,7 +2374,7 @@ def _fold_zero(arr: str, probe: str) -> str:
     #    DOUBLE/FLOAT for float columns.  True DECIMAL *columns* (absent
     #    from the testdata) fail loudly at analysis — select a cast or
     #    use a float expression.
-    if _DECIMALISH.search(_without_string_literals(arr)):
+    if _DECIMALISH.search(Scan(arr).code_text):
         return "CAST(0 AS DOUBLE)"
     return f"(ifnull(try_element_at({probe}, 1), 0L) * 0L)"
 
@@ -2933,12 +2943,12 @@ def _map_apply_expr(a: list[str]) -> str:
     params, body = sp
     body = body.strip()
     pair: list[str] | None = None
-    if body.startswith("(") and _find_balanced(body, 0) == len(body):
-        pair = _split_args(body[1:-1])
+    if body.startswith("(") and find_balanced(body, 0) == len(body):
+        pair = split_args(body[1:-1])
     else:
         nm = re.match(r"(?is)^named_struct\s*\(", body)
-        if nm and _find_balanced(body, nm.end() - 1) == len(body):
-            items = _split_args(body[nm.end() : -1])
+        if nm and find_balanced(body, nm.end() - 1) == len(body):
+            items = split_args(body[nm.end() : -1])
             if len(items) == 4:
                 pair = [items[1], items[3]]
     if pair is None or len(pair) != 2:
@@ -7574,8 +7584,8 @@ def _point_xy(expr: str) -> tuple[str, str]:
     struct-typed expression with ``_1``/``_2`` fields (the tuple()
     mapping's naming) — into x/y SQL strings."""
     e = expr.strip()
-    if e.startswith("(") and e.endswith(")") and _find_balanced(e, 0) == len(e):
-        parts = _split_args(e[1:-1])
+    if e.startswith("(") and e.endswith(")") and find_balanced(e, 0) == len(e):
+        parts = split_args(e[1:-1])
         if len(parts) == 2:
             return parts[0].strip(), parts[1].strip()
     return f"({e})._1", f"({e})._2"
@@ -7588,16 +7598,16 @@ def _xy_points(expr: str) -> str:
     tuple() mapping emits.  Non-literal expressions pass through: their
     struct fields must already be ``_1``/``_2``."""
     e = expr.strip()
-    if e.startswith("array(") and _find_balanced(e, 5) == len(e):
+    if e.startswith("array(") and find_balanced(e, 5) == len(e):
         out = []
-        for el in _split_args(e[6:-1]):
+        for el in split_args(e[6:-1]):
             s = el.strip()
             if (
                 s.startswith("(")
                 and s.endswith(")")
-                and _find_balanced(s, 0) == len(s)
+                and find_balanced(s, 0) == len(s)
             ):
-                xy = _split_args(s[1:-1])
+                xy = split_args(s[1:-1])
                 if len(xy) == 2:
                     out.append(
                         f"named_struct('_1', {xy[0].strip()},"
@@ -7613,8 +7623,8 @@ def _rings_points(expr: str) -> str:
     """Normalize an array-of-rings literal, each ring an array of point
     tuples (CH polygon spelling ``[[(x, y), …], …]``)."""
     e = expr.strip()
-    if e.startswith("array(") and _find_balanced(e, 5) == len(e):
-        rings = _split_args(e[6:-1])
+    if e.startswith("array(") and find_balanced(e, 5) == len(e):
+        rings = split_args(e[6:-1])
         return "array(" + ", ".join(_xy_points(r) for r in rings) + ")"
     return e
 
@@ -7755,8 +7765,8 @@ def _add_tuple_of_intervals_expr(a: list[str], op: str = "+") -> str:
     if len(a) != 2:
         raise DialectError(f"{name} takes (date, (interval, …))")
     t = a[1].strip()
-    if t.startswith("(") and t.endswith(")") and _find_balanced(t, 0) == len(t):
-        parts = _split_args(t[1:-1])
+    if t.startswith("(") and t.endswith(")") and find_balanced(t, 0) == len(t):
+        parts = split_args(t[1:-1])
         if parts:
             return (
                 "(" + f" {op} ".join([f"({a[0]})"] + parts) + ")"
@@ -9572,8 +9582,8 @@ def _trailing_operand_start(s: str) -> int:
     n = len(s)
     while i < n:
         ch = s[i]
-        if ch in _QUOTE_CHARS:
-            j = _skip_quoted(s, i)
+        if ch in QUOTE_CHARS:
+            j = skip_quoted(s, i)
             # a bare string literal can be an operand (CH: 'k' keys)
             start = i if start > i else start
             i = j
@@ -9590,8 +9600,8 @@ def _trailing_operand_start(s: str) -> int:
             i += 1
             while i < n and depth:
                 c2 = s[i]
-                if c2 in _QUOTE_CHARS:
-                    i = _skip_quoted(s, i)
+                if c2 in QUOTE_CHARS:
+                    i = skip_quoted(s, i)
                     continue
                 if c2 in "([":
                     depth += 1
@@ -9626,8 +9636,8 @@ def _rewrite_brackets(sql: str) -> str:
     i, n = 0, len(sql)
     while i < n:
         ch = sql[i]
-        if ch in _QUOTE_CHARS:
-            j = _skip_quoted(sql, i)
+        if ch in QUOTE_CHARS:
+            j = skip_quoted(sql, i)
             out.append(sql[i:j])
             i = j
             continue
@@ -9636,8 +9646,8 @@ def _rewrite_brackets(sql: str) -> str:
             depth, j = 0, i
             while j < n:
                 c2 = sql[j]
-                if c2 in _QUOTE_CHARS:
-                    j = _skip_quoted(sql, j)
+                if c2 in QUOTE_CHARS:
+                    j = skip_quoted(sql, j)
                     continue
                 if c2 == "[":
                     depth += 1
@@ -9679,130 +9689,6 @@ def _rewrite_brackets(sql: str) -> str:
     return "".join(out)
 
 
-_QUOTE_CHARS = ("'", '"', "`")
-
-
-def _skip_quoted(s: str, i: int) -> int:
-    """``s[i]`` is a quote char (``'``, ``"``, or a backtick) — return the
-    index just past the span's closing quote.
-
-    The scanners below must treat quoted spans as opaque; this helper owns
-    the escape rules they all share (round-6 verdict #3 + advisor #5):
-    backslash escapes (``\\'``, ``\\\\``) inside single/double quotes
-    (ClickHouse allows both), and doubled-quote escapes (``''``, ``""``,
-    doubled backticks — the Spark-side identifier escape) in all three.
-    An unterminated span runs to end-of-string, so the callers' balance
-    checks still fail loudly instead of mis-pairing.
-    """
-    q = s[i]
-    n = len(s)
-    j = i + 1
-    while j < n:
-        ch = s[j]
-        if ch == "\\" and q != "`":
-            j += 2
-            continue
-        if ch == q:
-            if j + 1 < n and s[j + 1] == q:
-                j += 2
-                continue
-            return j + 1
-        j += 1
-    return n
-
-
-def _strip_comments(sql: str) -> str:
-    """Strip SQL comments before any text rewriting (round 16, advisor
-    #1: ``_rewrite_division`` treated the ``/`` of a closing ``*/`` as a
-    division operator, corrupting any query with a block comment, and
-    ``_rewrite_in_operator`` could fire on ``IN (`` inside a comment).
-    Stripping once here makes every downstream scanner comment-safe.
-
-    ClickHouse comment forms (docs §syntax#comments): C-style
-    ``/* … */`` and line comments ``--``, ``#!``, ``#␣`` (hash must be
-    followed by ``!`` or whitespace — a bare ``#token`` is left alone).
-    Quoted spans are opaque; each comment is replaced by one space so
-    token boundaries survive (``a/*c*/b`` → ``a b``).  An unterminated
-    ``/*`` runs to end-of-string, matching the lexer contract."""
-    out: list[str] = []
-    i = 0
-    n = len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch in _QUOTE_CHARS:
-            j = _skip_quoted(sql, i)
-            out.append(sql[i:j])
-            i = j
-            continue
-        if ch == "/" and sql[i + 1 : i + 2] == "*":
-            j = sql.find("*/", i + 2)
-            out.append(" ")
-            i = n if j == -1 else j + 2
-            continue
-        if (ch == "-" and sql[i + 1 : i + 2] == "-") or (
-            ch == "#"
-            and i + 1 < n
-            and (sql[i + 1] == "!" or sql[i + 1].isspace())
-        ):
-            j = sql.find("\n", i)
-            out.append(" ")
-            i = n if j == -1 else j  # keep the newline itself
-            continue
-        out.append(ch)
-        i += 1
-    return "".join(out)
-
-
-def _find_balanced(sql: str, start: int) -> int:
-    """sql[start] == '(' → index just past its matching ')'. String-aware."""
-    depth = 0
-    i = start
-    while i < len(sql):
-        ch = sql[i]
-        if ch in _QUOTE_CHARS:
-            i = _skip_quoted(sql, i)
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return i + 1
-        i += 1
-    raise ValueError("unbalanced parentheses in SQL")
-
-
-def _split_args(argstr: str) -> list[str]:
-    """Split a top-level argument list on commas (string/paren aware)."""
-    args: list[str] = []
-    depth = 0
-    cur: list[str] = []
-    i, n = 0, len(argstr)
-    while i < n:
-        ch = argstr[i]
-        if ch in _QUOTE_CHARS:
-            j = _skip_quoted(argstr, i)
-            cur.append(argstr[i:j])
-            i = j
-            continue
-        if ch in "([":
-            depth += 1
-            cur.append(ch)
-        elif ch in ")]":
-            depth -= 1
-            cur.append(ch)
-        elif ch == "," and depth == 0:
-            args.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-        i += 1
-    tail = "".join(cur).strip()
-    if tail:
-        args.append(tail)
-    return args
-
-
 def extract_settings(sql: str) -> tuple[str, dict[str, str]]:
     """Detach a trailing ClickHouse ``SETTINGS k=v, …`` clause and return
     ``(sql_without_settings, {key: value})`` — the tool layer translates the
@@ -9812,24 +9698,12 @@ def extract_settings(sql: str) -> tuple[str, dict[str, str]]:
 
     Keys are lowercased; quoted values are unquoted.  A trailing ``FORMAT X``
     (which follows SETTINGS in ClickHouse grammar) is preserved on the
-    returned SQL for the translator's own handling.  Matches inside string
-    literals are ignored (SQL quotes escape by doubling)."""
-
-    def in_literal(pos: int) -> bool:
-        in_q = False
-        i = 0
-        while i < pos:
-            if sql[i] == "'":
-                if in_q and i + 1 < len(sql) and sql[i + 1] == "'":
-                    i += 2  # doubled quote inside a literal
-                    continue
-                in_q = not in_q
-            i += 1
-        return in_q
-
+    returned SQL for the translator's own handling.  Matches inside quoted
+    spans or comments are ignored."""
+    sc = Scan(sql)  # cutting a suffix keeps every earlier position's answer
     fmt = ""
     m_fmt = re.search(r"(?is)\bFORMAT\s+[A-Za-z0-9_]+\s*;?\s*$", sql)
-    if m_fmt and not in_literal(m_fmt.start()):
+    if m_fmt and sc.code(m_fmt.start()):
         fmt = sql[m_fmt.start() :]
         sql = sql[: m_fmt.start()]
     # value atom: quoted string (with '' doubling) or an unquoted run
@@ -9839,10 +9713,10 @@ def extract_settings(sql: str) -> tuple[str, dict[str, str]]:
         rf"(?:\s*,\s*[A-Za-z0-9_]+\s*=\s*{_val})*)\s*;?\s*$",
         sql,
     )
-    if not m or in_literal(m.start()):
+    if not m or not sc.code(m.start()):
         return sql + fmt, {}
     settings: dict[str, str] = {}
-    for part in _split_args(m.group(1)):  # string-aware comma split
+    for part in split_args(m.group(1)):  # string-aware comma split
         k, _, v = part.partition("=")
         v = v.strip().rstrip(";").strip()
         if len(v) >= 2 and v[0] == v[-1] and v[0] in "'\"":
@@ -9861,7 +9735,7 @@ def _strip_suffix_clauses(sql: str) -> str:
     # INTO OUTFILE is a CLIENT-side file write — a read-only query tool
     # has nowhere to put it (round 8: previously a raw Spark parse error)
     m_of = re.search(r"(?is)\bINTO\s+OUTFILE\b", sql)
-    if m_of and _outside_strings(sql, m_of.start()):
+    if m_of and Scan(sql).code(m_of.start()):
         raise DialectError(
             "INTO OUTFILE is a client-side export — drop it; the tool "
             "returns rows (write with DataFrame.write on the Spark side)"
@@ -9872,24 +9746,6 @@ def _strip_suffix_clauses(sql: str) -> str:
         sql,
     )
     return sql
-
-
-def _depth0_spans(sql: str):
-    """Yield (index, char) for characters at paren-depth 0 outside strings."""
-    depth = 0
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch in _QUOTE_CHARS:
-            i = _skip_quoted(sql, i)
-            continue
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif depth == 0:
-            yield i, ch
-        i += 1
 
 
 def _is_select_star(sql: str, star_idx: int) -> bool:
@@ -9974,8 +9830,8 @@ def _resolve_star_schema(sql: str, star_idx: int) -> list[str]:
     from_at = None
     while i < n:
         ch = sql[i]
-        if ch in _QUOTE_CHARS:
-            i = _skip_quoted(sql, i)
+        if ch in QUOTE_CHARS:
+            i = skip_quoted(sql, i)
             continue
         if ch in "([":
             depth += 1
@@ -9997,8 +9853,8 @@ def _resolve_star_schema(sql: str, star_idx: int) -> list[str]:
     depth = 0
     while i < n:
         ch = sql[i]
-        if ch in _QUOTE_CHARS:
-            i = _skip_quoted(sql, i)
+        if ch in QUOTE_CHARS:
+            i = skip_quoted(sql, i)
             continue
         if ch in "([":
             depth += 1
@@ -10088,8 +9944,9 @@ def _rewrite_star_modifiers(sql: str) -> str:
     :func:`_is_select_star`) rewrites."""
     while True:
         target = None
+        sc = Scan(sql)
         for cand in re.finditer(r"(?i)\bAPPLY\s*\(", sql):
-            if not _outside_strings(sql, cand.start()):
+            if not sc.code(cand.start()):
                 continue
             back = sql[: cand.start()]
             sm = re.search(
@@ -10108,7 +9965,7 @@ def _rewrite_star_modifiers(sql: str) -> str:
                 "the expression explicitly"
             )
         ap_open = sql.index("(", cand.start())
-        ap_end = _find_balanced(sql, ap_open)
+        ap_end = find_balanced(sql, ap_open)
         fns = [sql[ap_open + 1 : ap_end - 1].strip()]
         # chained `* APPLY(a) APPLY(b)` composes b(a(col)) — CH supports
         # the chain; the leftover APPLY previously reached Spark's parser
@@ -10118,7 +9975,7 @@ def _rewrite_star_modifiers(sql: str) -> str:
             if not nm:
                 break
             ap_open = ap_end + nm.end() - 1
-            ap_end = _find_balanced(sql, ap_open)
+            ap_end = find_balanced(sql, ap_open)
             fns.append(sql[ap_open + 1 : ap_end - 1].strip())
         if not all(re.match(r"^[A-Za-z_]\w*$", f) for f in fns):
             raise DialectError(
@@ -10128,7 +9985,7 @@ def _rewrite_star_modifiers(sql: str) -> str:
         star_idx = sm.start(1)
         cols = _resolve_star_schema(sql, star_idx)
         for em in re.finditer(r"(?is)\bEXCEPT\s*\(([^()]*)\)", sm.group(2) or ""):
-            drop = {c.strip().strip("`").lower() for c in _split_args(em.group(1))}
+            drop = {c.strip().strip("`").lower() for c in split_args(em.group(1))}
             cols = [c for c in cols if c.lower() not in drop]
         if not cols:
             raise DialectError("* APPLY: the EXCEPT list removed every column")
@@ -10148,15 +10005,16 @@ def _rewrite_star_modifiers(sql: str) -> str:
         sql = sql[:start] + repl + sql[ap_end:]
     while True:
         target = None
+        sc = Scan(sql)
         for cand in re.finditer(r"(?i)\bREPLACE\s*\(", sql):
-            if not _outside_strings(sql, cand.start()):
+            if not sc.code(cand.start()):
                 continue
             back = sql[: cand.start()].rstrip()
             if back.endswith("*") and _is_select_star(sql, len(back) - 1):
                 target = (cand, len(back) - 1, None)
                 break
             if back.endswith(")"):
-                open_i = _paren_partners(sql).get(len(back) - 1)
+                open_i = sc.partner(len(back) - 1)
                 if open_i is not None:
                     pre = sql[:open_i].rstrip()
                     pm = re.search(r"(?is)\*\s*EXCEPT\s*$", pre)
@@ -10167,9 +10025,9 @@ def _rewrite_star_modifiers(sql: str) -> str:
             return sql
         cand, star_idx, except_span = target
         rp_open = sql.index("(", cand.start())
-        rp_end = _find_balanced(sql, rp_open)
+        rp_end = find_balanced(sql, rp_open)
         items = []
-        for it in _split_args(sql[rp_open + 1 : rp_end - 1]):
+        for it in split_args(sql[rp_open + 1 : rp_end - 1]):
             am = re.match(r"(?is)^(.+?)\s+AS\s+([A-Za-z_]\w*)$", it.strip())
             if not am:
                 raise DialectError(
@@ -10177,7 +10035,7 @@ def _rewrite_star_modifiers(sql: str) -> str:
                 )
             items.append((am.group(1).strip(), am.group(2)))
         except_cols = (
-            [c.strip() for c in _split_args(sql[except_span[0] : except_span[1]])]
+            [c.strip() for c in split_args(sql[except_span[0] : except_span[1]])]
             if except_span
             else []
         )
@@ -10231,25 +10089,19 @@ def _recurse_subqueries(sql: str, fn, trigger: str) -> str:
     deleting columns named ``final`` inside function calls).  ``fn`` is
     called on the span's inner text; nesting is handled by ``fn`` calling
     this again on its own input."""
+    sc = Scan(sql)
     parts: list[str] = []
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch in _QUOTE_CHARS:
-            j = _skip_quoted(sql, i)
-            parts.append(sql[i:j])
-            i = j
-            continue
-        if ch == "(":
-            end = _find_balanced(sql, i)
-            inner = sql[i + 1 : end - 1]
-            if re.search(r"(?is)\bSELECT\b", inner) and re.search(trigger, inner):
-                inner = fn(inner)
-            parts.append("(" + inner + ")")
-            i = end
-            continue
-        parts.append(ch)
-        i += 1
+    last = 0
+    for m in re.finditer(r"\(", sc.code_text):
+        if m.start() < last:
+            continue  # inside a span already handed to ``fn``
+        end = sc.end_of(m.start())
+        inner = sql[m.start() + 1 : end - 1]
+        if re.search(r"(?is)\bSELECT\b", inner) and re.search(trigger, inner):
+            inner = fn(inner)
+        parts.append(sql[last : m.start()] + "(" + inner + ")")
+        last = end
+    parts.append(sql[last:])
     return "".join(parts)
 
 
@@ -10260,12 +10112,12 @@ def _rewrite_limit_by(sql: str) -> str:
     sql = _recurse_subqueries(
         sql, _rewrite_limit_by, r"(?is)\bLIMIT\s+\d+\s*(,\s*\d+\s*)?\s+BY\b"
     )
-    d0 = {i for i, _ in _depth0_spans(sql)}
+    sc = Scan(sql)
     # `LIMIT n BY` and the offset form `LIMIT off, n BY` (round 7 — the
     # offset form previously fell through to the plain LIMIT-offset
     # rewrite, emitting invalid `LIMIT n OFFSET off BY`)
     m_iter = list(re.finditer(r"(?is)\bLIMIT\s+(\d+)\s*(?:,\s*(\d+))?\s+BY\s+", sql))
-    m = next((mm for mm in m_iter if mm.start() in d0), None)
+    m = next((mm for mm in m_iter if sc.top(mm.start())), None)
     if not m:
         return sql
     if m.group(2) is not None:
@@ -10282,7 +10134,7 @@ def _rewrite_limit_by(sql: str) -> str:
     # order inside each group AND the final presentation order)
     mo = None
     for mm in re.finditer(r"(?is)\bORDER\s+BY\s+", head):
-        if mm.start() in d0:
+        if sc.top(mm.start()):
             mo = mm
     if mo:
         order_clause = head[mo.start() :].strip()
@@ -10320,31 +10172,31 @@ def _rewrite_distinct_on(sql: str) -> str:
     sql = _recurse_subqueries(
         sql, _rewrite_distinct_on, r"(?is)\bDISTINCT\s+ON\s*\("
     )
-    d0 = {i for i, _ in _depth0_spans(sql)}
+    sc = Scan(sql)
     m = next(
         (
             mm
             for mm in re.finditer(r"(?is)\bSELECT\s+DISTINCT\s+ON\s*\(", sql)
-            if mm.start() in d0
+            if sc.top(mm.start())
         ),
         None,
     )
     if not m:
         return sql
-    close = _find_balanced(sql, m.end() - 1)
+    close = find_balanced(sql, m.end() - 1)
     cols = sql[m.end() : close - 1].strip()
     if not cols:
         raise DialectError("DISTINCT ON needs at least one expression")
     plain = sql[: m.start()] + "SELECT " + sql[close:].lstrip()
-    d0p = {i for i, _ in _depth0_spans(plain)}
+    scp = Scan(plain)
     mo = None
     for mm in re.finditer(r"(?is)\bORDER\s+BY\s+", plain):
-        if mm.start() in d0p:
+        if scp.top(mm.start()):
             mo = mm
     tail_start = len(plain)
     tail = ""
     for mm in re.finditer(r"(?is)\bLIMIT\b", plain):
-        if mm.start() in d0p and (mo is None or mm.start() > mo.start()):
+        if scp.top(mm.start()) and (mo is None or mm.start() > mo.start()):
             tail_start = mm.start()
             tail = plain[mm.start() :].strip()
             break
@@ -10377,17 +10229,17 @@ def _rewrite_with_totals(sql: str) -> str:
     columns (standard SQL grouping-sets marker) where ClickHouse renders
     type defaults (0 / ''). `WITH ROLLUP` / `WITH CUBE` pass through — Spark
     accepts both natively."""
-    d0 = {i for i, _ in _depth0_spans(sql)}
+    sc = Scan(sql)
     m_tot = None
     for mm in re.finditer(r"(?is)\bWITH\s+TOTALS\b", sql):
-        if mm.start() in d0:
+        if sc.top(mm.start()):
             m_tot = mm
             break
     if not m_tot:
         return sql
     m_grp = None
     for mm in re.finditer(r"(?is)\bGROUP\s+BY\s+", sql[: m_tot.start()]):
-        if mm.start() in d0:
+        if sc.top(mm.start()):
             m_grp = mm  # last depth-0 GROUP BY before WITH TOTALS
     if not m_grp:
         raise DialectError("WITH TOTALS without a matching GROUP BY")
@@ -10460,8 +10312,8 @@ def _interp_fold_expr(
     i, n = 0, len(expr)
     while i < n:
         ch = expr[i]
-        if ch in _QUOTE_CHARS:
-            j = _skip_quoted(expr, i)
+        if ch in QUOTE_CHARS:
+            j = skip_quoted(expr, i)
             out.append(expr[i:j])
             i = j
             continue
@@ -10501,17 +10353,17 @@ def _interp_fold_expr(
 
 
 def _rewrite_with_fill_impl(sql: str) -> str:
-    d0 = {i for i, _ in _depth0_spans(sql)}
+    sc = Scan(sql)
     m = None
     for mm in re.finditer(r"(?is)\bWITH\s+FILL\b", sql):
-        if mm.start() in d0:
+        if sc.top(mm.start()):
             m = mm
             break
     if not m:
         return sql
     m_ord = None
     for mm in re.finditer(r"(?is)\bORDER\s+BY\s+", sql[: m.start()]):
-        if mm.start() in d0:
+        if sc.top(mm.start()):
             m_ord = mm
     if not m_ord:
         raise DialectError("WITH FILL without a matching ORDER BY")
@@ -10534,8 +10386,8 @@ def _rewrite_with_fill_impl(sql: str) -> str:
             raise DialectError(
                 "WITH FILL INTERPOLATE requires a parenthesized column list"
             )
-        end = _find_balanced(tail, j)
-        items = [c.strip() for c in _split_args(tail[j + 1 : end - 1])]
+        end = find_balanced(tail, j)
+        items = [c.strip() for c in split_args(tail[j + 1 : end - 1])]
         raw_items: list[tuple[str, str | None]] = []
         for c in items:
             am = re.match(r"(?is)^([A-Za-z_]\w*)\s+AS\s+(.+)$", c)
@@ -10648,24 +10500,6 @@ def _rewrite_with_fill_impl(sql: str) -> str:
     return out
 
 
-def _paren_partners(sql: str) -> dict[int, int]:
-    """Map each ')' index to its matching '(' index (string-literal aware)."""
-    stack: list[int] = []
-    partner: dict[int, int] = {}
-    idx, n = 0, len(sql)
-    while idx < n:
-        ch = sql[idx]
-        if ch in _QUOTE_CHARS:
-            idx = _skip_quoted(sql, idx)
-            continue
-        if ch == "(":
-            stack.append(idx)
-        elif ch == ")" and stack:
-            partner[idx] = stack.pop()
-        idx += 1
-    return partner
-
-
 _DOTTED_IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_.]*")
 _JOIN_STOP_WORDS = {
     "on", "using", "where", "group", "having", "order", "limit", "window",
@@ -10702,7 +10536,7 @@ def _parse_table_unit(sql: str, i: int) -> tuple[str, str | None, int] | None:
     while i < n and sql[i].isspace():
         i += 1
     if i < n and sql[i] == "(":
-        end = _find_balanced(sql, i)
+        end = find_balanced(sql, i)
         text, base = sql[i:end], None
         i = end
     else:
@@ -10741,8 +10575,8 @@ def _read_on_condition(sql: str, i: int) -> tuple[str, int]:
     j = i
     while j < n:
         ch = sql[j]
-        if ch in _QUOTE_CHARS:
-            j = _skip_quoted(sql, j)
+        if ch in QUOTE_CHARS:
+            j = skip_quoted(sql, j)
             continue
         if ch == "(":
             depth += 1
@@ -10772,8 +10606,8 @@ def _split_conjuncts(cond: str) -> list[str]:
     n = len(cond)
     while i < n:
         ch = cond[i]
-        if ch in _QUOTE_CHARS:
-            i = _skip_quoted(cond, i)
+        if ch in QUOTE_CHARS:
+            i = skip_quoted(cond, i)
             continue
         if ch == "(":
             depth += 1
@@ -10797,7 +10631,7 @@ def _split_conjuncts(cond: str) -> list[str]:
         p = p.strip()
         while p.startswith("(") and p.endswith(")"):
             try:
-                if _find_balanced(p, 0) != len(p):
+                if find_balanced(p, 0) != len(p):
                     break
             except ValueError:
                 break
@@ -10825,48 +10659,17 @@ def _resolve_alias_source(sql_before: str, alias: str) -> str | None:
         unit = m.group(1)
     if unit:
         return unit
-    partners = _paren_partners(sql_before)
+    sc = Scan(sql_before)
     for m in re.finditer(r"\)\s*(?:AS\s+)?" + esc + r"\b", sql_before, re.IGNORECASE):
         close = m.start()
-        if close in partners:
-            unit = sql_before[partners[close] : close + 1]
+        open_ = sc.partner(close)
+        if open_ is not None:
+            unit = sql_before[open_ : close + 1]
     if unit:
         return unit
     if re.search(r"(?is)\b(?:FROM|JOIN)\s+" + esc + r"\b", sql_before):
         return alias  # the alias IS the table name
     return None
-
-
-def _outside_strings(sql: str, pos: int) -> bool:
-    """True iff ``pos`` is not inside a quoted span.  Replaces the old
-    ``count("'") % 2`` parity trick, which miscounted doubled-quote
-    escapes (``'it''s'``) and backslash escapes (round-6 verdict #3)."""
-    i = 0
-    while i < pos:
-        if sql[i] in _QUOTE_CHARS:
-            i = _skip_quoted(sql, i)
-            if i > pos:
-                return False
-            continue
-        i += 1
-    return True
-
-
-def _depth_at(sql: str, pos: int) -> int:
-    """Paren depth of ``pos`` (string-aware forward scan)."""
-    depth = 0
-    i = 0
-    while i < pos:
-        ch = sql[i]
-        if ch in _QUOTE_CHARS:
-            i = _skip_quoted(sql, i)
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        i += 1
-    return depth
 
 
 def _hide_helpers_from_stars(sql: str, pos: int, ralias: str, helpers: list[str]) -> str:
@@ -10878,19 +10681,20 @@ def _hide_helpers_from_stars(sql: str, pos: int, ralias: str, helpers: list[str]
     depth; its ``*`` and ``{ralias}.*`` items (including ones that already
     carry an EXCEPT list) get the qualified helper names merged in.  A
     select list with no star needs no hiding."""
-    tgt_depth = _depth_at(sql, pos)
+    sc = Scan(sql)
+    tgt_depth = sc.depth(pos)
     sel = None
     for m in re.finditer(r"(?i)\bSELECT\b", sql):
         if m.start() >= pos:
             break
-        if _depth_at(sql, m.start()) == tgt_depth:
+        if sc.depth(m.start()) == tgt_depth:
             sel = m
     if sel is None:
         return sql
     # select list runs to the owning FROM at the same depth
     from_m = None
     for m in re.finditer(r"(?i)\bFROM\b", sql):
-        if m.start() > sel.end() and _depth_at(sql, m.start()) == tgt_depth:
+        if m.start() > sel.end() and sc.depth(m.start()) == tgt_depth:
             from_m = m
             break
     if from_m is None or from_m.start() > pos:
@@ -10898,7 +10702,7 @@ def _hide_helpers_from_stars(sql: str, pos: int, ralias: str, helpers: list[str]
     region = sql[sel.end() : from_m.start()]
     dm = re.match(r"(?is)\s*(DISTINCT\b|ALL\b)?", region)
     prefix = region[: dm.end()]
-    items = _split_args(region[dm.end() :])
+    items = split_args(region[dm.end() :])
     qual = [f"{ralias}.{h}" for h in helpers]
     star_pat = re.compile(
         rf"(?is)^(\*|{re.escape(ralias)}\s*\.\s*\*)\s*(?:EXCEPT\s*\((.*)\))?\s*$"
@@ -10908,7 +10712,7 @@ def _hide_helpers_from_stars(sql: str, pos: int, ralias: str, helpers: list[str]
         sm = star_pat.match(item)
         if not sm:
             continue
-        existing = _split_args(sm.group(2)) if sm.group(2) else []
+        existing = split_args(sm.group(2)) if sm.group(2) else []
         items[k] = f"{sm.group(1)} EXCEPT ({', '.join(existing + qual)})"
         changed = True
     if not changed:
@@ -10945,8 +10749,8 @@ def _rewrite_asof_using(
         j += 1
     if j >= n or sql[j] != "(":
         raise guided("USING requires a parenthesized column list")
-    end = _find_balanced(sql, j)
-    cols = [c.strip() for c in _split_args(sql[j + 1 : end - 1])]
+    end = find_balanced(sql, j)
+    cols = [c.strip() for c in split_args(sql[j + 1 : end - 1])]
     if len(cols) < 2 or not all(re.fullmatch(r"[A-Za-z_]\w*", c) for c in cols):
         raise guided("USING needs bare column names: keys then the timestamp")
     keys, ts = cols[:-1], cols[-1]
@@ -11025,8 +10829,9 @@ def _rewrite_asof_joins(sql: str) -> str:
     pat = re.compile(r"(?i)\bASOF\s+((?:LEFT|INNER)\s+)?JOIN\b")
     while True:
         m = None
+        sc = Scan(sql)
         for cand in pat.finditer(sql):
-            if _outside_strings(sql, cand.start()):
+            if sc.code(cand.start()):
                 m = cand
                 break
         if m is None:
@@ -11161,8 +10966,9 @@ def _rewrite_any_joins(sql: str) -> str:
     )
     while True:
         m = None
+        sc = Scan(sql)
         for cand in pat.finditer(sql):
-            if _outside_strings(sql, cand.start()):
+            if sc.code(cand.start()):
                 m = cand
                 break
         if m is None:
@@ -11192,8 +10998,8 @@ def _rewrite_any_joins(sql: str) -> str:
                 j += 1
             if j >= len(sql) or sql[j] != "(":
                 raise guided("USING requires a parenthesized column list")
-            end = _find_balanced(sql, j)
-            keys = [c.strip() for c in _split_args(sql[j + 1 : end - 1])]
+            end = find_balanced(sql, j)
+            keys = [c.strip() for c in split_args(sql[j + 1 : end - 1])]
             lkeys = list(keys)
             tail = f" USING {sql[j:end]}"
             cond_end = end
@@ -11232,7 +11038,7 @@ def _rewrite_any_joins(sql: str) -> str:
             fm, lunit = None, None
             cands = [
                 fc for fc in re.finditer(r"(?i)\bFROM\s+", sql[: m.start()])
-                if _outside_strings(sql, fc.start())
+                if sc.code(fc.start())
             ]
             for fcand in reversed(cands):
                 cand_unit = _parse_table_unit(sql, fcand.end())
@@ -11301,8 +11107,9 @@ def _rewrite_ternary(sql: str) -> str:
     nested ternaries resolve by iterating (right-associative)."""
     while True:
         qpos = None
+        sc = Scan(sql)
         for cand in re.finditer(r"\?", sql):
-            if _outside_strings(sql, cand.start()):
+            if sc.code(cand.start()):
                 qpos = cand.start()
                 break
         if qpos is None:
@@ -11311,8 +11118,8 @@ def _rewrite_ternary(sql: str) -> str:
         i, depth, nest, cpos = qpos + 1, 0, 0, None
         while i < len(sql):
             ch = sql[i]
-            if ch in _QUOTE_CHARS:
-                i = _skip_quoted(sql, i)
+            if ch in QUOTE_CHARS:
+                i = skip_quoted(sql, i)
                 continue
             if ch in "([":
                 depth += 1
@@ -11369,8 +11176,8 @@ def _rewrite_ternary(sql: str) -> str:
         end = len(sql)
         while i < len(sql):
             ch = sql[i]
-            if ch in _QUOTE_CHARS:
-                i = _skip_quoted(sql, i)
+            if ch in QUOTE_CHARS:
+                i = skip_quoted(sql, i)
                 continue
             if ch in "([":
                 depth += 1
@@ -11403,26 +11210,12 @@ def _bare_tuple_parts(expr: str) -> list[str] | None:
     ``(a, b, …)``, else None (not wholly parenthesized, no top-level
     comma, or a subquery)."""
     e = expr.strip()
+    # the outer parens must wrap the WHOLE expression
     if not (e.startswith("(") and e.endswith(")")):
         return None
-    inner = e[1:-1]
-    depth = 0
-    i, n = 0, len(inner)
-    while i < n:  # the outer parens must wrap the WHOLE expression
-        ch = inner[i]
-        if ch in _QUOTE_CHARS:
-            i = _skip_quoted(inner, i)
-            continue
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-            if depth < 0:
-                return None
-        i += 1
-    if depth != 0:
+    if Scan(e).partner(0) != len(e) - 1:
         return None
-    parts = _split_args(inner)
+    parts = split_args(e[1:-1])
     if len(parts) < 2 or parts[0].lower().startswith("select"):
         return None
     return parts
@@ -11435,8 +11228,8 @@ def _tuple_parts(expr: str) -> list[str] | None:
     rewritten to — else None (e.g. a tuple-typed column reference)."""
     e = expr.strip()
     m = re.match(r"(?is)named_struct\s*\(", e)
-    if m and e.endswith(")") and _find_balanced(e, m.end() - 1) == len(e):
-        kv = _split_args(e[m.end() : -1])
+    if m and e.endswith(")") and find_balanced(e, m.end() - 1) == len(e):
+        kv = split_args(e[m.end() : -1])
         if (
             len(kv) >= 2
             and len(kv) % 2 == 0
@@ -11473,27 +11266,6 @@ def _tuple_literal_struct(expr: str) -> str | None:
     return _struct_of([_tuple_literal_struct(p) or p for p in parts])
 
 
-def _paren_open_for(sql: str, close: int) -> int | None:
-    """Position of the ``(`` matching the ``)`` at ``close``
-    (string-aware forward scan), else None."""
-    stack: list[int] = []
-    i = 0
-    while i < len(sql):
-        ch = sql[i]
-        if ch in _QUOTE_CHARS:
-            i = _skip_quoted(sql, i)
-            continue
-        if ch == "(":
-            stack.append(i)
-        elif ch == ")":
-            if i == close:
-                return stack[-1] if stack else None
-            if stack:
-                stack.pop()
-        i += 1
-    return None
-
-
 def _rewrite_tuple_literal_access(sql: str) -> str:
     """Bare tuple LITERALS under positional access — ``(1,'a').2`` —
     become ``named_struct('_1', …)`` so the ``._N`` rewrite that follows
@@ -11503,11 +11275,12 @@ def _rewrite_tuple_literal_access(sql: str) -> str:
     candidate, so grouping parens and function calls never match."""
     pat = re.compile(r"\)\.(\d+)(?!\w)")
     while True:
+        sc = Scan(sql)
         for m in pat.finditer(sql):
-            if not _outside_strings(sql, m.start()):
+            if not sc.code(m.start()):
                 continue
             close = m.start()
-            open_pos = _paren_open_for(sql, close)
+            open_pos = sc.partner(close)
             if open_pos is None:
                 continue
             k = open_pos - 1
@@ -11547,10 +11320,10 @@ def _rewrite_tuple_index(sql: str) -> str:
     prev = None
     while prev != sql:
         prev = sql
-        frozen = sql
+        sc = Scan(sql)
 
         def repl(m: re.Match) -> str:
-            if not _outside_strings(frozen, m.start()):
+            if not sc.code(m.start()):
                 return m.group(0)
             return f"{m.group(1)}._{m.group(2)}"
 
@@ -11564,33 +11337,19 @@ def _rewrite_limit_ties(sql: str) -> str:
     key survive.  Rewritten to ``QUALIFY rank() OVER (ORDER BY …) <= n``
     inserted before the owning ORDER BY — the existing QUALIFY machinery
     (which runs right after this pass) does the subquery wrap."""
-
-    def depth_at(pos: int) -> int:
-        d, i = 0, 0
-        while i < pos:
-            ch = sql[i]
-            if ch in _QUOTE_CHARS:
-                i = _skip_quoted(sql, i)
-                continue
-            if ch == "(":
-                d += 1
-            elif ch == ")":
-                d -= 1
-            i += 1
-        return d
-
     while True:
         m = None
+        sc = Scan(sql)
         for cand in re.finditer(r"(?is)\bLIMIT\s+(\d+)\s+WITH\s+TIES\b", sql):
-            if _outside_strings(sql, cand.start()):
+            if sc.code(cand.start()):
                 m = cand
                 break
         if m is None:
             break
-        d = depth_at(m.start())
+        d = sc.depth(m.start())
         om = None
         for oc in re.finditer(r"(?is)\bORDER\s+BY\b", sql[: m.start()]):
-            if _outside_strings(sql, oc.start()) and depth_at(oc.start()) == d:
+            if sc.code(oc.start()) and sc.depth(oc.start()) == d:
                 om = oc
         if om is None:
             raise DialectError("LIMIT … WITH TIES needs an ORDER BY")
@@ -11604,7 +11363,7 @@ def _rewrite_limit_ties(sql: str) -> str:
             + sql[m.end() :].lstrip()
         )
     for leftover in re.finditer(r"(?is)\bWITH\s+TIES\b", sql):
-        if _outside_strings(sql, leftover.start()):
+        if sc.code(leftover.start()):
             raise DialectError(
                 "WITH TIES is supported for `ORDER BY … LIMIT n WITH "
                 "TIES` — rewrite offset/expression forms with rank() "
@@ -11638,10 +11397,10 @@ def _rewrite_qualify(sql: str) -> str:
     verdict #4), so derived tables / IN-subqueries translate too.
     """
     sql = _recurse_subqueries(sql, _rewrite_qualify, r"(?is)\bQUALIFY\b")
-    d0 = {i for i, _ in _depth0_spans(sql)}
+    sc = Scan(sql)
     m = None
     for mm in re.finditer(r"(?is)\bQUALIFY\b", sql):
-        if mm.start() in d0 and _clauselike_position(sql, mm.start()):
+        if sc.top(mm.start()) and _clauselike_position(sql, mm.start()):
             m = mm
             break
     if not m:
@@ -11686,9 +11445,10 @@ def _rewrite_join_modifiers(sql: str) -> str:
       letting Spark emit its own parse error hides the actual cause.
 
     Literal-aware: spans inside string literals are never rewritten."""
+    sc = Scan(sql)
 
     def outside(m: re.Match) -> bool:
-        return _outside_strings(sql, m.start())
+        return sc.code(m.start())
 
     def first_outside(pattern: str) -> re.Match | None:
         # finditer, not search: a match INSIDE a string literal must not
@@ -11699,16 +11459,17 @@ def _rewrite_join_modifiers(sql: str) -> str:
         return None
 
     def sub_outside(pattern: str, repl: str) -> None:
-        nonlocal sql
+        nonlocal sql, sc
         out, last = [], 0
         for m in re.finditer(pattern, sql):
-            if not _outside_strings(sql, m.start()):
+            if not outside(m):
                 continue
             out.append(sql[last:m.start()])
             out.append(repl)
             last = m.end()
         out.append(sql[last:])
         sql = "".join(out)
+        sc = Scan(sql)
 
     # CH accepts the modifier-first SEMI/ANTI orderings; Spark parses
     # only LEFT SEMI / LEFT ANTI (round 17, wave N)
@@ -11842,8 +11603,9 @@ def _rewrite_array_joins(sql: str) -> str:
     pos = 0
     while True:
         m = None
+        sc = Scan(sql)
         for cand in re.finditer(r"(?i)\b(LEFT\s+)?ARRAY\s+JOIN\s+", sql):
-            if cand.start() >= pos and _outside_strings(sql, cand.start()):
+            if cand.start() >= pos and sc.code(cand.start()):
                 m = cand
                 break
         if m is None:
@@ -11857,11 +11619,11 @@ def _rewrite_array_joins(sql: str) -> str:
             j = i
             while j < n:
                 ch = sql[j]
-                if ch in _QUOTE_CHARS:
-                    j = _skip_quoted(sql, j)
+                if ch in QUOTE_CHARS:
+                    j = skip_quoted(sql, j)
                     continue
                 if ch == "(":
-                    j = _find_balanced(sql, j)
+                    j = find_balanced(sql, j)
                     continue
                 if ch in "),":
                     break
@@ -11898,7 +11660,7 @@ def _rewrite_array_joins(sql: str) -> str:
             fm, lunit = None, None
             cands = [
                 fc for fc in re.finditer(r"(?i)\bFROM\s+", sql[: m.start()])
-                if _outside_strings(sql, fc.start())
+                if sc.code(fc.start())
             ]
             for fcand in reversed(cands):
                 cand_unit = _parse_table_unit(sql, fcand.end())
@@ -11979,17 +11741,17 @@ def _rewrite_table_clauses(sql: str) -> str:
     - ``FINAL`` (merge-time dedup for Replacing/Collapsing engines) drops:
       there is no background merge to finalize against.
 
-    All matching is depth-0 and string-literal aware via _depth0_spans,
+    All matching is depth-0 and string-literal aware via :class:`Scan`,
     and (round 7) recurses into subqueries — PREWHERE/SAMPLE/FINAL inside
     a derived table translate at that table's own depth."""
     sql = _recurse_subqueries(
         sql, _rewrite_table_clauses, r"(?i)\b(PREWHERE|SAMPLE\s+\d|FINAL)\b"
     )
-    d0 = {i for i, _ in _depth0_spans(sql)}
+    sc = Scan(sql)
 
     def d0_search(pat: str, start: int = 0):
         for m in re.finditer(pat, sql):
-            if m.start() >= start and m.start() in d0:
+            if m.start() >= start and sc.top(m.start()):
                 return m
         return None
 
@@ -12001,7 +11763,7 @@ def _rewrite_table_clauses(sql: str) -> str:
         if m_where:
             m_end = None
             for b in _CLAUSE_BOUNDARY.finditer(sql, m_where.end()):
-                if b.start() in d0:
+                if sc.top(b.start()):
                     m_end = b
                     break
             pw = sql[m.end() : m_where.start()].strip()
@@ -12014,7 +11776,7 @@ def _rewrite_table_clauses(sql: str) -> str:
             )
         else:
             sql = sql[: m.start()] + "WHERE" + sql[m.end() :]
-        d0 = {i for i, _ in _depth0_spans(sql)}
+        sc = Scan(sql)
 
     # SAMPLE k/n fraction spelling (round 15 — previously half-matched:
     # `SAMPLE 1/10` rewrote the `1` alone and the division pre-pass then
@@ -12044,7 +11806,7 @@ def _rewrite_table_clauses(sql: str) -> str:
         else:
             repl = f"TABLESAMPLE ({int(val)} ROWS)"
         sql = sql[: m.start()] + repl + sql[m.end() :]
-        d0 = {i for i, _ in _depth0_spans(sql)}
+        sc = Scan(sql)
 
     m = d0_search(r"(?i)\bFINAL\b(?=\s|$)")
     if m:
@@ -12078,14 +11840,16 @@ def _rewrite_limit_offset(sql: str) -> str:
     sequence `LIMIT int, int` cannot occur in any other SQL context —
     excluding only string literals; `LIMIT n BY cols` was already
     rewritten away before this runs."""
-    parts = re.split(r"('(?:[^']|'')*')", sql)
-    for j in range(0, len(parts), 2):
-        parts[j] = re.sub(
-            r"(?is)\bLIMIT\s+(\d+)\s*,\s*(\d+)",
-            lambda m: f"LIMIT {m.group(2)} OFFSET {m.group(1)}",
-            parts[j],
-        )
-    return "".join(parts)
+    sc = Scan(sql)
+    return re.sub(
+        r"(?is)\bLIMIT\s+(\d+)\s*,\s*(\d+)",
+        lambda m: (
+            f"LIMIT {m.group(2)} OFFSET {m.group(1)}"
+            if sc.code(m.start())
+            else m.group(0)
+        ),
+        sql,
+    )
 
 
 def _rewrite_scalar_with(sql: str) -> str:
@@ -12110,8 +11874,8 @@ def _rewrite_scalar_with(sql: str) -> str:
         depth = 0
         while i < n:
             ch = sql[i]
-            if ch in _QUOTE_CHARS:
-                i = _skip_quoted(sql, i)
+            if ch in QUOTE_CHARS:
+                i = skip_quoted(sql, i)
                 continue
             if ch == "(":
                 depth += 1
@@ -12148,15 +11912,13 @@ def _rewrite_scalar_with(sql: str) -> str:
         return sql
     def _subst(text: str) -> str:
         for expr, ident in scalars:
-            # substitute outside string literals, word-boundary
-            parts = re.split(r"('(?:[^']|'')*')", text)
-            for j in range(0, len(parts), 2):
-                parts[j] = re.sub(
-                    rf"(?<![A-Za-z0-9_]){re.escape(ident)}(?![A-Za-z0-9_])",
-                    f"({expr})",
-                    parts[j],
-                )
-            text = "".join(parts)
+            # substitute outside quoted spans, word-boundary
+            sc = Scan(text)
+            text = re.sub(
+                rf"(?<![A-Za-z0-9_]){re.escape(ident)}(?![A-Za-z0-9_])",
+                lambda mm: f"({expr})" if sc.code(mm.start()) else mm.group(0),
+                text,
+            )
         return text
 
     body = _subst(body)
@@ -12176,44 +11938,14 @@ def _rewrite_double_quoted_identifiers(sql: str) -> str:
     pass sees backticked identifiers and no bare double quotes outside
     strings."""
     out: list[str] = []
-    i, n = 0, len(sql)
-    in_sq = False
-    while i < n:
-        ch = sql[i]
-        if in_sq:
-            out.append(ch)
-            if ch == "'" and sql[i - 1] != "\\":
-                in_sq = False
-            i += 1
-            continue
-        if ch == "'":
-            in_sq = True
-            out.append(ch)
-            i += 1
-            continue
-        if ch == '"':
-            j = i + 1
-            ident: list[str] = []
-            closed = False
-            while j < n:
-                if sql[j] == '"':
-                    if j + 1 < n and sql[j + 1] == '"':
-                        ident.append('"')
-                        j += 2
-                        continue
-                    closed = True
-                    break
-                ident.append(sql[j])
-                j += 1
-            if not closed:  # unbalanced — leave as-is, the engine will say so
-                out.append(ch)
-                i += 1
-                continue
-            out.append("`" + "".join(ident).replace("`", "``") + "`")
-            i = j + 1
-            continue
-        out.append(ch)
-        i += 1
+    last = 0
+    for start, end in Scan(sql).quoted:
+        if sql[start] != '"' or end - start < 2 or sql[end - 1] != '"':
+            continue  # a string, a backtick identifier, or unbalanced
+        ident = sql[start + 1 : end - 1].replace('""', '"')
+        out.append(sql[last:start] + "`" + ident.replace("`", "``") + "`")
+        last = end
+    out.append(sql[last:])
     return "".join(out)
 
 
@@ -12246,9 +11978,10 @@ def _rewrite_order_by_nulls(sql: str) -> str:
     NaN as the largest double (same as CH only for ASC)."""
     out = []
     pos = 0
+    sc = Scan(sql)
     while True:
         m = _ORDER_BY_PAT.search(sql, pos)
-        if not m or not _outside_strings(sql, m.start()):
+        if not m or not sc.code(m.start()):
             if not m:
                 out.append(sql[pos:])
                 return "".join(out)
@@ -12265,8 +11998,8 @@ def _rewrite_order_by_nulls(sql: str) -> str:
         keys: list[tuple[int, int]] = []
         while i < n:
             ch = sql[i]
-            if ch in _QUOTE_CHARS:
-                i = _skip_quoted(sql, i)
+            if ch in QUOTE_CHARS:
+                i = skip_quoted(sql, i)
                 continue
             if ch in "([":
                 depth += 1
@@ -12310,8 +12043,9 @@ def _rewrite_logical_fn_calls(sql: str) -> str:
     operator; the bare ``in()`` spelling stays unmapped (same collision,
     no safe context — ``x IN (...)`` is the common form)."""
     while True:
+        sc = Scan(sql)
         for m in _LOGICAL_FN_PAT.finditer(sql):
-            if not _outside_strings(sql, m.start(1)):
+            if not sc.code(m.start(1)):
                 continue
             k = m.start(1) - 1
             while k >= 0 and sql[k].isspace():
@@ -12334,8 +12068,8 @@ def _rewrite_logical_fn_calls(sql: str) -> str:
                     continue  # e.g. `) AND (` — the operator spelling
             op = m.group(1).upper()
             open_paren = sql.index("(", m.end(1) - 1)
-            close = _find_balanced(sql, open_paren)
-            args = _split_args(sql[open_paren + 1 : close - 1])
+            close = find_balanced(sql, open_paren)
+            args = split_args(sql[open_paren + 1 : close - 1])
             if args and args[0].lstrip()[:7].lower().startswith("select"):
                 continue  # NOT (SELECT …) — a subquery, not a call
             if op == "IN":
@@ -12424,8 +12158,6 @@ def _two_valued_in(x: str, args: list[str], negate: bool) -> str:
     return f"({nn} AND {wrapped})"
 
 
-_BIND_SEQ = 0
-
 # Word-boundary SELECT/WITH/EXISTS — the subquery-opener set; checked on
 # quote-stripped text so string literals never false-positive.
 _BIND_SUBQUERY = re.compile(r"(?i)(?<![A-Za-z0-9_])(select|exists)\s*[(\s]")
@@ -12454,13 +12186,11 @@ def _bind_once(value: str, build, threshold: int = 200) -> str:
     the lambda."""
     if len(value) <= threshold:
         return build(value)
-    global _BIND_SEQ
-    _BIND_SEQ += 1
-    v = f"__b{_BIND_SEQ}"
+    v = f"__b{next(_LAMBDA_SEQ.get())}"
     body = build(v)
-    if _BIND_SUBQUERY.search(
-        _without_string_literals(value)
-    ) or _BIND_SUBQUERY.search(_without_string_literals(body)):
+    if _BIND_SUBQUERY.search(Scan(value).code_text) or _BIND_SUBQUERY.search(
+        Scan(body).code_text
+    ):
         return build(value)
     return f"element_at(transform(array({value}), {v} -> {body}), 1)"
 
@@ -12515,8 +12245,8 @@ def _rewrite_division(sql: str) -> str:
     term = [0]
     while i < n:
         ch = sql[i]
-        if ch in _QUOTE_CHARS:
-            i = _skip_quoted(sql, i)
+        if ch in QUOTE_CHARS:
+            i = skip_quoted(sql, i)
             continue
         if ch.isdigit() or (
             ch == "." and i + 1 < n and sql[i + 1].isdigit()
@@ -12628,10 +12358,10 @@ def _scan_div_unit(sql: str, i: int) -> int | None:
     if i >= n:
         return None
     c = sql[i]
-    if c in _QUOTE_CHARS:
-        return _skip_quoted(sql, i)
+    if c in QUOTE_CHARS:
+        return skip_quoted(sql, i)
     if c == "(":
-        return _find_balanced(sql, i)
+        return find_balanced(sql, i)
     if c.isdigit() or (c == "." and i + 1 < n and sql[i + 1].isdigit()):
         m = _DIV_NUM.match(sql, i)
         return m.end() if m else None
@@ -12645,7 +12375,7 @@ def _scan_div_unit(sql: str, i: int) -> int | None:
             while k < n and sql[k].isspace():
                 k += 1
             if k < n and sql[k] == "(":
-                i = _find_balanced(sql, k)
+                i = find_balanced(sql, k)
                 k = i
                 while k < n and sql[k].isspace():
                     k += 1
@@ -12666,24 +12396,15 @@ def _rewrite_collate(sql: str) -> str:
     locale string carries over (hyphens → underscores for Spark's
     collation-name grammar); an unknown locale stays a loud Spark
     COLLATION_INVALID_NAME error.  Quoted spans are opaque."""
-    out: list[str] = []
-    i = 0
-    n = len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch in _QUOTE_CHARS:
-            j = _skip_quoted(sql, i)
-            out.append(sql[i:j])
-            i = j
-            continue
-        m = _COLLATE_LIT.match(sql, i)
-        if m and (i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] == "_")):
-            out.append(f"COLLATE {m.group(1).replace('-', '_')}")
-            i = m.end()
-            continue
-        out.append(ch)
-        i += 1
-    return "".join(out)
+    sc = Scan(sql)
+    return _COLLATE_LIT.sub(
+        lambda m: (
+            f"COLLATE {m.group(1).replace('-', '_')}"
+            if sc.code(m.start())
+            else m.group(0)
+        ),
+        sql,
+    )
 
 
 _FRAME_EXCLUDE = re.compile(
@@ -12700,8 +12421,9 @@ def _rewrite_frame_exclusion(sql: str) -> str:
     error instead of Spark's bare PARSE_SYNTAX_ERROR."""
     out = []
     last = 0
+    sc = Scan(sql)
     for m in _FRAME_EXCLUDE.finditer(sql):
-        if not _outside_strings(sql, m.start()):
+        if not sc.code(m.start()):
             continue
         kind = re.sub(r"\s+", " ", m.group(1)).upper()
         if kind == "NO OTHERS":
@@ -12732,8 +12454,10 @@ def _rewrite_compound_intervals(sql: str) -> str:
     left-associatively — ``ts + INTERVAL a + INTERVAL b`` ≡ adding the
     compound — preserving the left-to-right application order CH uses.
     Single-term strings stay native (Spark parses them)."""
+    sc = Scan(sql)
+
     def repl(m: re.Match) -> str:
-        if not _outside_strings(sql, m.start()):
+        if not sc.code(m.start()):
             return m.group(0)
         op, body = m.group(1), m.group(3)
         terms = []
@@ -12786,7 +12510,7 @@ def _rewrite_lead_lag_in_frame(sql: str) -> str:
         m = _LEAD_LAG_FRAME.search(out, pos)
         if m is None:
             return out
-        close = _find_balanced(out, out.index("(", m.end() - 1))
+        close = find_balanced(out, out.index("(", m.end() - 1))
         k = close
         n = len(out)
         while k < n and out[k].isspace():
@@ -12801,7 +12525,7 @@ def _rewrite_lead_lag_in_frame(sql: str) -> str:
         if k >= n or out[k] != "(":
             pos = close
             continue
-        oclose = _find_balanced(out, k)
+        oclose = find_balanced(out, k)
         body = out[k + 1 : oclose - 1]
         fm = _FULL_FRAME.search(body)
         if fm:
@@ -12827,7 +12551,7 @@ def _rewrite_lead_lag_in_frame(sql: str) -> str:
             pos = oclose
             continue
         paren = out.index("(", m.end() - 1)
-        args = _split_args(out[paren + 1 : close - 1])
+        args = split_args(out[paren + 1 : close - 1])
         if not 1 <= len(args) <= 3:
             raise DialectError("leadInFrame takes (x[, offset[, default]])")
         x = args[0]
@@ -12868,8 +12592,8 @@ def _rewrite_in_operator(sql: str) -> str:
     term = [0]  # per-depth start index of the current expression term
     while i < n:
         ch = sql[i]
-        if ch in _QUOTE_CHARS:
-            i = _skip_quoted(sql, i)
+        if ch in QUOTE_CHARS:
+            i = skip_quoted(sql, i)
             continue
         if ch in "([":
             term.append(i + 1)
@@ -12926,14 +12650,14 @@ def _rewrite_in_operator(sql: str) -> str:
             term[-1] = j  # IN without (…) — leave alone
             i = j
             continue
-        close = _find_balanced(sql, k)
+        close = find_balanced(sql, k)
         inner = sql[k + 1 : close - 1]
         if inner.lstrip()[:6].lower() == "select":
             i = close  # subquery — native Spark IN (see docstring)
             continue
         raw = sql[term[-1] : op_start]
         operand = raw.strip()
-        args = _split_args(inner)
+        args = split_args(inner)
         if not operand or not args:
             i = close
             continue
@@ -12947,46 +12671,67 @@ def _rewrite_in_operator(sql: str) -> str:
 
 
 def translate(sql: str) -> str:
-    """Translate a ClickHouse SELECT into Spark SQL (see module docstring)."""
-    sql = _strip_comments(sql)
-    sql = _rewrite_explain_prefix(sql)
-    sql = _rewrite_double_quoted_identifiers(sql)
-    sql = _rewrite_star_modifiers(sql)
-    sql = _strip_suffix_clauses(sql)
-    sql = _rewrite_asof_joins(sql)
-    sql = _rewrite_any_joins(sql)
-    sql = _rewrite_limit_ties(sql)
-    sql = _rewrite_qualify(sql)
-    sql = _rewrite_distinct_on(sql)
-    sql = _rewrite_join_modifiers(sql)
-    sql = _rewrite_table_clauses(sql)
-    sql = _rewrite_with_totals(sql)
-    sql = _rewrite_with_fill(sql)
-    sql = _rewrite_limit_by(sql)
-    sql = _rewrite_limit_offset(sql)
-    sql = _rewrite_scalar_with(sql)
-    sql = _rewrite_brackets(sql)
-    sql = _rewrite_ternary(sql)
-    sql = _rewrite_tuple_index(sql)
-    sql = _rewrite_logical_fn_calls(sql)
-    sql = _rewrite_in_operator(sql)
-    sql = _rewrite_division(sql)
-    sql = _rewrite_lead_lag_in_frame(sql)
-    sql = _rewrite_frame_exclusion(sql)
-    sql = _rewrite_compound_intervals(sql)
-    sql = _rewrite_collate(sql)
-    sql = _rewrite_order_by_nulls(sql)
+    """Translate a ClickHouse SELECT into Spark SQL (see module docstring).
+
+    Comments are stripped, each rewrite pass runs once over the whole
+    statement, and one bottom-up walk then maps the function calls."""
+    token = _LAMBDA_SEQ.set(_itercount(1))
+    try:
+        sql = strip_comments(sql)
+        sql = _rewrite_explain_prefix(sql)
+        sql = _rewrite_double_quoted_identifiers(sql)
+        sql = _rewrite_star_modifiers(sql)
+        sql = _strip_suffix_clauses(sql)
+        sql = _rewrite_asof_joins(sql)
+        sql = _rewrite_any_joins(sql)
+        sql = _rewrite_limit_ties(sql)
+        sql = _rewrite_qualify(sql)
+        sql = _rewrite_distinct_on(sql)
+        sql = _rewrite_join_modifiers(sql)
+        sql = _rewrite_table_clauses(sql)
+        sql = _rewrite_with_totals(sql)
+        sql = _rewrite_with_fill(sql)
+        sql = _rewrite_limit_by(sql)
+        sql = _rewrite_limit_offset(sql)
+        sql = _rewrite_scalar_with(sql)
+        sql = _rewrite_brackets(sql)
+        sql = _rewrite_ternary(sql)
+        sql = _rewrite_tuple_index(sql)
+        sql = _rewrite_logical_fn_calls(sql)
+        sql = _rewrite_in_operator(sql)
+        sql = _rewrite_division(sql)
+        sql = _rewrite_lead_lag_in_frame(sql)
+        sql = _rewrite_frame_exclusion(sql)
+        sql = _rewrite_compound_intervals(sql)
+        sql = _rewrite_collate(sql)
+        sql = _rewrite_order_by_nulls(sql)
+        res = _map_calls(sql, Scan(sql), 0, len(sql))
+    finally:
+        _LAMBDA_SEQ.reset(token)
+    # postfix casts x::UInt32
+    return re.sub(
+        r"::([A-Za-z0-9_]+)",
+        lambda mm: "::" + TYPE_MAP.get(mm.group(1).lower(), mm.group(1)),
+        res,
+    )
+
+
+def _map_calls(sql: str, sc: Scan, lo: int, hi: int) -> str:
+    """Map the function calls and CAST type names in ``sql[lo:hi]``.
+
+    A mapped call's arguments are mapped first, by recursing on their
+    span; ``sc`` gives each call's closing paren, so no span is scanned
+    twice."""
     out: list[str] = []
-    i = 0
-    n = len(sql)
-    while i < n:
+    i = lo
+    while i < hi:
         ch = sql[i]
-        if ch in _QUOTE_CHARS:
-            j = _skip_quoted(sql, i)
+        if ch in QUOTE_CHARS:
+            j = skip_quoted(sql, i)
             out.append(sql[i:j])
             i = j
             continue
-        m = _IDENT.match(sql, i)
+        m = _IDENT.match(sql, i, hi)
         if not m:
             out.append(ch)
             i += 1
@@ -12996,19 +12741,18 @@ def translate(sql: str) -> str:
         j = m.end()
         # skip whitespace between name and '('
         k = j
-        while k < n and sql[k] in " \t\n":
+        while k < hi and sql[k] in " \t\n":
             k += 1
-        if k < n and sql[k] == "(" and (
+        if k < hi and sql[k] == "(" and (
             lname in TEMPLATES or lname in NAME_MAP or lname in PARAMETRIC
         ):
             if lname in _PER_GROUP_FOLD_FNS:
                 _note_per_group_buffer(name)
-            close = _find_balanced(sql, k)
-            inner = translate(sql[k + 1 : close - 1])
-            args = _split_args(inner)
+            close = sc.end_of(k)
+            args = split_args(_map_calls(sql, sc, k + 1, close - 1))
             # parametric form: name(params)(args)
             k2 = close
-            while k2 < n and sql[k2] in " \t\n":
+            while k2 < hi and sql[k2] in " \t\n":
                 k2 += 1
             def _apply(fn, *fa):
                 # templates index into their argument lists; a wrong-arity
@@ -13024,20 +12768,20 @@ def translate(sql: str) -> str:
                         f"({len(args)} given)"
                     ) from None
 
-            if lname in PARAMETRIC and k2 < n and sql[k2] == "(":
-                close2 = _find_balanced(sql, k2)
-                inner2 = translate(sql[k2 + 1 : close2 - 1])
-                out.append(_apply(PARAMETRIC[lname], args, _split_args(inner2)))
+            if lname in PARAMETRIC and k2 < hi and sql[k2] == "(":
+                close2 = sc.end_of(k2)
+                inner2 = _map_calls(sql, sc, k2 + 1, close2 - 1)
+                out.append(_apply(PARAMETRIC[lname], args, split_args(inner2)))
                 i = close2
                 continue
-            if lname not in PARAMETRIC and k2 < n and sql[k2] == "(":
+            if lname not in PARAMETRIC and k2 < hi and sql[k2] == "(":
                 # parametric call name(params)(args) of a NON-parametric
                 # mapped name: renaming would emit `newname(p)(a)`, which
                 # Spark cannot parse (round-7 probe: uniqCombined(12)(x))
                 # — special-case the HLL-precision family, guided error
                 # otherwise
-                close2 = _find_balanced(sql, k2)
-                inner2 = translate(sql[k2 + 1 : close2 - 1])
+                close2 = sc.end_of(k2)
+                inner2 = _map_calls(sql, sc, k2 + 1, close2 - 1)
                 if lname in ("uniqcombined", "uniqcombined64"):
                     # CH param = HLL precision p; approx_count_distinct's
                     # knob is relative SD ≈ 1.04 / sqrt(2^p)
@@ -13065,12 +12809,12 @@ def translate(sql: str) -> str:
             i = close
             continue
         # CAST type names: `AS UInt32` inside CAST(...) and `::UInt32`
-        if lname == "cast" and k < n and sql[k] == "(":
-            close = _find_balanced(sql, k)
-            inner = translate(sql[k + 1 : close - 1])
+        if lname == "cast" and k < hi and sql[k] == "(":
+            close = sc.end_of(k)
+            inner = _map_calls(sql, sc, k + 1, close - 1)
             # CH's comma form CAST(x, 'Type') (round 8 — previously
             # passed through as invalid Spark syntax)
-            parts = _split_args(inner)
+            parts = split_args(inner)
             if len(parts) == 2 and re.fullmatch(
                 r"'[A-Za-z0-9_(), ]+'", parts[1].strip()
             ):
@@ -13096,11 +12840,4 @@ def translate(sql: str) -> str:
             continue
         out.append(name)
         i = j
-    # postfix casts x::UInt32
-    res = "".join(out)
-    res = re.sub(
-        r"::([A-Za-z0-9_]+)",
-        lambda mm: "::" + TYPE_MAP.get(mm.group(1).lower(), mm.group(1)),
-        res,
-    )
-    return res
+    return "".join(out)

@@ -9,17 +9,25 @@ allowed through; DDL/DML/anything else is rejected BEFORE reaching the
 engine with the reference's error shape ("Query execution failed: …",
 mcp_server.py:430).
 
-Two layers: a lexical classifier (``check_read_only`` — comment-stripped,
-string-masked first-keyword check plus a paren-depth-0 write-verb scan that
-closes the `WITH … INSERT` CTE bypass) that needs no session, and a
-parser-backed gate (``check_read_only_plan``) that asks Spark's own SQL
-parser for the logical plan class and rejects anything that is not
-query-shaped — no regex false-negatives possible on that path.
+Two layers, each of which rejects a write on its own:
+
+- a lexical classifier (``check_read_only``) that needs no session: a
+  first-keyword check plus a paren-depth-0 write-verb scan that closes the
+  ``WITH … INSERT`` CTE bypass.  Which characters are code comes from
+  :mod:`mcp_clickhouse_spark.sqltext`, the lexer the dialect translator
+  uses too, so the gate checks the statement the engine will run;
+- a parser-backed gate (``check_read_only_plan``) that asks Spark's own SQL
+  parser for the statement's plan class, looking through the
+  ``UnresolvedWith`` node a CTE prologue wraps around any statement, and
+  rejects every class on its write list.  A statement class missing from
+  that list passes this layer, so the two layers back each other up.
 """
 
 from __future__ import annotations
 
 import re
+
+from mcp_clickhouse_spark.sqltext import Scan, strip_comments
 
 _ALLOWED_FIRST = {
     "select",
@@ -80,62 +88,6 @@ _FORBIDDEN_ANYWHERE_FIRST = {
 }
 
 
-def strip_comments(sql: str) -> str:
-    """Remove -- line and /* block */ comments (string-literal aware)."""
-    out: list[str] = []
-    i, n = 0, len(sql)
-    in_str: str | None = None
-    while i < n:
-        ch = sql[i]
-        if in_str:
-            out.append(ch)
-            if ch == in_str and not (i > 0 and sql[i - 1] == "\\"):
-                in_str = None
-            i += 1
-            continue
-        if ch in ("'", '"', "`"):
-            in_str = ch
-            out.append(ch)
-            i += 1
-            continue
-        if ch == "-" and sql.startswith("--", i):
-            j = sql.find("\n", i)
-            i = n if j == -1 else j
-            continue
-        if ch == "/" and sql.startswith("/*", i):
-            j = sql.find("*/", i + 2)
-            i = n if j == -1 else j + 2
-            out.append(" ")
-            continue
-        out.append(ch)
-        i += 1
-    return "".join(out)
-
-
-def mask_strings(sql: str) -> str:
-    """Blank out string-literal contents (keeps quotes) for safe lexical
-    analysis — a ';' or keyword inside a literal must not influence
-    classification."""
-    out: list[str] = []
-    in_str: str | None = None
-    for i, ch in enumerate(sql):
-        if in_str:
-            if ch == in_str and not (i > 0 and sql[i - 1] == "\\"):
-                in_str = None
-                out.append(ch)
-            else:
-                out.append(" ")
-            continue
-        if ch in ("'", '"', "`"):
-            in_str = ch
-        out.append(ch)
-    return "".join(out)
-
-
-def _analysis_text(sql: str) -> str:
-    return mask_strings(strip_comments(sql))
-
-
 class ReadOnlyViolation(Exception):
     """Raised when a statement is not read-only."""
 
@@ -167,12 +119,13 @@ _FORBIDDEN_AT_DEPTH0 = {
 }
 
 _WORD_RE = re.compile(r"[A-Za-z_]+")
+_CALL_PAREN = re.compile(r"\s*\(")
 
 
-def _depth0_forbidden(cleaned: str) -> str | None:
+def _depth0_forbidden(sc: Scan) -> str | None:
     """Return the first forbidden write verb at paren-depth 0, else None.
 
-    ``cleaned`` must already be comment-stripped and string-masked.  Closes
+    Only code counts: quoted spans and comments are blanked.  Closes
     the CTE bypass: `WITH s AS (SELECT 1) INSERT INTO t SELECT * FROM s`
     starts with an allowed keyword but carries INSERT at depth 0.  An
     unquoted identifier that collides with a write verb at depth 0 is
@@ -185,38 +138,23 @@ def _depth0_forbidden(cleaned: str) -> str | None:
     `REPLACE TABLE`, `DELETE FROM`), and the parser-backed plan gate below
     backstops any lexical false-negative.
     """
-    depth = 0
-    i, n = 0, len(cleaned)
-    while i < n:
-        ch = cleaned[i]
-        if ch == "(":
-            depth += 1
-            i += 1
-        elif ch == ")":
-            depth = max(0, depth - 1)
-            i += 1
-        elif ch.isalpha() or ch == "_":
-            m = _WORD_RE.match(cleaned, i)
-            word = m.group(0)
-            i = m.end()
-            if depth == 0 and word.lower() in _FORBIDDEN_AT_DEPTH0:
-                j = i
-                while j < n and cleaned[j].isspace():
-                    j += 1
-                if j < n and cleaned[j] == "(":
-                    continue  # function call, not a statement verb
-                return word.lower()
-        else:
-            i += 1
+    cleaned = sc.code_text
+    for m in _WORD_RE.finditer(cleaned):
+        word = m.group(0).lower()
+        if word in _FORBIDDEN_AT_DEPTH0 and sc.depth(m.start()) <= 0:
+            if _CALL_PAREN.match(cleaned, m.end()):
+                continue  # function call, not a statement verb
+            return word
     return None
 
 
 def check_read_only(sql: str) -> None:
     """Raise ReadOnlyViolation unless `sql` is a single read-only statement."""
-    cleaned = _analysis_text(sql)
+    sc = Scan(sql)
     # Reject multi-statement batches: any ';' followed by more content
-    # (string literals are masked, so a ';' inside one doesn't count).
-    tail = cleaned.split(";", 1)
+    # (quoted spans and comments are blanked, so a ';' inside one doesn't
+    # count).
+    tail = sc.code_text.split(";", 1)
     if len(tail) == 2 and tail[1].strip():
         raise ReadOnlyViolation("multi-statement queries are not allowed")
     kw = first_keyword(sql)
@@ -232,7 +170,7 @@ def check_read_only(sql: str) -> None:
     # grammar legitimately embeds write verbs (`SHOW CREATE TABLE t`) and
     # cannot write — exempt (advisor round-2 finding).
     if kw not in {"show", "describe", "desc"}:
-        bad = _depth0_forbidden(cleaned)
+        bad = _depth0_forbidden(sc)
         if bad is not None:
             raise ReadOnlyViolation(
                 f"write statement '{bad.upper()}' is not allowed (readonly)"
@@ -281,9 +219,13 @@ def check_read_only_plan(spark, sql: str) -> None:
     """
     try:
         jplan = spark._jsparkSession.sessionState().sqlParser().parsePlan(sql)
-        cls = jplan.getClass().getSimpleName()
     except Exception:  # noqa: BLE001 — parse errors surface from spark.sql itself
         return
+    cls = jplan.getClass().getSimpleName()
+    # `WITH … <statement>` parses to UnresolvedWith over the statement
+    while cls == "UnresolvedWith":
+        jplan = jplan.child()
+        cls = jplan.getClass().getSimpleName()
     if _WRITE_PLAN_RE.match(cls):
         raise ReadOnlyViolation(
             f"statement plans a write ({cls}) and is not allowed (readonly)"

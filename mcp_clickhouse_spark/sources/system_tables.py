@@ -6,8 +6,8 @@ FROM system.numbers LIMIT n`` constantly (the reference's own prompt
 teaches these — mcp_clickhouse/chdb_prompt.py).  Spark has no ``system``
 database, so the tool layer binds them on demand:
 
-- references to ``system.<name>`` in the SQL text rewrite (string-aware)
-  to ``_system_<name>`` temp views;
+- references to ``system.<name>`` in the SQL code (never in a quoted span
+  or a comment) rewrite to ``_system_<name>`` temp views;
 - each view materializes a point-in-time snapshot from the Spark catalog
   via the same code paths the MCP catalog tools use (catalog.py), with
   CH's documented column names;
@@ -27,7 +27,7 @@ import re as _re
 
 from pyspark.sql import SparkSession
 
-from mcp_clickhouse_spark.dialect import _outside_strings
+from mcp_clickhouse_spark.sqltext import Scan
 
 _SYSTEM_RE = _re.compile(r"(?i)\bsystem\s*\.\s*(one|numbers|numbers_mt|tables|databases|columns|functions|settings|processes)\b")
 
@@ -37,9 +37,7 @@ _NUMBERS_CAP = 1 << 40
 def bind_system_tables(spark: SparkSession, sql: str) -> str:
     """Rewrite ``system.<t>`` references to bound temp views (no-op when
     the query mentions none)."""
-    hits = [
-        m for m in _SYSTEM_RE.finditer(sql) if _outside_strings(sql, m.start())
-    ]
+    hits = list(_SYSTEM_RE.finditer(Scan(sql).code_text))
     if not hits:
         return sql
     needed = {m.group(1).lower() for m in hits}

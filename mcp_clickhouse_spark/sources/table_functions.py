@@ -25,6 +25,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from mcp_clickhouse_spark.catalog import quote_ident, show_tables
+from mcp_clickhouse_spark.sqltext import Scan, split_args
 
 # ClickHouse format name → (spark format, reader options)
 FORMAT_ALIASES: dict[str, tuple[str, dict[str, str]]] = {
@@ -322,8 +323,9 @@ def bind_sql_table_functions(spark: SparkSession, sql: str) -> str:
     call), call text replaced with the view name.  Idempotent: the same
     call re-binds to the same view.
 
-    Only calls immediately after FROM or JOIN are bound, so column/UDF
-    names can never be captured.  Errors from the underlying reader
+    Only calls in code (never in a quoted span or a comment) immediately
+    after FROM or JOIN are bound, so column/UDF names can never be
+    captured.  Errors from the underlying reader
     propagate unchanged (missing file, bad format, …).
     """
     readers = {"file": file, "url": url, "s3": s3, "hdfs": hdfs}
@@ -332,42 +334,15 @@ def bind_sql_table_functions(spark: SparkSession, sql: str) -> str:
         r"|remoteSecure|remote|values|view|cluster|clusterAllReplicas"
         r"|merge)\s*\("
     )
-    from mcp_clickhouse_spark.dialect import _find_balanced, _split_args
-
-    def _in_string(s: str, pos: int) -> bool:
-        # Spark SQL string literals support BOTH backslash escapes ('O\'Brien')
-        # and SQL quote doubling ('O''Brien'); the previous scanner knew only
-        # backslash and read s[-1] when a literal opened at i=0.
-        quote = None
-        i = 0
-        while i < pos:
-            ch = s[i]
-            if quote:
-                if ch == "\\" and i + 1 < len(s):
-                    i += 2  # backslash escape consumes the next char
-                    continue
-                if ch == quote:
-                    if i + 1 < len(s) and s[i + 1] == quote:
-                        i += 2  # '' doubling stays inside the literal
-                        continue
-                    quote = None
-            elif ch in ("'", '"'):
-                quote = ch
-            i += 1
-        return quote is not None
-
     out = sql
-    search_from = 0
     while True:
-        m = pat.search(out, search_from)
+        sc = Scan(out)
+        m = pat.search(sc.code_text)
         if m is None:
             return out
-        if _in_string(out, m.start(2)):  # literal text, not a table position
-            search_from = m.end()
-            continue
-        open_paren = out.index("(", m.end(2))
-        end = _find_balanced(out, open_paren)
-        raw_args = _split_args(out[open_paren + 1 : end - 1])
+        open_paren = m.end() - 1
+        end = sc.end_of(open_paren)
+        raw_args = split_args(out[open_paren + 1 : end - 1])
         fname = m.group(2).lower()
 
         def _lit(a: str) -> str:
@@ -423,7 +398,7 @@ def bind_sql_table_functions(spark: SparkSession, sql: str) -> str:
                 # depth-aware split (round 16, advisor #3): a bare
                 # str.split(',') mis-split parameterized types —
                 # 'a Decimal(10,2)' became two bogus column specs
-                for spec in _split_args(args[0]):
+                for spec in split_args(args[0]):
                     parts = spec.strip().split(None, 1)
                     name = parts[0].strip("`\"")
                     cols.append(name)

@@ -3035,3 +3035,63 @@ def test_exponential_moving_average(spark):
         translate("SELECT exponentialMovingAverage(v, t) FROM e")
     with pytest.raises(ValueError, match="exactly"):
         translate("SELECT exponentialMovingAverage(5)(v) FROM e")
+
+
+# --- single-pass contract --------------------------------------------------
+
+
+@pytest.mark.parametrize("depth", [1, 10, 40])
+def test_translate_runs_each_pass_once(monkeypatch, depth):
+    """The rewrite passes run once per statement, whatever the nesting:
+    the call mapping walks argument spans itself, not translate()."""
+    from mcp_clickhouse_spark import dialect
+
+    calls = {"_rewrite_division": 0, "_rewrite_in_operator": 0}
+    for name in calls:
+        def counted(sql, _fn=getattr(dialect, name), _name=name):
+            calls[_name] += 1
+            return _fn(sql)
+
+        monkeypatch.setattr(dialect, name, counted)
+    body = "toString(" * depth + "a / b + toInt64(x IN (1, 2))" + ")" * depth
+    translate(f"SELECT {body} AS v FROM t")
+    assert calls == {"_rewrite_division": 1, "_rewrite_in_operator": 1}
+
+
+def test_mapped_arguments_are_rewritten_once():
+    """A division or IN list inside a mapped call's arguments gets one
+    guard, not one per nesting level."""
+    div = translate("SELECT round(a / b, 2) FROM t")
+    assert div.count("double('NaN')") == 1
+    in_list = translate("SELECT toInt64(x IN (1, 2, NULL)) FROM t")
+    assert in_list.count("IS NOT NULL") == 1
+
+
+_LONG = "(" + " + ".join(["l"] * 80) + ")"  # past the lambda-binding threshold
+_WEEKS = "SELECT toYearWeek(addDays(toDate(toYearWeek(d, 3)), 1), 1) AS w FROM t"
+_DIVS = f"SELECT {' / '.join([_LONG] * 4)} AS q FROM t"
+
+
+def test_translate_is_deterministic():
+    for sql in (_WEEKS, _DIVS):
+        first = translate(sql)
+        assert re.search(r"__(b|wk)1\b", first)
+        assert translate(sql) == first
+
+
+def test_translate_is_deterministic_across_threads():
+    """Lambda variables are numbered per call, so executor threads that
+    translate at once each get the single-thread text."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    expected = {sql: translate(sql) for sql in (_WEEKS, _DIVS)}
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            futures = [pool.submit(translate, sql) for sql in expected for _ in range(40)]
+            results = [f.result(timeout=120) for f in futures]
+    finally:
+        sys.setswitchinterval(old)
+    assert results == [expected[sql] for sql in expected for _ in range(40)]

@@ -25,10 +25,10 @@ import pytest
 
 from mcp_clickhouse_spark.dialect import (
     _nonzero_num_literal,
-    _strip_comments,
     ch_type_to_spark,
     translate,
 )
+from mcp_clickhouse_spark.sqltext import strip_comments
 
 
 def _val(spark, ch_sql):
@@ -64,15 +64,15 @@ class TestCommentStripping:
 
     def test_bare_hash_token_is_not_a_comment(self):
         # CH needs '#!' or '# ' — '#7' must survive as text
-        assert "#7" in _strip_comments("SELECT '#7', a #7")
+        assert "#7" in strip_comments("SELECT '#7', a #7")
         # ... inside a string it always survives
-        assert _strip_comments("SELECT '#! x'") == "SELECT '#! x'"
+        assert strip_comments("SELECT '#! x'") == "SELECT '#! x'"
 
     def test_unterminated_block_runs_to_end(self):
-        assert _strip_comments("SELECT 1 /* dangling") == "SELECT 1  "
+        assert strip_comments("SELECT 1 /* dangling") == "SELECT 1  "
 
     def test_token_boundary_preserved(self):
-        assert _strip_comments("SELECT a/*c*/b") == "SELECT a b"
+        assert strip_comments("SELECT a/*c*/b") == "SELECT a b"
 
 
 class TestScientificNotationDivision:

@@ -1,8 +1,29 @@
-"""Read-only classifier (A11) — the known-hard guard, no engine needed."""
+"""Read-only classifier (A11) — the known-hard guard, no engine needed,
+plus the literal and comment bypasses run end to end through both gates."""
 
 import pytest
 
-from mcp_clickhouse_spark.readonly import ReadOnlyViolation, check_read_only
+from mcp_clickhouse_spark import tools
+from mcp_clickhouse_spark.dialect import translate
+from mcp_clickhouse_spark.readonly import (
+    ReadOnlyViolation,
+    check_read_only,
+    check_read_only_plan,
+)
+
+# Writes that hide behind a literal the gate must end where the engine
+# does: ``'a\\'`` is the literal ``a\`` (the backslash escapes the
+# backslash, not the quote), Spark's raw literal ``r'a\'`` takes no
+# escapes at all, and ``# …`` is a ClickHouse line comment holding a lone
+# quote.
+BYPASSES = [
+    ("spark", "WITH s AS (SELECT 'a\\\\' AS c) INSERT INTO ro_tt SELECT * FROM s"),
+    ("spark", "WITH s AS (SELECT r'a\\' AS c) INSERT INTO ro_tt SELECT * FROM s -- '"),
+    (
+        "clickhouse",
+        "WITH s AS (SELECT 'b' AS c) # '\nINSERT INTO ro_tt SELECT * FROM s -- '",
+    ),
+]
 
 
 @pytest.mark.parametrize(
@@ -23,6 +44,9 @@ from mcp_clickhouse_spark.readonly import ReadOnlyViolation, check_read_only
         "/* block */ SELECT 1",
         "SELECT 1;",  # trailing semicolon ok
         "SELECT '; DROP TABLE users' AS s",  # write keyword inside a string
+        "SELECT 'a\\\\' AS s, 'x; y' AS t",  # escaped backslash ends the literal
+        "SELECT 1 AS a # note; x",  # ClickHouse line comment
+        "SELECT r'a\\' AS s, 'x; y' AS t",  # raw literal: no escapes
     ],
 )
 def test_allowed(sql):
@@ -60,6 +84,7 @@ def test_allowed(sql):
         "WITH s AS (SELECT 1 AS x) UPDATE t SET a = 1",
         "WITH s AS (SELECT 1) MERGE INTO t USING s ON t.id = s.x WHEN MATCHED THEN DELETE",
         "EXPLAIN WITH s AS (SELECT 1) INSERT INTO t SELECT * FROM s",
+        *(sql for _dialect, sql in BYPASSES),
     ],
 )
 def test_rejected(sql):
@@ -104,3 +129,31 @@ def test_replace_table_still_rejected():
         check_read_only("REPLACE TABLE t AS SELECT 1")
     with pytest.raises(ReadOnlyViolation):
         check_read_only("WITH s AS (SELECT 1) DELETE FROM t WHERE 1=1")
+
+
+@pytest.mark.parametrize("dialect, sql", BYPASSES)
+def test_plan_gate_sees_through_cte(spark, dialect, sql):
+    """The parser-backed gate alone rejects both bypasses: the statement
+    under the CTE's ``UnresolvedWith`` is what gets classified."""
+    if dialect == "clickhouse":
+        sql = translate(sql)
+    with pytest.raises(ReadOnlyViolation, match="InsertInto"):
+        check_read_only_plan(spark, sql)
+
+
+@pytest.mark.parametrize("disabled", [None, "check_read_only", "check_read_only_plan"])
+@pytest.mark.parametrize("dialect, sql", BYPASSES)
+def test_bypass_leaves_table_unchanged(spark, tmp_path, monkeypatch, dialect, sql, disabled):
+    """Each gate alone, and both together, stop the write before the
+    engine runs it: the target parquet table keeps its rows."""
+    spark.sql("DROP TABLE IF EXISTS ro_tt")
+    spark.sql(f"CREATE TABLE ro_tt (c STRING) USING parquet LOCATION '{tmp_path}/ro_tt'")
+    try:
+        spark.sql("INSERT INTO ro_tt VALUES ('seed')")
+        if disabled:
+            monkeypatch.setattr(tools, disabled, lambda *a: None)
+        with pytest.raises(tools.ToolError, match="not allowed"):
+            tools.run_select_query(spark, sql, dialect=dialect)
+        assert spark.table("ro_tt").count() == 1
+    finally:
+        spark.sql("DROP TABLE IF EXISTS ro_tt")

@@ -257,6 +257,32 @@ def test_sql_table_function_string_escapes(spark):
     assert res["rows"] == [["", 0]]
 
 
+@pytest.mark.parametrize(
+    "sql",
+    [
+        "SELECT 1 AS a -- FROM system.tables",
+        "SELECT 1 AS a /* JOIN system.columns ON 1 = 1, FROM numbers(3) */",
+        "SELECT 'FROM numbers(3) JOIN system.tables' AS s",
+        "SELECT 1 AS a # FROM numbers(3)",
+    ],
+)
+def test_binders_match_code_only(monkeypatch, sql):
+    """A ``system.*`` or table-function mention in a comment or a quoted
+    span registers nothing (no catalog sweep) and leaves the text as is."""
+    from mcp_clickhouse_spark.sources import system_tables, table_functions
+
+    calls = []
+    monkeypatch.setattr(system_tables, "_reg_catalog", calls.append)
+    monkeypatch.setattr(
+        system_tables, "_REGISTRARS", dict.fromkeys(system_tables._REGISTRARS, calls.append)
+    )
+    monkeypatch.setattr(table_functions, "show_tables", lambda *a: calls.append(a) or [])
+    spark = object()  # any use of the session fails the test
+    assert system_tables.bind_system_tables(spark, sql) == sql
+    assert table_functions.bind_sql_table_functions(spark, sql) == sql
+    assert calls == []
+
+
 def test_sqlite_python_datasource_with_pushdown(spark, tmp_path):
     """SQLite via the official PySpark Python Data Source API: filters push
     into SQLite as WHERE clauses (pushFilters, Spark 4.1), untranslatable
