@@ -1722,7 +1722,7 @@ def streaming_clean_corpus(spark, sf_dir):
         .select("chunk_key")
     )
 
-    path = _split_layout(
+    path, _ = _split_layout(
         spark, os.path.join(sf_dir, "documents.parquet"), "documents"
     )
     st = scrub_pii(stream_documents(spark, path, max_files_per_trigger=1))

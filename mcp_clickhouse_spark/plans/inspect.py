@@ -16,16 +16,6 @@ def explain_formatted(df: DataFrame) -> str:
     )
 
 
-def _node_offset(ln: str) -> int:
-    """Effective tree depth: width of the glyph prefix (spaces + ':+-').
-    A marker-position regex fails here — a materialized cache's stored
-    plan prints WITHOUT '+-' markers under its '== Final Plan ==' header,
-    only deeper plain indentation."""
-    if not ln.strip():
-        return -1
-    return len(ln) - len(ln.lstrip(" :+-"))
-
-
 def count_nodes(plan: str, node: str) -> int:
     """Operator occurrences in the plan TREE only (formatted mode repeats
     every node in the details section).

@@ -15,10 +15,15 @@ materialization).
 from __future__ import annotations
 
 import os
+import shutil
 from typing import Iterable
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_type
 
 # The driver-generated testdata tables (TESTDATA.md).
 TESTDATA_TABLES = (
@@ -108,44 +113,41 @@ def get_spark(
 # restarted session never sees stale plans.
 _TABLE_CACHE: dict[tuple[int, str, str], DataFrame] = {}
 
-# --- storage-layout ingest: split single-row-group tables -------------------
-# The driver testdata ships as ONE parquet file with ONE row group per table,
-# which caps every scan stage at one task no matter how many cores the
-# session has (row group = minimum split unit).  A warehouse owns its storage
-# layout, so on first access we rewrite such tables once into an N-file copy
-# under a content-keyed cache dir and read that from then on.  Interleaved
-# A/B at sf0.1: headline total 6.90 s → 4.53 s.
-# At 100 TB this code self-disables: real tables arrive as many files /
-# many row groups and take the `return path` below.
-_WAREHOUSE_ROOT = os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/spark_graft_warehouse")
-# Round-17 optimization (guide §6.1/§2.2): each rewritten file is one row
-# group = one scan task, so the file count IS the scan parallelism.  The
-# r16 defaults (75k rows/file, cap 8) left orders at 2 tasks and events at
-# 4 on a 32-core box — job-profile showed scan stages as the bottleneck of
-# the map-heavy queries (pipe_text_stats: 1.0 s of task time on 4 tasks).
-# The 100 TB case is unaffected (multi-row-group inputs skip the rewrite).
-# Defaults re-measured r17 (interleaved A/B, min-of-3×3): 18,750 rows/file
-# brings orders (150k rows) from 2 scan tasks to 8 and events (300k) from 4
-# to 8 — every orders/events-scanning headline query improved (events
-# windows −0.02 s, scan_projection/agg_count_distinct −0.01 s each, total
-# −0.17 s) with no regression.
+# --- storage layout: split single-row-group tables ---------------------------
+# A row group is the smallest unit a parquet scan task reads, and the
+# testdata ships every table as ONE file with ONE row group, so each scan of
+# it would run as one task whatever the core count.  A warehouse owns its
+# storage layout: on first access such a table is copied once, by pyarrow
+# (no Spark job), into N contiguous one-row-group files under a directory
+# keyed by the source's name, size, mtime and N.  Tables that arrive as many
+# files or many row groups, as real ones at scale do, are read in place.
 #
-# Round-18 (VERDICT items 2/8 — make scan parallelism follow the session's
-# cores when the data warrants it): the flat cap of 8 left sf1's 6M-row
-# lineitem at 8 scan tasks on 32 cores.  The cap is now core-aware for BIG
-# tables only: rows >= _SPLIT_BIG_ROWS get max(8, cores // 2) files, smaller
-# tables keep 8.  Measured at sf1/32 cores (interleaved ab_bench,
-# min-of-3): cap 8 → 7.250 s, cap 16 → 6.558 s, cap 32 → 7.005 s — 16
-# (= 32 cores // 2) is the sweet spot; at 8 cores the formula yields 8,
-# byte-identical to the r17 layout.  The 1M-row gate keeps the WHOLE
-# sf0.1 layout unchanged (A/B: a 500k gate let lineitem cross and cost
-# ~+0.01 s each on q1/join_star; a flat 16 cap also cost +0.013 s on
-# join_asof) — sf0.1 stays parallelism-capped by design, which bench.py
-# documents in its output; the scaling signal lives at sf1 and above.
-# _SPLIT_MAX_FILES is the hard ceiling.
+# The file count is the scan parallelism:
+# - _SPLIT_ROWS: 18,750 rows per file bring orders (150k rows at sf0.1) to 8
+#   scan tasks; every orders/events-scanning bench query gained;
+# - below _SPLIT_BIG_ROWS at most 8 files: 16 for sf0.1's 600k-row lineitem
+#   cost ~0.01 s per join query;
+# - from _SPLIT_BIG_ROWS up, max(8, cores // 2) files, at most
+#   _SPLIT_MAX_FILES: sf1's 6M-row lineitem on 32 cores ran the bench in
+#   7.25 s with 8 files, 6.56 s with 16 and 7.01 s with 32;
+# - _SPLIT_CPU_TABLES: shingling and vector math are CPU-heavy per row, so
+#   from _SPLIT_CPU_MIN_ROWS rows these get at least 4 files (8 was a wash).
+_WAREHOUSE_ROOT = os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/spark_graft_warehouse")
 _SPLIT_ROWS = 18_750
 _SPLIT_MAX_FILES = 32
 _SPLIT_BIG_ROWS = 1_000_000
+_SPLIT_CPU_TABLES = {"documents": 4, "embeddings": 4}
+_SPLIT_CPU_MIN_ROWS = 2_000
+
+# Parquet leaf annotations whose Spark type the footer mapping knows, and
+# the served values of the confs it assumes.  Anything else (INT96, unsigned
+# integers, ENUM/JSON/UUID, another conf value) is left to Spark's inference.
+_FOOTER_LEAF_TYPES = {"NONE", "STRING", "INT", "DECIMAL", "DATE", "TIMESTAMP"}
+_FOOTER_CONFS = {
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "true",
+    "spark.sql.parquet.binaryAsString": "false",
+}
 
 
 def _split_file_cap(spark: SparkSession, rows: int) -> int:
@@ -154,58 +156,87 @@ def _split_file_cap(spark: SparkSession, rows: int) -> int:
     return min(max(8, spark.sparkContext.defaultParallelism // 2), _SPLIT_MAX_FILES)
 
 
-# CPU-heavy per-row consumers (shingling, vector math) want scan parallelism
-# even at small row counts.  Doubling documents to 8 files was measured as
-# a wash at sf0.1 on 32 cores (pipe_text_stats −0.02 s, pipe_minhash_lsh
-# +0.07 s).
-_SPLIT_CPU_TABLES = {"documents": 4, "embeddings": 4}
-_SPLIT_CPU_MIN_ROWS = 2_000
+def _spark_type(t: pa.DataType) -> T.DataType:
+    """The type Spark's parquet reader gives a column of arrow type ``t``
+    under _FOOTER_CONFS; raises TypeError where the mapping cannot be sure."""
+    if pa.types.is_timestamp(t):  # NANOS: raw int64; tz-naive (isAdjustedToUTC=false): NTZ
+        if t.unit == "ns":
+            return T.LongType()
+        return T.TimestampNTZType() if t.tz is None else T.TimestampType()
+    if pa.types.is_unsigned_integer(t):
+        raise TypeError(f"unsigned integer {t}")
+    if pa.types.is_list(t):
+        return T.ArrayType(_spark_type(t.value_type), True)
+    if pa.types.is_map(t):
+        return T.MapType(_spark_type(t.key_type), _spark_type(t.item_type), True)
+    if pa.types.is_struct(t):
+        return T.StructType([T.StructField(f.name, _spark_type(f.type), True) for f in t])
+    return from_arrow_type(t)
 
 
-def _split_layout(spark: SparkSession, path: str, name: str) -> str:
-    """Return the path read_table should scan: the original file, or a
-    multi-file rewritten copy when the original is a single row group big
-    enough that one scan task would bottleneck."""
+def _footer_schema(spark: SparkSession, pf: pq.ParquetFile) -> T.StructType | None:
+    """The schema ``spark.read.parquet`` infers for this file, built from its
+    footer without a Spark job (every field nullable, as Spark reads it), or
+    None when a column or a conf falls outside what the mapping knows."""
+    leaves = pf.schema
+    if any(spark.conf.get(k).lower() != v for k, v in _FOOTER_CONFS.items()) or any(
+        c.physical_type == "INT96" or c.logical_type.type not in _FOOTER_LEAF_TYPES
+        for c in map(leaves.column, range(len(leaves)))
+    ):
+        return None
     try:
-        import pyarrow.parquet as pq
+        return T.StructType(
+            [T.StructField(f.name, _spark_type(f.type), True) for f in leaves.to_arrow_schema()]
+        )
+    except TypeError:
+        return None
 
-        meta = pq.ParquetFile(path).metadata
-    except Exception:
-        return path
-    if meta.num_row_groups != 1:
-        return path
-    rows = meta.num_rows
-    n = min((rows + _SPLIT_ROWS - 1) // _SPLIT_ROWS, _split_file_cap(spark, rows))
-    if name in _SPLIT_CPU_TABLES and rows >= _SPLIT_CPU_MIN_ROWS:
-        n = max(n, _SPLIT_CPU_TABLES[name])
-    if n < 2:
-        return path
-    st = os.stat(path)
-    digest = f"{name}-{st.st_size}-{int(st.st_mtime)}-{n}"
-    dst = os.path.join(_WAREHOUSE_ROOT, digest)
-    if os.path.isdir(dst):
-        return dst
+
+def _split_layout(spark: SparkSession, path: str, name: str) -> tuple[str, T.StructType | None]:
+    """Return the path read_table should scan and its schema from the parquet
+    footer (None: let Spark infer it).  The path is the original file, or a
+    multi-file copy when the original is a single row group big enough that
+    one scan task would bottleneck."""
     try:
-        os.makedirs(_WAREHOUSE_ROOT, exist_ok=True)
+        pf = pq.ParquetFile(path)
+    except (OSError, pa.ArrowException):
+        return path, None
+    with pf:
+        schema = _footer_schema(spark, pf)
+        meta = pf.metadata
+        # Only a mapped schema is copied: pyarrow round-trips exactly the
+        # types the mapping knows (an INT96 column would come back as NANOS).
+        if schema is None or meta.num_row_groups != 1:
+            return path, schema
+        rows = meta.num_rows
+        n = min(-(-rows // _SPLIT_ROWS), _split_file_cap(spark, rows))
+        if name in _SPLIT_CPU_TABLES and rows >= _SPLIT_CPU_MIN_ROWS:
+            n = max(n, _SPLIT_CPU_TABLES[name])
+        if n < 2:
+            return path, schema
+        st = os.stat(path)
+        dst = os.path.join(_WAREHOUSE_ROOT, f"{name}-{st.st_size}-{int(st.st_mtime)}-{n}")
+        if os.path.isdir(dst):
+            return dst, schema
         tmp = f"{dst}.tmp-{os.getpid()}"
-        spark.read.parquet(path).repartition(int(n)).write.mode("overwrite").parquet(tmp)
         try:
+            os.makedirs(tmp, exist_ok=True)
+            for i, batch in enumerate(pf.iter_batches(batch_size=-(-rows // n))):
+                pq.write_table(pa.Table.from_batches([batch]), f"{tmp}/part-{i:05d}.parquet")
             os.rename(tmp, dst)  # atomic: concurrent processes race safely
-        except OSError:
-            import shutil
-
-            shutil.rmtree(tmp, ignore_errors=True)  # lost the race — reuse winner's
-        return dst if os.path.isdir(dst) else path
-    except Exception:
-        return path  # read-only tmp, disk full, … — the original always works
+        except (OSError, pa.ArrowException):  # read-only tmp, disk full, lost race: …
+            shutil.rmtree(tmp, ignore_errors=True)
+    # … the race winner's copy, or else the original, always works
+    return (dst if os.path.isdir(dst) else path), schema
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table as a DataFrame, normalizing types.
 
-    ``events.ts`` arrives as raw nanoseconds (via ``nanosAsLong``); we
-    truncate to microseconds exactly like ``CAST(ts AS TIMESTAMP)`` does in
-    DuckDB (floor division), entirely inside whole-stage codegen.
+    ``events.ts`` arrives as raw nanoseconds (via ``nanosAsLong``) when the
+    file stores TIMESTAMP(NANOS); we truncate to microseconds exactly like
+    ``CAST(ts AS TIMESTAMP)`` does in DuckDB (floor division), entirely
+    inside whole-stage codegen.
     """
     key = (id(spark), sf_dir, name)
     cached = _TABLE_CACHE.get(key)
@@ -214,9 +245,8 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         # Runtime-settable; needed even when the caller built its own session.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(
-        _split_layout(spark, os.path.join(sf_dir, f"{name}.parquet"), name)
-    )
+    path, schema = _split_layout(spark, os.path.join(sf_dir, f"{name}.parquet"), name)
+    df = (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # ns → µs floor-truncation as TIMESTAMP_NTZ: timezone-independent and
         # identical to DuckDB's CAST(ts AS TIMESTAMP).

@@ -25,7 +25,10 @@ from __future__ import annotations
 
 import re as _re
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _parse_datatype_string
 
 from mcp_clickhouse_spark.sqltext import Scan
 
@@ -63,10 +66,17 @@ def bind_system_tables(spark: SparkSession, sql: str) -> str:
     return "".join(out)
 
 
-def _reg_one(spark: SparkSession) -> None:
-    spark.createDataFrame([(0,)], "dummy tinyint").createOrReplaceTempView(
-        "_system_one"
+def snapshot(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """A small result built in Python, as a JVM ``LocalRelation`` (built from
+    Arrow; Python rows would plan a Python RDD scan, run by Python workers)."""
+    schema = to_arrow_schema(_parse_datatype_string(ddl))
+    return spark.createDataFrame(
+        pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows], schema=schema)
     )
+
+
+def _reg_one(spark: SparkSession) -> None:
+    snapshot(spark, [(0,)], "dummy tinyint").createOrReplaceTempView("_system_one")
 
 
 def _reg_numbers(spark: SparkSession) -> None:
@@ -79,7 +89,7 @@ def _reg_databases(spark: SparkSession) -> None:
     from mcp_clickhouse_spark.catalog import list_database_names
 
     rows = [(d, "Atomic") for d in list_database_names(spark)]
-    spark.createDataFrame(rows, "name string, engine string").createOrReplaceTempView(
+    snapshot(spark, rows, "name string, engine string").createOrReplaceTempView(
         "_system_databases"
     )
 
@@ -122,14 +132,14 @@ def _reg_catalog(spark: SparkSession) -> None:
         )
         for pos, c in enumerate(t.columns, start=1):
             crows.append((db, name, c.name, c.column_type, pos, c.comment))
-    spark.createDataFrame(
-        trows,
+    snapshot(
+        spark, trows,
         "database string, name string, engine string, engine_full string, "
         "sorting_key string, primary_key string, create_table_query string, "
         "comment string",
     ).createOrReplaceTempView("_system_tables")
-    spark.createDataFrame(
-        crows,
+    snapshot(
+        spark, crows,
         "database string, table string, name string, type string, "
         "position int, comment string",
     ).createOrReplaceTempView("_system_columns")
@@ -179,8 +189,8 @@ def _reg_functions(spark: SparkSession) -> None:
         if n not in seen:
             seen.add(n)
             rows.append((n, 0, 1, "", "spark"))
-    spark.createDataFrame(
-        rows,
+    snapshot(
+        spark, rows,
         "name string, is_aggregate tinyint, case_insensitive tinyint, "
         "alias_to string, origin string",
     ).createOrReplaceTempView("_system_functions")
@@ -204,8 +214,8 @@ def _reg_processes(spark: SparkSession) -> None:
     clients' queries); concurrent work within the session is visible
     through the Spark UI / status tracker, which carries job groups,
     not SQL texts."""
-    spark.createDataFrame(
-        [],
+    snapshot(
+        spark, [],
         "query_id string, user string, elapsed double, query string",
     ).createOrReplaceTempView("_system_processes")
 

@@ -189,7 +189,7 @@ def _execute(spark: SparkSession, query: str, dialect: str = "spark") -> DataFra
     # ClickHouse-style table functions in FROM position (file/url/s3/hdfs/
     # sqlite/numbers — chdb_prompt.py:28-60) bind to views/inline rewrites
     # BEFORE dialect translation, in both dialects (Spark SQL has none).
-    from mcp_clickhouse_spark.sources.system_tables import bind_system_tables
+    from mcp_clickhouse_spark.sources.system_tables import bind_system_tables, snapshot
     from mcp_clickhouse_spark.sources.table_functions import bind_sql_table_functions
 
     # CH SHOW PROCESSLIST == SELECT * FROM system.processes (round 17,
@@ -229,16 +229,14 @@ def _execute(spark: SparkSession, query: str, dialect: str = "spark") -> DataFra
                     ok = spark.catalog.tableExists(name)
                 except Exception:  # noqa: BLE001 — malformed name → 0
                     ok = False
-            return spark.createDataFrame(
-                [(1 if ok else 0,)], "result tinyint"
-            )
+            return snapshot(spark, [(1 if ok else 0,)], "result tinyint")
 
         ms = re.match(r"(?is)^\s*EXPLAIN\s+SYNTAX\b", query)
         if ms:
             # CH EXPLAIN SYNTAX shows the rewritten query — here, the
             # Spark SQL the dialect layer produces (round 7)
-            return spark.createDataFrame(
-                [(translate(query[ms.end() :]).strip(),)], "query string"
+            return snapshot(
+                spark, [(translate(query[ms.end() :]).strip(),)], "query string"
             )
         query = translate(query)
         # Python-UDF-backed helpers (murmurHash3_64, hypothesis-test
@@ -349,10 +347,3 @@ def health_check(spark: SparkSession) -> dict[str, Any]:
         return {"status": 200, "message": f"OK - Connected to Spark {spark.version}"}
     except Exception as e:  # noqa: BLE001
         return {"status": 503, "message": f"Health check failed: {e}"}
-
-
-# --- convenience: reference-style result for DataFrames ---------------------
-
-
-def dataframe_to_result(df: DataFrame) -> dict[str, Any]:
-    return {"columns": list(df.columns), "rows": [list(r) for r in df.collect()]}

@@ -152,6 +152,137 @@ def test_split_layout_rewrites_single_row_group(spark, tmp_path, monkeypatch):
     S._TABLE_CACHE.clear()
 
 
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_footer_schema_equals_inferred(spark, sf_dir, sf, tmp_path):
+    """read_table hands Spark each table's schema built from the parquet
+    footer, so Spark skips inference; it must be the schema Spark infers,
+    for every testdata table and for TIMESTAMP(NANOS) under nanosAsLong."""
+    import glob
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mcp_clickhouse_spark import session as S
+
+    paths = sorted(glob.glob(os.path.join(os.path.dirname(sf_dir), sf, "*.parquet")))
+    assert {os.path.basename(p)[:-8] for p in paths} >= set(S.TESTDATA_TABLES)
+    nanos = str(tmp_path / "events.parquet")
+    pq.write_table(
+        pa.table({"event_id": pa.array([1, 2]), "ts": pa.array([1, 2], pa.timestamp("ns"))}),
+        nanos,
+    )
+    assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+    for path in paths + [nanos]:
+        footer = S._footer_schema(spark, pq.ParquetFile(path))
+        assert footer == spark.read.parquet(path).schema, path
+    assert S._footer_schema(spark, pq.ParquetFile(nanos))["ts"].dataType.typeName() == "long"
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    try:  # a conf the mapping depends on, at another value: Spark infers
+        assert S._footer_schema(spark, pq.ParquetFile(nanos)) is None
+    finally:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+
+
+def test_int96_table_is_read_with_inferred_schema(spark, tmp_path, monkeypatch):
+    """A Spark-written INT96 timestamp (pyarrow shows it as timestamp[ns],
+    Spark reads it as TIMESTAMP) is outside the footer mapping: read_table
+    lets Spark infer the schema and reads the file in place."""
+    import glob
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from mcp_clickhouse_spark import session as S
+
+    monkeypatch.setattr(S, "_WAREHOUSE_ROOT", str(tmp_path / "wh"))
+    src = spark.range(40_000).selectExpr(
+        "id", "timestamp_seconds(id) AS ts", "CAST(timestamp_seconds(id) AS TIMESTAMP_NTZ) AS ntz"
+    )
+    src.coalesce(1).write.parquet(str(tmp_path / "stage"))
+    os.makedirs(tmp_path / "sf")
+    path = str(tmp_path / "sf" / "t96.parquet")
+    shutil.copy(glob.glob(str(tmp_path / "stage" / "part-*.parquet"))[0], path)
+    assert pq.ParquetFile(path).schema.column(1).physical_type == "INT96"
+    assert S._split_layout(spark, path, "t96") == (path, None)
+    S._TABLE_CACHE.clear()
+    try:
+        df = S.read_table(spark, str(tmp_path / "sf"), "t96")
+        assert df.schema == spark.read.parquet(path).schema
+        assert dict(df.dtypes)["ts"] == "timestamp"
+        assert df.exceptAll(src).count() == 0 and src.exceptAll(df).count() == 0
+    finally:
+        S._TABLE_CACHE.clear()
+    assert not os.path.exists(tmp_path / "wh")
+
+
+def test_register_testdata_launches_no_spark_job(spark, sf_dir, tmp_path, monkeypatch):
+    """Cold start: on an empty split-layout warehouse, registering the ten
+    tables (with the lineitem/orders/documents/... split copies) runs no
+    Spark job: schemas come from the footers and pyarrow writes the copies."""
+    import os
+
+    from mcp_clickhouse_spark import session as S
+
+    monkeypatch.setattr(S, "_WAREHOUSE_ROOT", str(tmp_path / "wh"))
+    # own temp views: the suite's shared session keeps its sf0.001 catalog
+    fresh = spark.newSession()
+    sc = spark.sparkContext
+    group = "test-register-testdata-no-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        S.register_testdata(fresh, os.path.join(os.path.dirname(sf_dir), "sf0.01"))
+    finally:
+        sc.setJobGroup("", "")
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+        for key in [k for k in S._TABLE_CACHE if k[0] == id(fresh)]:
+            del S._TABLE_CACHE[key]
+    assert jobs == []
+    assert any(d.startswith("lineitem-") for d in os.listdir(tmp_path / "wh"))
+    assert fresh.table("lineitem").count() == 60_000
+
+
+@pytest.mark.parametrize("name,files", [("lineitem", 8), ("documents", 4)])
+def test_split_copy_keeps_rows_and_file_count(spark, sf_dir, tmp_path, monkeypatch, name, files):
+    """At sf0.1 the pyarrow split copy holds the source's row multiset in the
+    file count the layout formula gives (lineitem 600k rows: 8 files under
+    the small-table cap; documents 5k rows: the CPU-table minimum of 4),
+    one row group per file."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from mcp_clickhouse_spark import session as S
+
+    monkeypatch.setattr(S, "_WAREHOUSE_ROOT", str(tmp_path / "wh"))
+    src = os.path.join(os.path.dirname(sf_dir), "sf0.1", f"{name}.parquet")
+    dst, schema = S._split_layout(spark, src, name)
+    assert dst != src and schema is not None
+    parts = sorted(os.listdir(dst))
+    assert len(parts) == files
+    assert all(pq.ParquetFile(os.path.join(dst, p)).metadata.num_row_groups == 1 for p in parts)
+    want = pq.read_table(src)
+    got = pq.read_table(dst).select(want.column_names)
+    keys = [(c, "ascending") for c in want.column_names]
+    assert got.num_rows == want.num_rows
+    assert got.sort_by(keys).equals(want.sort_by(keys))
+
+
+def test_split_layout_unwritable_warehouse_reads_in_place(spark, sf_dir, tmp_path, monkeypatch):
+    """A warehouse the copy cannot be written to (here: below a regular
+    file) leaves the original file to be read, with its footer schema."""
+    import os
+
+    from mcp_clickhouse_spark import session as S
+
+    (tmp_path / "file").write_text("")
+    monkeypatch.setattr(S, "_WAREHOUSE_ROOT", str(tmp_path / "file" / "wh"))
+    src = os.path.join(os.path.dirname(sf_dir), "sf0.01", "lineitem.parquet")
+    path, schema = S._split_layout(spark, src, "lineitem")
+    assert path == src and schema == spark.read.parquet(src).schema
+
+
 def test_prepared_plan_replay_fresh_execution(spark):
     """run_prepared memoizes the analyzed plan but each call must yield a NEW
     Dataset (fresh QueryExecution → fresh shuffles), identical results."""

@@ -584,6 +584,27 @@ def test_system_tables_bind(spark, sf_dir):
     assert lit["rows"] == [["see system.tables docs"]]
 
 
+def test_system_snapshots_are_local_relations(spark, sf_dir):
+    """Every ``system.*`` catalog snapshot, and the CH ``EXISTS`` and
+    ``EXPLAIN SYNTAX`` results, analyze to a JVM LocalRelation, so a query
+    reading them runs no Python worker."""
+    from mcp_clickhouse_spark.session import register_testdata
+    from mcp_clickhouse_spark.sources.system_tables import bind_system_tables
+    from mcp_clickhouse_spark.tools import _execute
+
+    def leaf(df):
+        plan = df._jdf.queryExecution().analyzed().toString()
+        return "LocalRelation" in plan and "LogicalRDD" not in plan
+
+    register_testdata(spark, sf_dir, ["nation"])
+    views = ("one", "tables", "columns", "databases", "functions", "processes")
+    bind_system_tables(spark, " ".join(f"system.{v}" for v in views))
+    for v in views:
+        assert leaf(spark.table(f"_system_{v}")), v
+    assert leaf(_execute(spark, "EXISTS TABLE nation", "clickhouse"))
+    assert leaf(_execute(spark, "EXPLAIN SYNTAX SELECT 1", "clickhouse"))
+
+
 def test_values_view_cluster_merge_table_functions(spark):
     """Round-15 binder closures: CH values()/view()/cluster()/merge()
     table functions in FROM position (previously leaked to Spark as
