@@ -38,6 +38,7 @@ QUOTE_CHARS = ("'", '"', "`")
 
 # Every token that opens a quoted span or a comment, or changes depth.
 _LEX = re.compile(r"['\"`()\[\]]|--|/\*|#(?=[!\s])")
+_COMMA_OR_OPEN = re.compile(r"[,(\[]")
 
 
 def skip_quoted(s: str, i: int) -> int:
@@ -139,6 +140,12 @@ class Scan:
         """The bracket paired with the code bracket at ``pos``, else None."""
         return self._partner.get(pos)
 
+    def span(self, pos: int) -> tuple[int, int]:
+        """``pos`` lies in a quoted span or a comment: that span's
+        ``(start, end)``."""
+        k = bisect_right(self._starts, pos) - 1
+        return self._starts[k], self._ends[k]
+
     def top(self, pos: int) -> bool:
         """``pos`` is code at depth 0."""
         return self.code(pos) and self.depth(pos) == 0
@@ -149,6 +156,43 @@ class Scan:
         if close is None or close < pos:
             raise ValueError("unbalanced parentheses in SQL")
         return close + 1
+
+    def args(self, lo: int, hi: int) -> list[str]:
+        """Split ``sql[lo:hi]`` on its commas at the depth of ``lo``, each
+        part stripped; an empty last part is dropped."""
+        sql = self.sql
+        base = self.depth(lo)
+        out: list[str] = []
+        start = i = lo
+        while (m := _COMMA_OR_OPEN.search(sql, i, hi)) is not None:
+            j = m.start()
+            if not self.code(j):
+                i = self.span(j)[1]
+            elif sql[j] != ",":
+                close = self._partner.get(j)
+                i = close + 1 if close is not None and close < hi else j + 1
+            else:
+                if self.depth(j) == base:
+                    out.append(sql[start:j].strip())
+                    start = j + 1
+                i = j + 1
+        tail = sql[start:hi].strip()
+        if tail:
+            out.append(tail)
+        return out
+
+    def word_before(self, pos: int) -> tuple[int, str]:
+        """Skip whitespace back from ``pos``: the index ``k`` of the first
+        other character (-1 at the start of the text) and the identifier
+        that ends at ``k`` (``""`` when ``sql[k]`` is no word character)."""
+        sql = self.sql
+        k = pos - 1
+        while k >= 0 and sql[k].isspace():
+            k -= 1
+        j = k
+        while j >= 0 and (sql[j].isalnum() or sql[j] == "_"):
+            j -= 1
+        return k, sql[j + 1 : k + 1]
 
     @cached_property
     def code_text(self) -> str:
@@ -183,53 +227,7 @@ def strip_comments(sql: str) -> str:
     return "".join(out)
 
 
-def find_balanced(sql: str, start: int) -> int:
-    """``sql[start] == '('``: return the index just past its matching
-    ``)``.  Quoted spans are opaque."""
-    depth = 0
-    i = start
-    while i < len(sql):
-        ch = sql[i]
-        if ch in QUOTE_CHARS:
-            i = skip_quoted(sql, i)
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return i + 1
-        i += 1
-    raise ValueError("unbalanced parentheses in SQL")
-
-
 def split_args(argstr: str) -> list[str]:
     """Split a top-level argument list on commas; quoted spans and
     bracketed groups are opaque."""
-    args: list[str] = []
-    depth = 0
-    cur: list[str] = []
-    i, n = 0, len(argstr)
-    while i < n:
-        ch = argstr[i]
-        if ch in QUOTE_CHARS:
-            j = skip_quoted(argstr, i)
-            cur.append(argstr[i:j])
-            i = j
-            continue
-        if ch in "([":
-            depth += 1
-            cur.append(ch)
-        elif ch in ")]":
-            depth -= 1
-            cur.append(ch)
-        elif ch == "," and depth == 0:
-            args.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-        i += 1
-    tail = "".join(cur).strip()
-    if tail:
-        args.append(tail)
-    return args
+    return Scan(argstr).args(0, len(argstr))

@@ -3,7 +3,9 @@ Spark, assert exact values (the reference's query language accepted as-is)."""
 
 from __future__ import annotations
 
+import gc
 import math
+import time
 import re
 
 import pytest
@@ -580,6 +582,9 @@ def test_extract_settings_edge_cases():
 
     sql, st = extract_settings("SELECT 'FORMAT JSON'")
     assert sql == "SELECT 'FORMAT JSON'" and st == {}
+
+    # the translator drops the same clause, quoted values included
+    assert translate("SELECT 1 AS x SETTINGS k='1,2'") == "SELECT 1 AS x "
 
 
 def test_join_modifier_rewrites_execute(spark):
@@ -1225,6 +1230,8 @@ def test_scalar_with_and_limit_offset(spark):
         "SELECT count(*) + lim AS c FROM small",
     )
     assert row[0] == 13
+    # an item's commas inside brackets do not split the WITH list
+    assert one(spark, "WITH [1, 2] AS arr SELECT arr[2] AS v")[0] == 2
     # MySQL/CH LIMIT offset, n
     rows = run_select_query(
         spark,
@@ -3056,6 +3063,57 @@ def test_translate_runs_each_pass_once(monkeypatch, depth):
     body = "toString(" * depth + "a / b + toInt64(x IN (1, 2))" + ")" * depth
     translate(f"SELECT {body} AS v FROM t")
     assert calls == {"_rewrite_division": 1, "_rewrite_in_operator": 1}
+
+
+_SHAPES = {
+    "subscript": ("a[i]", ", "),
+    "ternary": ("x > 0 ? 1 : 0", ", "),
+    "logical_call": ("and(x, y)", ", "),
+    "tuple_access": ("(1, x).2", ", "),
+}
+
+
+@pytest.mark.parametrize("shape", sorted(_SHAPES))
+def test_translate_time_is_linear(shape):
+    """Each pass reads one scan and splices its edits once, so 8x the
+    terms costs about 8x the time (a rescan per edit made it 29-41x)."""
+    term, sep = _SHAPES[shape]
+    sqls = {k: f"SELECT {sep.join([term] * k)} FROM t" for k in (50, 400)}
+    best = {50: math.inf, 400: math.inf}
+    gc.collect()
+    gc.disable()  # a collection inside one timing would skew the ratio
+    try:
+        for _ in range(3):  # alternate, so both sizes see the same load
+            for k, sql in sqls.items():
+                t0 = time.perf_counter()
+                translate(sql)
+                best[k] = min(best[k], time.perf_counter() - t0)
+    finally:
+        gc.enable()
+    assert best[400] <= 12 * best[50]
+
+
+def test_postfix_casts_map_only_in_code():
+    assert translate("SELECT 'x::UInt32' AS s") == "SELECT 'x::UInt32' AS s"
+    assert translate('SELECT "col::Int8" FROM t') == "SELECT `col::Int8` FROM t"
+    assert translate("SELECT y::UInt32 FROM t") == "SELECT y::BIGINT FROM t"
+
+
+@pytest.mark.parametrize(
+    "cond", [r"s = 'it\'s'", r"(s = 'it\'s')", "s = 'it''s'"]
+)
+def test_ternary_condition_ends_at_the_select(cond):
+    """The condition's left boundary comes from the scan, so an escaped
+    quote in it does not pull the SELECT keyword into the CASE."""
+    out = translate(f"SELECT {cond} ? 1 : 0 AS b FROM t")
+    assert out == f"SELECT CASE WHEN {cond} THEN 1 ELSE 0 END AS b FROM t"
+
+
+def test_subscript_inside_parentheses():
+    """The operand of a subscript ends at the paren that encloses it."""
+    assert translate("SELECT f(a[1]), (b[2]) FROM t") == (
+        "SELECT f(try_element_at(a, 1)), (try_element_at(b, 2)) FROM t"
+    )
 
 
 def test_mapped_arguments_are_rewritten_once():

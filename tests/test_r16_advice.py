@@ -28,7 +28,6 @@ from mcp_clickhouse_spark.dialect import (
     ch_type_to_spark,
     translate,
 )
-from mcp_clickhouse_spark.sqltext import strip_comments
 
 
 def _val(spark, ch_sql):
@@ -61,18 +60,6 @@ class TestCommentStripping:
             _val(spark, "SELECT '/* not a comment */ -- nope' AS s")
             == "/* not a comment */ -- nope"
         )
-
-    def test_bare_hash_token_is_not_a_comment(self):
-        # CH needs '#!' or '# ' — '#7' must survive as text
-        assert "#7" in strip_comments("SELECT '#7', a #7")
-        # ... inside a string it always survives
-        assert strip_comments("SELECT '#! x'") == "SELECT '#! x'"
-
-    def test_unterminated_block_runs_to_end(self):
-        assert strip_comments("SELECT 1 /* dangling") == "SELECT 1  "
-
-    def test_token_boundary_preserved(self):
-        assert strip_comments("SELECT a/*c*/b") == "SELECT a b"
 
 
 class TestScientificNotationDivision:

@@ -227,6 +227,10 @@ class TestLeadLagInFrame:
                 " 1 PRECEDING AND CURRENT ROW) FROM t"
             )
 
+    def test_call_in_string_literal_untouched(self):
+        q = "SELECT 'x leadInFrame(y) OVER ()' AS s"
+        assert translate(q) == q
+
     def test_frameless_respects_default_frame(self, spark):
         # round 17: CH's default frame is RANGE UNBOUNDED PRECEDING →
         # CURRENT ROW, so a frameless leadInFrame only reaches PEERS of
