@@ -34,10 +34,6 @@ Session (read by `session.get_spark` / `session._split_layout`):
     SPARK_GRAFT_DRIVER_MEM        spark.driver.memory (default 8g)
     SPARK_GRAFT_WAREHOUSE         cache dir for split-layout rewrites (default
                                   /tmp/spark_graft_warehouse)
-
-Inventory (`inventory.registry.run_prepared`):
-    SPARK_GRAFT_NO_PLAN_CACHE     set to rebuild every query from Python
-                                  instead of replaying the memoized plan
 """
 
 from __future__ import annotations

@@ -484,6 +484,21 @@ def _json_type(args: list[str]) -> str:
     )
 
 
+_WORD = re.compile(r"(?<!\w)[^\W\d]\w*")
+
+
+def _subst_words(body: str, repl: dict[str, str]) -> str:
+    """Replace each whole word of ``body`` that is a key of ``repl``, at
+    the code positions :class:`Scan` reports only: a word inside a quoted
+    span or a comment stays as it is.  One pass, so a replacement that
+    spells another key is never substituted again."""
+    sc = Scan(body)
+    return _WORD.sub(
+        lambda m: repl.get(m.group(), m.group()) if sc.code(m.start()) else m.group(),
+        body,
+    )
+
+
 def _key_lambda_comparator(lam: str, arr: str) -> str:
     """CH arraySort(x -> key, arr) → Spark array_sort(arr, comparator):
     apply the key body to both comparator slots with word-boundary-safe
@@ -492,19 +507,10 @@ def _key_lambda_comparator(lam: str, arr: str) -> str:
     if not mm:
         raise DialectError(f"arraySort: untranslatable key lambda {lam!r}")
     var, body = mm.group(1), mm.group(2).strip()
-
-    def subst(target: str) -> str:
-        parts = re.split(r"('(?:[^']|'')*')", body)
-        for j in range(0, len(parts), 2):
-            parts[j] = re.sub(
-                rf"(?<![A-Za-z0-9_]){re.escape(var)}(?![A-Za-z0-9_])",
-                target, parts[j],
-            )
-        return "".join(parts)
-
     # slot names no user column will shadow: plain l/r would capture an
     # outer column named l or r referenced in the key body
-    kl, kr = subst("_ch_sort_l"), subst("_ch_sort_r")
+    kl = _subst_words(body, {var: "_ch_sort_l"})
+    kr = _subst_words(body, {var: "_ch_sort_r"})
     # NULL keys pin LAST (CH sorts NULL keys after all values; a bare
     # `<`/`>` comparison against NULL is NULL → the comparator returned
     # 0 and NULL-keyed elements never moved — round-14 audit)
@@ -2608,9 +2614,9 @@ def _array_split_expr(a: list[str], reverse: bool) -> str:
 
 def _apply_lambda(lam: str, targets: list[str]) -> str:
     """Textually apply the user lambda: each parameter becomes the
-    corresponding target expression.  Two-phase placeholder substitution
-    so a target that happens to contain another parameter's name is
-    never corrupted; word-boundary-safe, string literals untouched."""
+    corresponding target expression, in one pass (a target that spells
+    another parameter's name is never corrupted); whole words only,
+    string literals untouched."""
     sp = _split_lambda(lam)
     if sp is None:
         raise DialectError(f"expected a lambda, got {lam!r}")
@@ -2622,18 +2628,7 @@ def _apply_lambda(lam: str, targets: list[str]) -> str:
         raise DialectError(
             "the lambda must name exactly one parameter per array argument"
         )
-    for k2, nm in enumerate(names):
-        parts = re.split(r"('(?:[^']|'')*')", body)
-        for j in range(0, len(parts), 2):
-            parts[j] = re.sub(
-                rf"(?<![A-Za-z0-9_]){re.escape(nm)}(?![A-Za-z0-9_])",
-                f"\x00{k2}\x00",
-                parts[j],
-            )
-        body = "".join(parts)
-    for k2, tgt in enumerate(targets):
-        body = body.replace(f"\x00{k2}\x00", tgt)
-    return body
+    return _subst_words(body, dict(zip(names, targets)))
 
 
 def _apply_lambda_at(lam: str, arrays: list[str], idx_var: str) -> str:
@@ -9533,7 +9528,10 @@ TEMPLATES["firstsignificantsubdomaincustomrfc"] = (
 
 # --- the rewriter -----------------------------------------------------------
 
-_IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+# A word: a letter (any script, as ``str.isalpha`` sees it) or ``_``, then
+# word characters — so a scan that enters on ``ch.isalpha()`` always finds
+# the whole word (``café`` is one identifier, passed through as it is).
+_IDENT = re.compile(r"[^\W\d]\w*")
 
 # Keywords that can directly precede an ARRAY LITERAL (vs a subscript base).
 _PRE_LITERAL_KEYWORDS = {
@@ -10104,10 +10102,12 @@ def _rewrite_limit_by(sql: str) -> str:
     else:
         off, n = 0, int(m.group(1))
     # BY-column list runs to the next top-level LIMIT or end of string
-    rest = sql[m.end() :]
-    m2 = re.search(r"(?is)\bLIMIT\b", rest)
-    by_cols = rest[: m2.start()].strip() if m2 else rest.strip()
-    tail_limit = rest[m2.start() :].strip() if m2 else ""
+    stop = next(
+        (t.start() for t in _top_matches(sc, r"(?is)\bLIMIT\b") if t.start() >= m.end()),
+        len(sql),
+    )
+    by_cols = sql[m.end() : stop].strip()
+    tail_limit = sql[stop:].strip()
     head = sql[: m.start()]
     # peel a trailing top-level ORDER BY out of the head (it defines the pick
     # order inside each group AND the final presentation order)
@@ -11736,11 +11736,10 @@ def _rewrite_table_clauses(sql: str) -> str:
     All matching is depth-0 and string-literal aware via :class:`Scan`,
     and recurses into subqueries — PREWHERE/SAMPLE/FINAL inside a derived
     table translate at that table's own depth."""
-    if not re.search(r"(?i)\b(PREWHERE|SAMPLE\s+\d|FINAL)", sql):
+    trigger = r"(?i)\b(?:PREWHERE\b|SAMPLE\s+\d|FINAL\b)"
+    if not re.search(trigger, sql):
         return sql
-    sql = _recurse_subqueries(
-        sql, _rewrite_table_clauses, r"(?i)\b(PREWHERE|SAMPLE\s+\d|FINAL)\b"
-    )
+    sql = _recurse_subqueries(sql, _rewrite_table_clauses, trigger)
     sc = Scan(sql)
     edits: list[tuple[int, int, str]] = []  # (start, end, text), ascending
 

@@ -233,7 +233,7 @@ def join_star_revenue(spark, sf_dir):
     # construction for the session lifetime — correctness-safe (branches
     # row-identical, pinned by test) but a conscious staleness: a mid-session
     # threshold change or data growth under the same path re-evaluates only
-    # in a new session or with SPARK_GRAFT_NO_PLAN_CACHE=1.
+    # in a new session.
     if _broadcastable(spark, o) and _broadcastable(spark, c):
         return (
             li.select("l_orderkey", rev.alias("rev_c"))

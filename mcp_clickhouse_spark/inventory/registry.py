@@ -15,7 +15,6 @@ hash, so:
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 from typing import Any, Callable, Optional
 
@@ -75,10 +74,7 @@ _PLAN_CACHE_MAX = 1024
 
 def run_prepared(spark: SparkSession, sf_dir: str, spec: "QuerySpec") -> DataFrame:
     """Build spec's DataFrame, replaying the memoized analyzed plan when the
-    same (session, sf_dir, query) was built before.  Set
-    ``SPARK_GRAFT_NO_PLAN_CACHE=1`` to always rebuild from Python."""
-    if os.environ.get("SPARK_GRAFT_NO_PLAN_CACHE"):
-        return spec.fn(spark, sf_dir)
+    same (session, sf_dir, query) was built before."""
     key = (id(spark), sf_dir, spec.name)
     # The cached value pins the session object alongside the plan: if only
     # the id were kept, a garbage-collected session could recycle its id and

@@ -113,128 +113,3 @@ def decode_media(df: DataFrame, fake: bool = True) -> DataFrame:
 
     cols = ["doc_id", "payload", "media_format"]
     return df.select(*cols).mapInPandas(run, schema=DECODED_SCHEMA)
-
-
-RESIZED_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("resized_payload", BinaryType()),
-    ]
-)
-
-
-def resize_images(
-    df: DataFrame, target_w: int = 224, target_h: int = 224, fake: bool = True
-) -> DataFrame:
-    """Resize stage (Arrow-batched mapInPandas). REAL path would call
-    PIL.Image.resize — stubbed; the fake produces a deterministic payload of
-    exactly target_w*target_h bytes tiled from the source bytes, so byte
-    lengths, schema, and batch shape are all real and testable."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        n = target_w * target_h
-        for pdf in batches:
-            if not fake:
-                raise NotImplementedError("image codecs unavailable; use fake=True")
-            out = pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": target_w,
-                    "height": target_h,
-                    "resized_payload": pdf["payload"].map(
-                        lambda b: (b * (n // max(len(b), 1) + 1))[:n] if len(b) else b"\x00" * n
-                    ),
-                }
-            )
-            out["width"] = out["width"].astype("int32")
-            out["height"] = out["height"].astype("int32")
-            yield out
-
-    return df.select("doc_id", "payload").mapInPandas(run, schema=RESIZED_SCHEMA)
-
-
-FRAMES_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("frame_idx", IntegerType()),
-        StructField("frame_payload", BinaryType()),
-    ]
-)
-
-
-AUDIO_FEATURES_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("sample_rate", IntegerType()),
-        StructField("duration_sec", StringType()),  # fixed 3dp string: cross-engine stable
-        StructField("rms", StringType()),
-        StructField("zero_crossings", LongType()),
-    ]
-)
-
-
-def extract_audio_features(
-    df: DataFrame, sample_rate: int = 16_000, fake: bool = True
-) -> DataFrame:
-    """Audio feature extraction (Arrow-batched mapInPandas).
-
-    REAL path would decode with soundfile/librosa — stubbed (no audio libs
-    in this container). The fake treats the payload bytes as signed 8-bit
-    PCM and computes REAL signal math over them (duration at the nominal
-    sample rate, RMS energy, zero-crossing count), so the UDF signature,
-    batch shape, and numeric plumbing are exercised honestly; only the
-    codec is fake. Deterministic: pure function of the payload bytes.
-    """
-    import numpy as np
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not fake:
-                raise NotImplementedError("audio codecs unavailable; use fake=True")
-            durs, rmss, zcs = [], [], []
-            for payload in pdf["payload"]:
-                samples = np.frombuffer(payload, dtype=np.int8).astype(np.float64)
-                n = len(samples)
-                durs.append(f"{n / sample_rate:.3f}")
-                rmss.append(f"{float(np.sqrt(np.mean(samples**2))) if n else 0.0:.3f}")
-                zcs.append(int(np.sum(np.signbit(samples[:-1]) != np.signbit(samples[1:]))) if n > 1 else 0)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "sample_rate": pd.Series([sample_rate] * len(pdf), dtype="int32"),
-                    "duration_sec": durs,
-                    "rms": rmss,
-                    "zero_crossings": pd.Series(zcs, dtype="int64"),
-                }
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(run, schema=AUDIO_FEATURES_SCHEMA)
-
-
-def sample_frames(df: DataFrame, every_n: int = 4, max_frames: int = 8,
-                  fake: bool = True) -> DataFrame:
-    """Video frame sampling (1→N rows per input — the exploding mapInPandas
-    shape). REAL path would demux with ffmpeg — stubbed; the fake splits the
-    payload into fixed 64-byte 'frames' and keeps every ``every_n``-th."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows: dict[str, list] = {"doc_id": [], "frame_idx": [], "frame_payload": []}
-        for pdf in batches:
-            if not fake:
-                raise NotImplementedError("video codecs unavailable; use fake=True")
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                chunks = [payload[i : i + 64] for i in range(0, len(payload), 64)]
-                for k, idx in enumerate(range(0, len(chunks), every_n)):
-                    if k >= max_frames:
-                        break
-                    rows["doc_id"].append(doc_id)
-                    rows["frame_idx"].append(idx)
-                    rows["frame_payload"].append(chunks[idx])
-        out = pd.DataFrame(rows)
-        if len(out):
-            out["frame_idx"] = out["frame_idx"].astype("int32")
-        yield out
-
-    return df.select("doc_id", "payload").mapInPandas(run, schema=FRAMES_SCHEMA)

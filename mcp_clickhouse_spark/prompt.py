@@ -57,8 +57,8 @@ system.numbers[_mt] (lazy; always LIMIT it).
 - Databases:     postgresql(host, db, table, user, pw) / mysql(...) /
                  clickhouse(host, db, table[, user, pw, secure]) and its
                  remote(addr, db, table) alias /
-                 sqlite(path, table) via JDBC (partitioned reads with
-                 partition_column bounds).
+                 sqlite(path, table) — a live SQLite file, with WHERE
+                 filters run inside SQLite.
 
 Formats: CSV, CSVWithNames, TSV, TSVWithNames, JSON, JSONEachRow,
 Parquet, ORC, Avro.

@@ -85,8 +85,9 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # Python Data Source filter pushdown (sqlite source): off by default
-        # in Spark 4.1, required for DataSourceReader.pushFilters to run.
+        # Python Data Source filter pushdown: off by default in Spark 4.1,
+        # required for DataSourceReader.pushFilters to run, so that
+        # `FROM sqlite(...) WHERE …` runs its WHERE inside SQLite.
         .config("spark.sql.python.filterPushdown.enabled", "true")
         # Generated-class cache (static conf, default 100 entries): a serving
         # session that alternates over ~14+ distinct query shapes generates
@@ -259,6 +260,20 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         )
     _TABLE_CACHE[key] = df
     return df
+
+
+def read_data_source(spark: SparkSession, source: type, options: dict[str, str]) -> DataFrame:
+    """Read through a Python Data Source, registering it on the session at
+    its first read (never in :func:`get_spark`, so session setup pays
+    nothing for a source no query touches).  The schema comes from the
+    source's own ``schema()`` on the driver and is handed to the reader,
+    so its errors (a missing table, a path with no files) raise here as
+    themselves instead of wrapped in an ``AnalysisException``."""
+    manager = spark._jsparkSession.sessionState().dataSourceManager()
+    if not manager.dataSourceExists(source.name()):
+        spark.dataSource.register(source)
+    schema = source(options).schema()
+    return spark.read.format(source.name()).schema(schema).options(**options).load()
 
 
 def register_testdata(

@@ -1,7 +1,10 @@
-"""Source connectors — the chDB table-function analogs (SURVEY.md B19-B26)."""
+"""Source connectors — the chDB table-function analogs (SURVEY.md B19-B26).
+
+One reader per source: SQLite and Avro each read through their Python Data
+Source (``sqlite_datasource.SqliteDataSource``, ``avro_lite.AvroLiteDataSource``),
+which ``sqlite()`` and ``read_avro`` call."""
 
 from mcp_clickhouse_spark.sources.avro_lite import read_avro, write_avro  # noqa: F401
-from mcp_clickhouse_spark.sources.sqlite_native import read_sqlite  # noqa: F401
 from mcp_clickhouse_spark.sources.table_functions import (  # noqa: F401
     FORMAT_ALIASES,
     bind_sql_table_functions,
@@ -12,7 +15,6 @@ from mcp_clickhouse_spark.sources.table_functions import (  # noqa: F401
     mysql,
     postgresql,
     s3,
-    source_df,
     sqlite,
     url,
 )

@@ -26,13 +26,14 @@ actually exchanges:
     promotions (int→long/float/double, long→float/double, float→double)
     and string↔bytes, recursively through records/arrays/maps/unions
 
-Spark integration is genuinely distributed: reads fan one task per
-container file via ``mapInPandas`` over a file-path frame (Avro files are
-the natural split unit; block-level splitting within one file is a noted
-non-goal), and writes emit one container file per partition from the
-executors.  In local mode executors share the filesystem; on a cluster the
-same code runs against any fuse-mounted/shared path — object-store writes
-would swap the ``open()`` for the store's client.
+Spark integration is genuinely distributed: reads go through one reader,
+the Python Data Source :class:`AvroLiteDataSource`, with one task per
+container file (Avro files are the natural split unit; block-level
+splitting within one file is a noted non-goal), and :func:`write_avro`
+emits one container file per partition from the executors.  In local mode
+executors share the filesystem; on a cluster the same code runs against
+any fuse-mounted/shared path — object-store writes would swap the
+``open()`` for the store's client.
 """
 
 from __future__ import annotations
@@ -42,12 +43,16 @@ import json
 import os
 import struct
 import zlib
+from dataclasses import dataclass
 from glob import glob
 from typing import Any, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+
+from mcp_clickhouse_spark.session import read_data_source
 
 _MAGIC = b"Obj\x01"
 _SYNC = b"mcp-spark-avrolt"  # deterministic 16-byte sync marker for writes
@@ -826,7 +831,8 @@ def write_container(path: str, schema: dict, rows: Iterator[tuple], codec: str =
 def read_avro(
     spark: SparkSession, path: str, reader_schema: dict | str | None = None
 ) -> DataFrame:
-    """Distributed read: one task per container file via mapInPandas.
+    """Distributed read through :class:`AvroLiteDataSource`: one task per
+    container file.
 
     ``path`` may be a file, a glob, or a directory of ``*.avro`` files.
     Without ``reader_schema``, the schema comes from the first file's header
@@ -835,49 +841,12 @@ def read_avro(
     spec — the schema-evolution path for data lakes holding several
     generations of files.
     """
-    if os.path.isdir(path):
-        files = sorted(glob(os.path.join(path, "*.avro")))
-    else:
-        files = sorted(glob(path)) or [path]
-    if not files:
-        raise FileNotFoundError(f"no avro files at {path!r}")
-    if isinstance(reader_schema, str):
-        reader_schema = json.loads(reader_schema)
-    if reader_schema is None:
-        with open(files[0], "rb") as f:
-            schema, _, _ = read_header(f)
-    else:
-        schema = reader_schema
-    spark_schema = avro_schema_to_spark(schema)
-    cols = [f.name for f in spark_schema.fields]
-    # tz-aware read targets (timestamp-micros → TimestampType): normalize the
-    # pandas column so the Arrow boundary sees a proper datetime64 dtype, not
-    # an object column of Timestamps
-    ts_utc = [f.name for f in spark_schema.fields if isinstance(f.dataType, T.TimestampType)]
-    ts_ntz = [
-        f.name for f in spark_schema.fields if isinstance(f.dataType, T.TimestampNTZType)
-    ]
-
-    def read_files(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for p in pdf["path"]:
-                _, rows = read_file_records(p, reader_schema=reader_schema)
-                chunk = list(rows)
-                # empty files yield nothing — an empty pandas frame would
-                # carry default float64 dtypes that Arrow can't cast to the
-                # declared schema; mapInPandas tolerates zero yields
-                if chunk:
-                    out = pd.DataFrame(chunk, columns=cols)
-                    for c in ts_utc:
-                        out[c] = pd.to_datetime(out[c], utc=True)
-                    for c in ts_ntz:
-                        out[c] = pd.to_datetime(out[c])
-                    yield out
-
-    paths = spark.createDataFrame([(p,) for p in files], "path string").repartition(
-        len(files)
-    )
-    return paths.mapInPandas(read_files, schema=spark_schema)
+    options = {"path": path}
+    if reader_schema is not None:
+        options["readerSchema"] = (
+            reader_schema if isinstance(reader_schema, str) else json.dumps(reader_schema)
+        )
+    return read_data_source(spark, AvroLiteDataSource, options)
 
 
 def write_avro(df: DataFrame, out_dir: str, codec: str = "deflate") -> int:
@@ -918,63 +887,59 @@ def write_avro(df: DataFrame, out_dir: str, codec: str = "deflate") -> int:
 
 
 # ----------------------------------------------- official Python Data Source
-try:  # Spark 4.1 Python Data Source API
-    from dataclasses import dataclass as _dataclass
+@dataclass
+class _AvroFilePartition(InputPartition):
+    path: str
 
-    from pyspark.sql.datasource import DataSource as _DataSource
-    from pyspark.sql.datasource import DataSourceReader as _DataSourceReader
-    from pyspark.sql.datasource import InputPartition as _InputPartition
 
-    @_dataclass
-    class _AvroFilePartition(_InputPartition):
-        path: str
+class AvroLiteDataSource(DataSource):
+    """``spark.read.format("avrolite").load(path)`` — the one Avro reader
+    (:func:`read_avro` reads through it): the container codec above with
+    one task per file, via the official Python Data Source API (also usable
+    from pure SQL with ``CREATE TEMPORARY VIEW ... USING avrolite``).
+    Option ``readerSchema`` (JSON) enables spec schema resolution — each
+    file's writer schema is resolved against it on read."""
 
-    class AvroLiteDataSource(_DataSource):
-        """``spark.read.format("avrolite").load(path)`` — same codec and
-        file-per-task parallelism as :func:`read_avro`, via the official
-        Python Data Source API (the idiomatic spelling; also usable from
-        pure SQL with ``CREATE TEMPORARY VIEW ... USING avrolite``).
-        Option ``readerSchema`` (JSON) enables spec schema resolution —
-        each file's writer schema is resolved against it on read."""
+    @classmethod
+    def name(cls) -> str:
+        return "avrolite"
 
-        @classmethod
-        def name(cls) -> str:
-            return "avrolite"
+    def _files(self) -> list[str]:
+        path = self.options.get("path")
+        if not path:
+            raise ValueError("avrolite requires a path (load(path))")
+        if os.path.isdir(path):
+            files = sorted(glob(os.path.join(path, "*.avro")))
+        else:
+            files = sorted(glob(path)) or [path]
+        if not files:
+            raise FileNotFoundError(f"no avro files at {path!r}")
+        return files
 
-        def _files(self) -> list[str]:
-            path = self.options.get("path")
-            if not path:
-                raise ValueError("avrolite requires a path (load(path))")
-            if os.path.isdir(path):
-                return sorted(glob(os.path.join(path, "*.avro")))
-            return sorted(glob(path)) or [path]
+    def _reader_schema(self) -> dict | None:
+        rs = self.options.get("readerSchema") or self.options.get("readerschema")
+        return json.loads(rs) if rs else None
 
-        def _reader_schema(self) -> dict | None:
-            rs = self.options.get("readerSchema") or self.options.get("readerschema")
-            return json.loads(rs) if rs else None
+    def schema(self):
+        rs = self._reader_schema()
+        if rs is not None:
+            return avro_schema_to_spark(rs)
+        with open(self._files()[0], "rb") as f:
+            schema, _, _ = read_header(f)
+        return avro_schema_to_spark(schema)
 
-        def schema(self):
-            rs = self._reader_schema()
-            if rs is not None:
-                return avro_schema_to_spark(rs)
-            with open(self._files()[0], "rb") as f:
-                schema, _, _ = read_header(f)
-            return avro_schema_to_spark(schema)
+    def reader(self, schema):
+        return AvroLiteReader(self._files(), self._reader_schema())
 
-        def reader(self, schema):
-            return AvroLiteReader(self._files(), self._reader_schema())
 
-    class AvroLiteReader(_DataSourceReader):
-        def __init__(self, files: list[str], reader_schema: dict | None = None):
-            self.files = files
-            self.reader_schema = reader_schema
+class AvroLiteReader(DataSourceReader):
+    def __init__(self, files: list[str], reader_schema: dict | None = None):
+        self.files = files
+        self.reader_schema = reader_schema
 
-        def partitions(self):
-            return [_AvroFilePartition(p) for p in self.files]
+    def partitions(self):
+        return [_AvroFilePartition(p) for p in self.files]
 
-        def read(self, partition: _AvroFilePartition):
-            _, rows = read_file_records(partition.path, reader_schema=self.reader_schema)
-            yield from rows
-
-except ImportError:  # pragma: no cover — pre-4.1 pyspark
-    AvroLiteDataSource = None  # type: ignore[assignment]
+    def read(self, partition: _AvroFilePartition):
+        _, rows = read_file_records(partition.path, reader_schema=self.reader_schema)
+        yield from rows

@@ -1,12 +1,26 @@
-"""SQLite as an official PySpark Python Data Source (Spark 4.1 API).
+"""SQLite as a PySpark Python Data Source (Spark 4.1 API).
 
-`sqlite_native.read_sqlite` gives the imperative entry point; this module
-wires the same rowid-range parallel read into ``spark.read.format(...)``
-with REAL predicate pushdown: Catalyst hands the reader its filters via
-``DataSourceReader.pushFilters`` (Spark 4.1), the translatable subset
-(comparisons, IN, IS NULL, prefix/suffix/contains, NOT) becomes a SQL
-WHERE clause evaluated inside SQLite — index-backed when the column is
-indexed — and only the untranslatable remainder is re-checked by Spark.
+The reference promises ``sqlite(path, table)`` in its chDB mode
+(reference chdb_prompt.py:53-55).  There is no sqlite-jdbc jar here, but
+CPython ships ``sqlite3``, so this source reads the real database file and
+is the one SQLite reader: ``table_functions.sqlite()`` and
+``FROM sqlite('db', 't')`` in SQL both go through it.
+
+  - driver: ``schema()`` reads the table's columns (``PRAGMA table_info``);
+    ``partitions()`` reads the min/max rowid of the rows that pass the
+    pushed filters — metadata only, no row data;
+  - executors: each task opens the file read-only (URI mode) and scans its
+    own half-open rowid range.  rowid predicates are index-backed in SQLite,
+    so N tasks do N disjoint range scans — the same parallelism contract as
+    Spark's JDBC ``partitionColumn``/``numPartitions``.
+
+Predicate pushdown: Catalyst hands the reader its filters via
+``DataSourceReader.pushFilters`` (needs
+``spark.sql.python.filterPushdown.enabled``, which the served session sets).
+The translatable subset (comparisons, IN, IS NULL, prefix/suffix/contains,
+NOT) becomes a SQL WHERE clause evaluated inside SQLite — index-backed when
+the column is indexed — and only the untranslatable remainder is re-checked
+by Spark.
 
 Usage:
     spark.dataSource.register(SqliteDataSource)
@@ -23,8 +37,9 @@ future Spark prunes, the SQL narrows for free — and (b) honors an explicit
 ``columns`` option ("a,b") so callers can bound SQLite→Arrow transfer today.
 A ``traceFile`` option appends each executor-side SELECT for test assertions.
 
-Scale notes: identical to sqlite_native — the file is a single-host
-artifact; ranges bound per-task work, pushdown bounds per-task I/O.
+Scale notes: a SQLite file is a single-host artifact, so this source's
+ceiling is the host's I/O — same as any JDBC single-endpoint read.  Ranges
+bound per-task work, pushdown bounds per-task I/O.
 """
 
 from __future__ import annotations
@@ -33,6 +48,7 @@ import sqlite3
 from dataclasses import dataclass
 from typing import Iterator
 
+from pyspark.sql import types as T
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -51,9 +67,34 @@ from pyspark.sql.datasource import (
     StringEndsWith,
     StringStartsWith,
 )
-from pyspark.sql.types import StructType
 
-from mcp_clickhouse_spark.sources.sqlite_native import _quote, _spark_type
+_AFFINITY_TO_SPARK = (
+    ("INT", T.LongType()),
+    ("CHAR", T.StringType()),
+    ("CLOB", T.StringType()),
+    ("TEXT", T.StringType()),
+    ("BLOB", T.BinaryType()),
+    ("REAL", T.DoubleType()),
+    ("FLOA", T.DoubleType()),
+    ("DOUB", T.DoubleType()),
+    ("BOOL", T.BooleanType()),
+    ("DATE", T.StringType()),  # SQLite stores dates as text/num — keep faithful
+    ("NUM", T.DoubleType()),
+)
+
+
+def _spark_type(decl: str) -> T.DataType:
+    decl = (decl or "").upper()
+    for marker, t in _AFFINITY_TO_SPARK:
+        if marker in decl:
+            return t
+    return T.StringType()  # SQLite's fallback affinity is TEXT-ish; stay lossless
+
+
+def _quote(ident: str) -> str:
+    if not ident.replace("_", "").isalnum():
+        raise ValueError(f"invalid sqlite identifier {ident!r}")
+    return f'"{ident}"'
 
 
 @dataclass
@@ -128,9 +169,7 @@ class SqliteDataSource(DataSource):
     def name(cls) -> str:
         return "sqlite"
 
-    def schema(self) -> StructType:
-        from pyspark.sql import types as T
-
+    def schema(self) -> T.StructType:
         path, table = self.options["path"], self.options["table"]
         with sqlite3.connect(f"file:{path}?mode=ro", uri=True) as con:
             cols = con.execute(f"PRAGMA table_info({_quote(table)})").fetchall()
@@ -145,12 +184,12 @@ class SqliteDataSource(DataSource):
             cols = [by_name[c] for c in want]
         return T.StructType([T.StructField(c[1], _spark_type(c[2]), True) for c in cols])
 
-    def reader(self, schema: StructType) -> "SqliteReader":
+    def reader(self, schema: T.StructType) -> "SqliteReader":
         return SqliteReader(self.options, schema)
 
 
 class SqliteReader(DataSourceReader):
-    def __init__(self, options, schema: StructType):
+    def __init__(self, options, schema: T.StructType):
         self.path = options["path"]
         self.table = options["table"]
         self.n_parts = int(options.get("numPartitions", 8) or 8)
@@ -160,6 +199,10 @@ class SqliteReader(DataSourceReader):
         want = [c.strip() for c in str(options.get("columns", "")).split(",") if c.strip()]
         names = [f.name for f in schema.fields]
         self.columns = [c for c in names if c in want] if want else names
+        # SQLite has no boolean storage class: a BOOL column holds 0/1
+        # integers, which Arrow refuses for a boolean field.
+        bools = {f.name for f in schema.fields if isinstance(f.dataType, T.BooleanType)}
+        self.bool_at = [k for k, c in enumerate(self.columns) if c in bools]
         # Debug/test hook: append every executor-side SELECT to this file so
         # tests can assert what actually ran inside SQLite (pushdown, pruning).
         self.trace_file = options.get("traceFile") or None
@@ -206,4 +249,13 @@ class SqliteReader(DataSourceReader):
         )
         self._trace(sql)
         with sqlite3.connect(f"file:{self.path}?mode=ro", uri=True) as con:
-            yield from con.execute(sql, (partition.lo, partition.hi))
+            rows = con.execute(sql, (partition.lo, partition.hi))
+            if not self.bool_at:
+                yield from rows
+                return
+            for row in rows:
+                row = list(row)
+                for k in self.bool_at:
+                    if row[k] is not None:
+                        row[k] = bool(row[k])
+                yield tuple(row)

@@ -25,6 +25,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from mcp_clickhouse_spark.catalog import quote_ident, show_tables
+from mcp_clickhouse_spark.session import read_data_source
+from mcp_clickhouse_spark.sources.sqlite_datasource import SqliteDataSource
 from mcp_clickhouse_spark.sqltext import Scan, split_args
 
 # ClickHouse format name → (spark format, reader options)
@@ -276,29 +278,16 @@ def remote_secure(spark: SparkSession, host: str, database: str,
 
 
 def sqlite(
-    spark: SparkSession,
-    path: str,
-    table: str,
-    num_partitions: int | None = None,
-    use_jdbc: bool = False,
-    **kw,
+    spark: SparkSession, path: str, table: str, num_partitions: int | None = None
 ) -> DataFrame:
-    """`sqlite(path, table)` (B25) — live read of a SQLite database file.
-
-    Default path uses Python's built-in ``sqlite3`` module through Arrow
-    ``mapInPandas``: the driver reads only the schema + rowid bounds, then
-    each task opens the file read-only and scans its own rowid range — the
-    same range-partitioned parallelism ``partitionColumn`` gives JDBC
-    (column pruning included; rowid ranges are index-backed in SQLite, so a
-    task never scans another task's rows).  ``use_jdbc=True`` routes to the
-    classic JDBC reader instead (needs the sqlite-jdbc jar on the
-    classpath, which this environment doesn't ship).
-    """
-    if use_jdbc:
-        return jdbc(spark, f"jdbc:sqlite:{path}", table, driver="org.sqlite.JDBC", **kw)
-    from mcp_clickhouse_spark.sources.sqlite_native import read_sqlite
-
-    return read_sqlite(spark, path, table, num_partitions=num_partitions)
+    """`sqlite(path, table)` (B25) — live read of a SQLite database file
+    through :class:`~mcp_clickhouse_spark.sources.sqlite_datasource.SqliteDataSource`:
+    each task scans its own rowid range of the file, and the filters Spark
+    pushes run inside SQLite as its WHERE clause."""
+    options = {"path": path, "table": table}
+    if num_partitions is not None:
+        options["numPartitions"] = str(num_partitions)
+    return read_data_source(spark, SqliteDataSource, options)
 
 
 import hashlib
@@ -447,16 +436,3 @@ def bind_sql_table_functions(spark: SparkSession, sql: str) -> str:
                 df = readers[fname](spark, args[0], *(args[1:2] or [None]))
             df.createOrReplaceTempView(view)
         out = out[: m.start(2)] + view + out[end:]
-
-
-def source_df(spark: SparkSession, uri: str, fmt: str | None = None, **options: Any) -> DataFrame:
-    """Scheme dispatcher — the single entry point the tool layer uses."""
-    if uri.startswith(("http://", "https://")):
-        return url(spark, uri, fmt, **options)
-    if uri.startswith(("s3://", "s3a://")):
-        return s3(spark, uri, fmt, **options)
-    if uri.startswith("hdfs://"):
-        return hdfs(spark, uri, fmt, **options)
-    if uri.startswith("jdbc:"):
-        raise ValueError("jdbc sources need a table: use jdbc(spark, url, table, …)")
-    return file(spark, uri, fmt, **options)

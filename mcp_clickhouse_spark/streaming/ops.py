@@ -218,151 +218,6 @@ def user_running_totals(events: DataFrame, watermark: str = "2 hours") -> DataFr
     )
 
 
-_SESSIONIZE_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("session_start", TimestampType()),
-        StructField("session_end", TimestampType()),
-        StructField("n_events", LongType()),
-    ]
-)
-
-
-def sessionize_with_timeout(
-    events: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours"
-) -> DataFrame:
-    """Custom sessionization via applyInPandasWithState + EventTimeTimeout.
-
-    The built-in ``session_window`` covers gap-close aggregation;
-    this operator is the template for session logic it CANNOT express
-    (e.g. emitting extra fields from the fold, conditional session rules):
-    per user, events fold into an open (start, end, count) state; a session
-    closed WITHIN a batch emits immediately, and the trailing open session
-    emits when the event-time timeout fires — i.e. when the watermark passes
-    last_event + gap, so state is bounded exactly like the built-in.
-
-    Scale: state shards by user across executors; timeouts fire on
-    watermark advancement, so a quiet user's state cannot outlive
-    gap + watermark delay.
-    """
-    gap_us = int(pd.Timedelta(gap).total_seconds() * 1_000_000)
-
-    def fold(
-        key: Tuple[int], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        def emit(start_us: int, end_us: int, n: int) -> pd.DataFrame:
-            return pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "session_start": [pd.Timestamp(start_us, unit="us")],
-                    "session_end": [pd.Timestamp(end_us, unit="us")],
-                    "n_events": [n],
-                }
-            )
-
-        if state.hasTimedOut:
-            start_us, end_us, n = state.get
-            state.remove()
-            yield emit(start_us, end_us, n)
-            return
-        ts_us = sorted(
-            int(t)
-            for pdf in pdfs
-            for t in pd.to_datetime(pdf["ts"]).astype("int64") // 1000
-        )
-        if not ts_us:
-            return
-        cur = state.get if state.exists else None
-        for t in ts_us:
-            if cur is None:
-                cur = (t, t, 0)
-            elif t - cur[1] > gap_us:
-                yield emit(cur[0], cur[1], cur[2])
-                cur = (t, t, 0)
-            cur = (cur[0], t, cur[2] + 1)
-        state.update(cur)
-        # fire when the watermark passes the open session's close point
-        state.setTimeoutTimestamp((cur[1] + gap_us) // 1000)
-
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fold,
-            outputStructType=_SESSIONIZE_SCHEMA,
-            stateStructType="start LONG, end LONG, n LONG",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-def stream_stream_join(
-    left: DataFrame,
-    right: DataFrame,
-    within: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Stream-stream inner join: pair each left event with right events for
-    the same user that happen AFTER it but within `within`. Both sides carry
-    watermarks so the join state is bounded (the unbounded-state trap is the
-    #1 way stream-stream joins die at scale)."""
-    l_ = left.withWatermark("ts", watermark).select(
-        F.col("user_id"),
-        F.col("ts").alias("l_ts"),
-        F.col("event_id").alias("l_event_id"),
-    )
-    r_ = right.withWatermark("ts", watermark).select(
-        F.col("user_id").alias("r_user_id"),
-        F.col("ts").alias("r_ts"),
-        F.col("event_id").alias("r_event_id"),
-    )
-    return l_.join(
-        r_,
-        (F.col("user_id") == F.col("r_user_id"))
-        & (F.col("r_ts") > F.col("l_ts"))
-        & (F.col("r_ts") <= F.col("l_ts") + F.expr(f"INTERVAL {within}")),
-        "inner",
-    ).select("user_id", "l_event_id", "l_ts", "r_event_id", "r_ts")
-
-
-def kafka_stream(
-    spark: SparkSession, bootstrap_servers: str, topic: str, starting_offsets: str = "latest"
-) -> DataFrame:
-    """Kafka source surface (gated): same downstream pipeline as the file
-    source — swap `stream_events` for this in production. Raises a clear
-    error when the kafka connector jar isn't on the classpath (it isn't in
-    this container)."""
-    try:
-        return (
-            spark.readStream.format("kafka")
-            .option("kafka.bootstrap.servers", bootstrap_servers)
-            .option("subscribe", topic)
-            .option("startingOffsets", starting_offsets)
-            .load()
-        )
-    except Exception as e:  # noqa: BLE001
-        raise RuntimeError(
-            "kafka source unavailable (needs spark-sql-kafka on the classpath): "
-            f"{e}"
-        ) from e
-
-
-def run_foreach_batch_to_parquet(stream_df: DataFrame, out_dir: str):
-    """foreachBatch sink: per-microbatch custom write (the escape hatch for
-    sinks with no native streaming writer — JDBC upserts, multi-table
-    writes). Here each batch lands as parquet partitioned by batch id."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.withColumn("_batch_id", F.lit(batch_id)).write.mode("append").parquet(
-            out_dir
-        )
-
-    q = stream_df.writeStream.foreachBatch(write_batch).trigger(availableNow=True).start()
-    q.awaitTermination()
-    return q
-
-
 def backfill_events_stream(
     spark: SparkSession, backfill_dir: str, max_files_per_trigger: int = 1
 ) -> DataFrame:
@@ -552,8 +407,9 @@ def span_filter_apply(
     """APPLY side of ``pipeline.dedup.span_dedup``: cut documents' spans
     whose md5 appears in ``boilerplate_keys`` (one column ``chunk_key`` —
     e.g. span_dedup's frequency stage filtered to nd > 1), reassemble the
-    remainder in order.  Pure batch transformation, shared by the batch
-    path and the per-micro-batch streaming runner below.
+    remainder in order.  Pure batch transformation; inside a
+    ``foreachBatch`` it is the per-micro-batch streaming runner too (a
+    document arrives whole inside one micro-batch).
 
     Returns the same ``(doc_id, kept_chunks, dropped_chunks, cleaned_text)``
     shape as the batch operator (equality pinned by test).
@@ -570,39 +426,6 @@ def span_filter_apply(
         "left",
     ).withColumn("_keep", F.col("_bad").isNull())
     return regroup_spans(flagged)
-
-
-def run_streaming_span_filter(
-    stream_docs: DataFrame,
-    boilerplate_keys: DataFrame,
-    out_dir: str,
-    chunk_tokens: int = 20,
-):
-    """Streaming boilerplate-span removal via foreachBatch.
-
-    A document arrives WHOLE inside one micro-batch, so the per-doc
-    explode → static-join → regroup is plain batch code applied per
-    trigger — no streaming-aggregation state, no watermark requirement,
-    and any trigger/rate policy composes.  (A groupBy on the unbounded
-    doc_id stream would instead hold every doc in the state store
-    forever — the wrong shape when rows never span batches.)  The
-    boilerplate key table is the small persisted artifact of the batch
-    span_dedup frequency stage, exactly like incremental dedup's corpus
-    key set.  Runs availableNow and blocks until the replay completes.
-    """
-
-    def _apply(batch_df: DataFrame, _batch_id: int) -> None:
-        span_filter_apply(batch_df, boilerplate_keys, chunk_tokens).write.mode(
-            "append"
-        ).parquet(out_dir)
-
-    q = (
-        stream_docs.writeStream.foreachBatch(_apply)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
 
 
 _EMBED_NEARDUP_SCHEMA = StructType(

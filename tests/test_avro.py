@@ -3,7 +3,7 @@
 The environment has no spark-avro jar, no network, and no Python avro
 library, so avro_lite implements the public object-container spec directly.
 These tests prove the full loop: Spark DataFrame → distributed per-partition
-container writes → distributed mapInPandas read → identical values; plus
+container writes → distributed Data Source read → identical values; plus
 codec/edge coverage (deflate + null codecs, nullable unions, logical types,
 arrays, empty partitions) and the file()/auto-detect dispatcher route.
 """
@@ -85,6 +85,15 @@ def test_arrays_and_date(spark, tmp_path):
     rows = {r.id: (list(r.vec), r.d) for r in got.collect()}
     assert rows[1] == ([1.0, 2.5], datetime.date(2024, 3, 1))
     assert rows[2] == ([], None)
+
+
+def test_read_avro_path_without_files_raises(spark, tmp_path):
+    """A directory holding no ``*.avro`` file fails on the driver with the
+    codec's own error, not a Spark analysis error."""
+    empty = tmp_path / "no_avro"
+    empty.mkdir()
+    with pytest.raises(FileNotFoundError, match="no avro files"):
+        read_avro(spark, str(empty))
 
 
 def test_multi_partition_write_one_file_each(spark, sample, tmp_path):

@@ -209,6 +209,41 @@ def test_limit_by_with_tail_limit(spark):
         dialect="clickhouse",
     )
     assert len(res["rows"]) == 5
+    # the BY list ends at the next LIMIT in code, never at one inside a
+    # string literal of the BY list itself
+    out = translate("SELECT a FROM t LIMIT 1 BY concat(b, 'LIMIT')")
+    assert "PARTITION BY concat(b, 'LIMIT') ORDER BY" in out
+    assert out.endswith("WHERE __rn <= 1")
+
+
+def test_non_ascii_identifiers_pass_through():
+    """A non-ASCII letter starts a word like an ASCII one: the identifier
+    passes through the division, IN and ternary scans unchanged."""
+    assert translate("SELECT café + 1 FROM t") == "SELECT café + 1 FROM t"
+    assert translate("SELECT café / 2 FROM t") == "SELECT café / 2 FROM t"
+    assert translate("SELECT café IN (1,2) FROM t") == (
+        "SELECT (((café) IS NOT NULL) AND ((café) IN (1, 2))) FROM t"
+    )
+    assert translate("SELECT x > 0 ? café : 1 FROM t") == (
+        "SELECT CASE WHEN x > 0 THEN café ELSE 1 END FROM t"
+    )
+
+
+def test_lambda_variable_not_substituted_in_escaped_literal(spark):
+    """A lambda body's string literal may hold a backslash-escaped quote;
+    the variable is substituted in code only, never inside the literal."""
+    out = translate(r"SELECT arraySort(x -> concat(x, 'a\'x'), arr) FROM t")
+    assert r"concat(_ch_sort_l, 'a\'x')" in out and "_ch_sort_l'" not in out
+    out = translate(r"SELECT arrayFirstIndex(x -> x = 'a\'x', arr) FROM t")
+    assert r"= 'a\'x'" in out
+    out = translate(r"SELECT mapApply((k, v) -> (k, concat(v, 'k\'v')), m) FROM t")
+    assert r"concat(__ma.value, 'k\'v')" in out
+    # and the translations run: the literal is the one the user wrote
+    assert one(spark, r"SELECT arraySort(x -> concat(x, 'a\'x'), ['b', 'a'])")[0] == ["a", "b"]
+    assert one(spark, r"SELECT arrayFirstIndex(x -> x = 'a\'x', ['q', 'a\'x'])")[0] == 2
+    assert one(
+        spark, r"SELECT mapApply((k, v) -> (k, concat(v, 'k\'v')), map('a', 'b'))"
+    )[0] == {"a": "bk'v"}
 
 
 def test_prompt_exists():
@@ -1991,6 +2026,11 @@ def test_subquery_clause_recursion(spark, sf_dir):
     assert res2["rows"][0][0] > 0
     out = translate("SELECT c FROM (SELECT count() AS c FROM t FINAL) d")
     assert "FINAL" not in out.upper()
+    # SAMPLE n recurses for any row count, not only a one-digit one
+    for n in (1, 10, 100):
+        assert translate(f"SELECT * FROM (SELECT * FROM t SAMPLE {n}) s") == (
+            f"SELECT * FROM (SELECT * FROM t TABLESAMPLE ({n} ROWS)) s"
+        )
 
 
 def test_star_replace_modifier(spark):

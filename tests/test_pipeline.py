@@ -188,26 +188,6 @@ def test_multimodal_plumbing(docs):
     assert d[1].n_frames == BASE.encode()[0] % 16 + 1
 
 
-def test_multimodal_resize_and_frames(docs):
-    from mcp_clickhouse_spark.pipeline.multimodal import resize_images, sample_frames
-
-    media = attach_binary_payload(docs)
-    resized = resize_images(media, target_w=16, target_h=8)
-    r = {row.doc_id: row for row in resized.collect()}
-    assert all(len(row.resized_payload) == 16 * 8 for row in r.values())
-    assert r[1].width == 16 and r[1].height == 8
-    # deterministic: tiled from source bytes
-    assert r[1].resized_payload[: len(BASE)][:10] == BASE.encode()[:10]
-
-    frames = sample_frames(media, every_n=2, max_frames=3)
-    by_doc = {}
-    for row in frames.collect():
-        by_doc.setdefault(row.doc_id, []).append(row)
-    assert all(len(v) <= 3 for v in by_doc.values())
-    idxs = sorted(r.frame_idx for r in by_doc[1])
-    assert idxs == [0, 2] or idxs == [0, 2, 4]
-
-
 def test_multimodal_real_decode_is_stubbed(docs):
     from mcp_clickhouse_spark.pipeline.multimodal import decode_image_batch
     import pandas as pd
@@ -297,23 +277,6 @@ def test_registry_eviction_drops_dependent_spread_memos(spark):
     assert key2 in dd._REG.spread
     dd.release_persisted()
     assert key2 not in dd._REG.spread and dd._REG.persisted == []
-
-
-def test_multimodal_audio_features(docs):
-    import numpy as np
-
-    from mcp_clickhouse_spark.pipeline.multimodal import extract_audio_features
-
-    media = attach_binary_payload(docs)
-    feats = {r.doc_id: r for r in extract_audio_features(media, sample_rate=8000).collect()}
-    row = feats[1]
-    payload = BASE.encode()
-    samples = np.frombuffer(payload, dtype=np.int8).astype(np.float64)
-    assert row.sample_rate == 8000
-    assert row.duration_sec == f"{len(samples) / 8000:.3f}"
-    assert row.rms == f"{float(np.sqrt(np.mean(samples**2))):.3f}"
-    expected_zc = int(np.sum(np.signbit(samples[:-1]) != np.signbit(samples[1:])))
-    assert row.zero_crossings == expected_zc
 
 
 def test_multimodal_binary_parquet_roundtrip(docs, tmp_path):

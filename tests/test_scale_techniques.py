@@ -298,18 +298,6 @@ def test_prepared_plan_replay_fresh_execution(spark):
     assert rows_a == rows_b and len(rows_a) > 0
 
 
-def test_prepared_plan_cache_kill_switch(spark, monkeypatch):
-    from mcp_clickhouse_spark.inventory import registry
-
-    monkeypatch.setenv("SPARK_GRAFT_NO_PLAN_CACHE", "1")
-    registry._PLAN_CACHE.clear()
-    import __spark_entry__ as entry
-
-    qs = entry.queries()
-    qs["agg_rollup"](spark, "/root/testdata/sf0.001").collect()
-    assert not registry._PLAN_CACHE  # nothing memoized when disabled
-
-
 def test_lsh_pipeline_scale_smoke_with_degenerate_slice(spark):
     """30k docs, 40% of them IDENTICAL boilerplate (the mega-bucket that
     sinks uncapped LSH at scale): the full signatures -> banding -> capped

@@ -10,7 +10,7 @@ import threading
 import pytest
 from pyspark.sql import functions as F
 
-from mcp_clickhouse_spark.sources import detect_format, file, jdbc, source_df, url
+from mcp_clickhouse_spark.sources import detect_format, file, jdbc, sqlite, url
 
 
 @pytest.fixture(scope="module")
@@ -93,13 +93,6 @@ def test_url_table_function(spark, nation, exports, tmp_path):
             httpd.shutdown()
 
 
-def test_source_df_dispatch(spark, exports):
-    df = source_df(spark, exports["parquet"], fmt="parquet")
-    assert df.count() > 0
-    with pytest.raises(ValueError, match="jdbc"):
-        source_df(spark, "jdbc:postgresql://h/db")
-
-
 def test_jdbc_missing_driver_graceful(spark):
     with pytest.raises(Exception) as ei:
         jdbc(
@@ -151,14 +144,12 @@ def test_sqlite_live_read_partitioned(spark, tmp_path):
     """Range partitioning covers every row exactly once, any partition count."""
     import sqlite3
 
-    from mcp_clickhouse_spark.sources.sqlite_native import read_sqlite
-
     db = str(tmp_path / "big.db")
     with sqlite3.connect(db) as con:
         con.execute("CREATE TABLE t (v INTEGER)")
         con.executemany("INSERT INTO t VALUES (?)", [(i,) for i in range(1000)])
     for nparts in (1, 3, 7):
-        df = read_sqlite(spark, db, "t", num_partitions=nparts)
+        df = sqlite(spark, db, "t", num_partitions=nparts)
         assert df.count() == 1000
         assert df.agg({"v": "sum"}).first()[0] == 499500
 
@@ -166,12 +157,33 @@ def test_sqlite_live_read_partitioned(spark, tmp_path):
 def test_sqlite_missing_table_errors(spark, tmp_path):
     import sqlite3
 
-    from mcp_clickhouse_spark.sources.sqlite_native import read_sqlite
-
     db = str(tmp_path / "empty.db")
     sqlite3.connect(db).close()
     with pytest.raises(ValueError, match="not found"):
-        read_sqlite(spark, db, "nope")
+        sqlite(spark, db, "nope")
+
+
+def test_sqlite_declared_types_read_back(spark, tmp_path):
+    """Each declared SQLite type reads back as its Spark type; a BOOLEAN
+    column, stored by SQLite as 0/1 integers, comes back as booleans."""
+    import sqlite3
+
+    db = str(tmp_path / "types.db")
+    with sqlite3.connect(db) as con:
+        con.execute("CREATE TABLE t (i INTEGER, f REAL, s TEXT, b BOOLEAN, bl BLOB)")
+        con.executemany(
+            "INSERT INTO t VALUES (?, ?, ?, ?, ?)",
+            [(1, 1.5, "a", 1, b"\x00\x01"), (2, None, None, None, None), (3, 2.0, "c", 0, b"")],
+        )
+    df = sqlite(spark, db, "t")
+    assert df.dtypes == [
+        ("i", "bigint"), ("f", "double"), ("s", "string"), ("b", "boolean"), ("bl", "binary"),
+    ]
+    assert sorted(map(tuple, df.collect())) == [
+        (1, 1.5, "a", True, b"\x00\x01"),
+        (2, None, None, None, None),
+        (3, 2.0, "c", False, b""),
+    ]
 
 
 def test_sql_table_function_file_and_numbers(spark, sf_dir):
@@ -210,6 +222,29 @@ def test_sql_table_function_sqlite_join(spark, sf_dir, tmp_path):
         f"ORDER BY s.tag",
     )
     assert len(res["rows"]) == 5 and res["rows"][0][1] == "t0"
+
+
+def test_sql_table_function_sqlite_where_runs_in_sqlite(spark, tmp_path):
+    """`FROM sqlite(...) WHERE …` reads through the SQLite Data Source, so
+    the WHERE is pushed into SQLite: the executed plan is one Python
+    BatchScan with no Spark-side Filter and no MapInPandas fan-out."""
+    import re
+    import sqlite3
+
+    from mcp_clickhouse_spark.sources.table_functions import bind_sql_table_functions
+    from mcp_clickhouse_spark.tools import run_select_query
+
+    db = str(tmp_path / "pd.db")
+    with sqlite3.connect(db) as con:
+        con.execute("CREATE TABLE t (a INTEGER, b TEXT)")
+        con.executemany("INSERT INTO t VALUES (?, ?)", [(i, f"b{i}") for i in range(50)])
+    sql = f"SELECT b FROM sqlite('{db}', 't') WHERE a = 7"
+    assert run_select_query(spark, sql)["rows"] == [["b7"]]
+    plan = spark.sql(bind_sql_table_functions(spark, sql))._jdf.queryExecution()
+    executed = plan.executedPlan().toString()
+    assert "BatchScan sqlite" in executed and "(Python)" in executed
+    # node names only: the scan line itself reads "RuntimeFilters: []"
+    assert not re.search(r"\bFilter\b", executed) and "MapInPandas" not in executed
 
 
 def test_sql_table_function_avro(spark, sf_dir, tmp_path):

@@ -15,11 +15,6 @@ from mcp_clickhouse_spark.streaming import (
     tumbling_counts,
     user_running_totals,
 )
-from mcp_clickhouse_spark.streaming.ops import (
-    kafka_stream,
-    run_foreach_batch_to_parquet,
-    stream_stream_join,
-)
 
 
 @pytest.fixture(scope="module")
@@ -72,50 +67,6 @@ def test_streaming_dedup(spark, sf_dir, batch_events):
     n_users = batch_events.select("user_id").distinct().count()
     assert out.count() == n_users
     assert out.select("user_id").distinct().count() == n_users
-
-
-def test_stream_stream_join_matches_batch(spark, sf_dir, batch_events):
-    signups = stream_events(spark, sf_dir).where(F.col("event_type") == "signup")
-    purchases = stream_events(spark, sf_dir).where(F.col("event_type") == "purchase")
-    st = stream_stream_join(signups, purchases, within="1 hour")
-    run_available_now(st, "t_ssjoin", output_mode="append")
-    got = {
-        (r.user_id, r.l_event_id, r.r_event_id)
-        for r in spark.table("t_ssjoin").collect()
-    }
-    bl = batch_events.where(F.col("event_type") == "signup").select(
-        "user_id", F.col("ts").alias("l_ts"), F.col("event_id").alias("l_event_id")
-    )
-    br = batch_events.where(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("r_user_id"),
-        F.col("ts").alias("r_ts"),
-        F.col("event_id").alias("r_event_id"),
-    )
-    want = {
-        (r.user_id, r.l_event_id, r.r_event_id)
-        for r in bl.join(
-            br,
-            (F.col("user_id") == F.col("r_user_id"))
-            & (F.col("r_ts") > F.col("l_ts"))
-            & (F.col("r_ts") <= F.col("l_ts") + F.expr("INTERVAL 1 hour")),
-        ).collect()
-    }
-    assert got == want and len(got) > 0
-
-
-def test_foreach_batch_sink(spark, sf_dir, batch_events, tmp_path):
-    out = str(tmp_path / "fb_out")
-    st = stream_events(spark, sf_dir).where(F.col("event_type") == "error")
-    run_foreach_batch_to_parquet(st, out)
-    written = spark.read.parquet(out)
-    n_errors = batch_events.where(F.col("event_type") == "error").count()
-    assert written.count() == n_errors
-    assert "_batch_id" in written.columns
-
-
-def test_kafka_surface_gated(spark):
-    with pytest.raises(RuntimeError, match="kafka source unavailable"):
-        kafka_stream(spark, "localhost:9092", "events").printSchema()
 
 
 def test_user_running_totals_stateful(spark, sf_dir, batch_events):
@@ -228,61 +179,6 @@ def test_stream_events_empty_dir_falls_back(spark, tmp_path):
     os.makedirs(empty, exist_ok=True)
     df = stream_events(spark, empty)
     assert df.isStreaming and "ts" in df.columns
-
-
-def test_sessionize_with_timeout_matches_batch(spark, sf_dir, tmp_path):
-    """applyInPandasWithState + EventTimeTimeout sessionizer: all sessions of
-    batch 1 emit (within-batch closes immediately, trailing opens via the
-    event-time timeout once a later batch advances the watermark), and the
-    (user, start, count) set equals the batch session_window truth."""
-    import os
-    import time as _time
-
-    from mcp_clickhouse_spark.streaming.ops import sessionize_with_timeout
-
-    src = str(tmp_path / "sess_src")
-    os.makedirs(src)
-    real = (
-        read_table(spark, sf_dir, "events")
-        .where(F.col("user_id") < 20)
-        .select("event_id", F.col("ts").cast("timestamp_ntz").alias("ts"),
-                "user_id", "event_type", "value", "props")
-    )
-    real.coalesce(1).write.mode("append").parquet(src)
-    # tick mtime so the sentinel file lands in a LATER microbatch
-    _time.sleep(1.1)
-    sentinel = spark.createDataFrame(
-        [(999_999_999, "2090-01-01 00:00:00", 999_999, "flush", 0.0, "{}")],
-        "event_id long, ts string, user_id long, event_type string, value double, props string",
-    ).selectExpr("event_id", "CAST(ts AS TIMESTAMP_NTZ) ts", "user_id", "event_type", "value", "props")
-    sentinel.coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp_ntz, user_id long, event_type string, value double, props string"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
-    st = sessionize_with_timeout(stream, gap="30 minutes")
-    run_available_now(st, "t_sessionized", output_mode="append")
-    got = {
-        (r.user_id, r.session_start): r.n_events
-        for r in spark.table("t_sessionized").collect()
-        if r.user_id < 20
-    }
-    want = {
-        (r.user_id, r.session_start): r.n_events
-        for r in (
-            real.withColumn("ts", F.col("ts").cast("timestamp"))
-            .groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
-            .agg(F.count("*").alias("n_events"))
-            .select("user_id", F.col("w.start").alias("session_start"), "n_events")
-        ).collect()
-    }
-    assert len(want) > 10
-    assert got == want
 
 
 def test_streaming_incremental_dedup_matches_batch(spark, tmp_path):
@@ -455,33 +351,25 @@ def test_stateless_text_filters_are_streaming_safe(spark, sf_dir):
     assert got2 == want2
 
 
-def test_streaming_span_filter_matches_batch(spark, sf_dir, tmp_path):
-    """foreachBatch boilerplate removal equals batch span_dedup exactly
-    when the static side is the batch frequency table's nd>1 keys."""
+def test_streaming_span_filter_matches_batch(spark, sf_dir):
+    """span_filter_apply (the APPLY side an inventory query and a
+    foreachBatch runner share) equals batch span_dedup exactly when the
+    static side is the batch frequency table's nd>1 keys."""
     from pyspark.sql import functions as F
-    from mcp_clickhouse_spark.pipeline.dedup import span_dedup
-    from mcp_clickhouse_spark.streaming.ops import (
-        run_streaming_span_filter,
-        stream_documents,
-    )
+    from mcp_clickhouse_spark.pipeline.dedup import doc_spans, span_dedup
+    from mcp_clickhouse_spark.streaming.ops import span_filter_apply
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     want = {r["doc_id"]: tuple(r) for r in span_dedup(docs).collect()}
 
     # batch-computed boilerplate keys (spans in >1 distinct doc)
-    from mcp_clickhouse_spark.pipeline.dedup import doc_spans
-
     keys = (
         doc_spans(docs)
         .groupBy("chunk_key")
         .agg(F.countDistinct("doc_id").alias("nd"))
         .where(F.col("nd") > 1)
     )
-    out = str(tmp_path / "cleaned")
-    run_streaming_span_filter(
-        stream_documents(spark, f"{sf_dir}/documents.parquet"), keys, out
-    )
-    got = {r["doc_id"]: tuple(r) for r in spark.read.parquet(out).collect()}
+    got = {r["doc_id"]: tuple(r) for r in span_filter_apply(docs, keys).collect()}
     assert got == want
 
 
