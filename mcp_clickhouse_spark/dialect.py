@@ -484,19 +484,26 @@ def _json_type(args: list[str]) -> str:
     )
 
 
-_WORD = re.compile(r"(?<!\w)[^\W\d]\w*")
+_WORD = re.compile(r"(?<!\w)[^\W\d]\w*|`\w+`|\"\w+\"")
 
 
 def _subst_words(body: str, repl: dict[str, str]) -> str:
     """Replace each whole word of ``body`` that is a key of ``repl``, at
-    the code positions :class:`Scan` reports only: a word inside a quoted
-    span or a comment stays as it is.  One pass, so a replacement that
-    spells another key is never substituted again."""
+    the code positions :class:`Scan` reports only, and each identifier
+    quoted whole (`` `x` `` or ``"x"``) that names a key: a word inside a
+    string literal or a comment stays as it is.  One pass, so a
+    replacement that spells another key is never substituted again."""
     sc = Scan(body)
-    return _WORD.sub(
-        lambda m: repl.get(m.group(), m.group()) if sc.code(m.start()) else m.group(),
-        body,
-    )
+
+    def sub(m: re.Match) -> str:
+        w = m.group()
+        if sc.code(m.start()):
+            return repl.get(w, w)
+        if w[0] in "`\"" and sc.span(m.start()) == m.span():
+            return repl.get(w[1:-1], w)
+        return w
+
+    return _WORD.sub(sub, body)
 
 
 def _key_lambda_comparator(lam: str, arr: str) -> str:

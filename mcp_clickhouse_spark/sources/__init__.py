@@ -2,19 +2,8 @@
 
 One reader per source: SQLite and Avro each read through their Python Data
 Source (``sqlite_datasource.SqliteDataSource``, ``avro_lite.AvroLiteDataSource``),
-which ``sqlite()`` and ``read_avro`` call."""
+which ``table_functions.sqlite()`` and ``avro_lite.read_avro`` call.
 
-from mcp_clickhouse_spark.sources.avro_lite import read_avro, write_avro  # noqa: F401
-from mcp_clickhouse_spark.sources.table_functions import (  # noqa: F401
-    FORMAT_ALIASES,
-    bind_sql_table_functions,
-    detect_format,
-    file,
-    hdfs,
-    jdbc,
-    mysql,
-    postgresql,
-    s3,
-    sqlite,
-    url,
-)
+This package imports none of its modules: Spark's Python workers import it
+before every Data Source module they run, and a worker needs none of the
+table-function or Avro code."""

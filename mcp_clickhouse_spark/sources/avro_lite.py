@@ -52,7 +52,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
-from mcp_clickhouse_spark.session import read_data_source
 
 _MAGIC = b"Obj\x01"
 _SYNC = b"mcp-spark-avrolt"  # deterministic 16-byte sync marker for writes
@@ -846,6 +845,10 @@ def read_avro(
         options["readerSchema"] = (
             reader_schema if isinstance(reader_schema, str) else json.dumps(reader_schema)
         )
+    # imported here: Spark's Python workers import this module for every
+    # Avro read task and need none of the session module's imports
+    from mcp_clickhouse_spark.session import read_data_source
+
     return read_data_source(spark, AvroLiteDataSource, options)
 
 

@@ -18,9 +18,10 @@ Predicate pushdown: Catalyst hands the reader its filters via
 ``DataSourceReader.pushFilters`` (needs
 ``spark.sql.python.filterPushdown.enabled``, which the served session sets).
 The translatable subset (comparisons, IN, IS NULL, prefix/suffix/contains,
-NOT) becomes a SQL WHERE clause evaluated inside SQLite — index-backed when
-the column is indexed — and only the untranslatable remainder is re-checked
-by Spark.
+NOT) becomes a SQL WHERE clause evaluated inside SQLite — a numeric
+comparison is index-backed when the column is indexed — and only the
+untranslatable remainder is re-checked by Spark, so each pushed fragment
+must keep exactly the rows Spark would (see ``_translate``).
 
 Usage:
     spark.dataSource.register(SqliteDataSource)
@@ -44,6 +45,7 @@ bound per-task work, pushdown bounds per-task I/O.
 
 from __future__ import annotations
 
+import math
 import sqlite3
 from dataclasses import dataclass
 from typing import Iterator
@@ -103,33 +105,38 @@ class _RowidRange(InputPartition):
     hi: int  # half-open
 
 
-def _sql_literal(v) -> str:
+def _sql_literal(v) -> str | None:
+    """A filter value as a SQLite literal, or None when SQLite would not
+    compare it as Spark does (bytes; inf/nan, which SQLite has no literal for)."""
     if v is None:
         return "NULL"
     if isinstance(v, bool):
         return "1" if v else "0"
-    if isinstance(v, (int, float)):
+    if isinstance(v, int) or (isinstance(v, float) and math.isfinite(v)):
         return repr(v)
-    s = str(v).replace("'", "''")
-    return f"'{s}'"
+    if isinstance(v, str):
+        return "'" + v.replace("'", "''") + "'"
+    return None
 
 
-def _like_escape(s: str) -> str:
-    # Two escaping layers, both required: LIKE-metachar escaping (backslash,
-    # declared via ESCAPE '\') and SQL string-literal quote doubling — without
-    # the latter, startswith("O'Brien") generated `LIKE 'O'Brien%'` (malformed
-    # SQL / literal injection).
-    return (
-        str(s)
-        .replace("\\", "\\\\")
-        .replace("%", r"\%")
-        .replace("_", r"\_")
-        .replace("'", "''")
-    )
+_COMPARISONS = {
+    EqualTo: "=",
+    GreaterThan: ">",
+    GreaterThanOrEqual: ">=",
+    LessThan: "<",
+    LessThanOrEqual: "<=",
+}
 
 
 def _translate(f: Filter) -> str | None:
-    """One filter → SQLite WHERE fragment, or None if not translatable."""
+    """One filter → SQLite WHERE fragment that keeps exactly the rows Spark
+    would keep, or None if there is no such fragment.
+
+    SQLite compares text by the column's declared collation (NOCASE ignores
+    case), applies its type affinity to the literal, and its LIKE ignores
+    ASCII case — all unlike Spark.  So a string comparison reads the
+    column as text under BINARY collation, and the prefix/suffix/contains
+    tests use ``substr``/``instr``, which compare exact characters."""
     if isinstance(f, Not):
         inner = _translate(f.child)
         return f"NOT ({inner})" if inner else None
@@ -137,29 +144,36 @@ def _translate(f: Filter) -> str | None:
     if not attr or len(attr) != 1:  # nested columns can't exist in SQLite
         return None
     col = _quote(attr[0])
-    if isinstance(f, EqualTo):
-        return f"{col} = {_sql_literal(f.value)}"
-    if isinstance(f, GreaterThan):
-        return f"{col} > {_sql_literal(f.value)}"
-    if isinstance(f, GreaterThanOrEqual):
-        return f"{col} >= {_sql_literal(f.value)}"
-    if isinstance(f, LessThan):
-        return f"{col} < {_sql_literal(f.value)}"
-    if isinstance(f, LessThanOrEqual):
-        return f"{col} <= {_sql_literal(f.value)}"
-    if isinstance(f, In):
-        return f"{col} IN ({', '.join(_sql_literal(v) for v in f.values)})"
     if isinstance(f, IsNull):
         return f"{col} IS NULL"
     if isinstance(f, IsNotNull):
         return f"{col} IS NOT NULL"
-    if isinstance(f, StringStartsWith):
-        return f"{col} LIKE '{_like_escape(f.value)}%' ESCAPE '\\'"
-    if isinstance(f, StringEndsWith):
-        return f"{col} LIKE '%{_like_escape(f.value)}' ESCAPE '\\'"
-    if isinstance(f, StringContains):
-        return f"{col} LIKE '%{_like_escape(f.value)}%' ESCAPE '\\'"
-    return None
+    if isinstance(f, (StringStartsWith, StringEndsWith, StringContains)):
+        lit = _sql_literal(f.value)
+        if lit is None:
+            return None
+        if isinstance(f, StringContains):
+            return f"instr({col}, {lit}) > 0"
+        if not f.value:  # every non-NULL string starts and ends with ''
+            return f"{col} IS NOT NULL"
+        n = len(f.value)
+        if isinstance(f, StringStartsWith):
+            return f"substr({col}, 1, {n}) = {lit}"
+        return f"substr({col}, -{n}) = {lit}"
+    if isinstance(f, In):
+        values = list(f.value)
+    elif type(f) in _COMPARISONS:
+        values = [f.value]
+    else:
+        return None
+    lits = [_sql_literal(v) for v in values]
+    if None in lits:
+        return None
+    if any(isinstance(v, str) for v in values):
+        col = f"CAST({col} AS TEXT) COLLATE BINARY"
+    if isinstance(f, In):
+        return f"{col} IN ({', '.join(lits)})"
+    return f"{col} {_COMPARISONS[type(f)]} {lits[0]}"
 
 
 class SqliteDataSource(DataSource):

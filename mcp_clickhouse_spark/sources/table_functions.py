@@ -284,9 +284,8 @@ def sqlite(
     through :class:`~mcp_clickhouse_spark.sources.sqlite_datasource.SqliteDataSource`:
     each task scans its own rowid range of the file, and the filters Spark
     pushes run inside SQLite as its WHERE clause."""
-    options = {"path": path, "table": table}
-    if num_partitions is not None:
-        options["numPartitions"] = str(num_partitions)
+    n = num_partitions or min(spark.sparkContext.defaultParallelism, 8)
+    options = {"path": path, "table": table, "numPartitions": str(n)}
     return read_data_source(spark, SqliteDataSource, options)
 
 

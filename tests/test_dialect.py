@@ -246,6 +246,20 @@ def test_lambda_variable_not_substituted_in_escaped_literal(spark):
     )[0] == {"a": "bk'v"}
 
 
+def test_lambda_variable_substituted_in_quoted_identifier(spark):
+    """A lambda body may name its parameter as a quoted identifier
+    (`` `x` `` or ``"x"``, as ClickHouse allows): that is the parameter and
+    is substituted; the same text inside a string literal is not."""
+    out = translate("SELECT arraySort(x -> -`x`, arr) FROM t")
+    assert "-_ch_sort_l" in out and "`x`" not in out
+    out = translate("SELECT arrayFirstIndex(x -> \"x\" = '`x`', arr) FROM t")
+    assert "element_at(arr, __pi) = '`x`'" in out
+    out = translate("SELECT mapApply((k, v) -> (`k`, \"v\"), m) FROM t")
+    assert "'key', __ma.key, 'value', __ma.value" in out
+    assert translate("SELECT arrayMap(x -> `xx` + x, arr) FROM t").count("`xx`") == 1
+    assert one(spark, "SELECT arraySort(x -> -`x`, [1, 3, 2])")[0] == [3, 2, 1]
+
+
 def test_prompt_exists():
     from mcp_clickhouse_spark.prompt import INITIAL_PROMPT
 

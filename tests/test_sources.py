@@ -10,7 +10,7 @@ import threading
 import pytest
 from pyspark.sql import functions as F
 
-from mcp_clickhouse_spark.sources import detect_format, file, jdbc, sqlite, url
+from mcp_clickhouse_spark.sources.table_functions import detect_format, file, jdbc, sqlite, url
 
 
 @pytest.fixture(scope="module")
@@ -113,7 +113,7 @@ def test_unsupported_format_message(spark):
 
 def test_sqlite_live_read_and_cross_source_join(spark, sf_dir, tmp_path):
     """B25 live path (judge round-3 item 5): a real SQLite database read
-    through the rowid-range mapInPandas source, then joined against a
+    through the rowid-range SQLite Data Source, then joined against a
     parquet table — the cross-source join the reference promises
     (chdb_prompt.py:53-55)."""
     import sqlite3
@@ -361,9 +361,9 @@ def test_sqlite_python_datasource_with_pushdown(spark, tmp_path):
 
 
 def test_sqlite_pushdown_like_quote_escape(spark, tmp_path):
-    """LIKE pushdown must double single quotes in the pattern: a value like
-    O'Brien previously generated `LIKE 'O'Brien%'` — malformed SQL and a
-    string-literal injection vector (ADVICE r4)."""
+    """String-pattern pushdown must double single quotes in the pattern: a
+    value like O'Brien once generated `LIKE 'O'Brien%'` — malformed SQL and
+    a string-literal injection vector (ADVICE r4)."""
     import sqlite3
 
     from mcp_clickhouse_spark.sources.sqlite_datasource import (
@@ -376,15 +376,15 @@ def test_sqlite_pushdown_like_quote_escape(spark, tmp_path):
         StringStartsWith,
     )
 
-    # unit: all three LIKE shapes double quotes and keep metachar escaping
+    # unit: all three shapes double quotes; LIKE metachars are plain text
     assert _translate(StringStartsWith(("n",), "O'Brien")) == (
-        "\"n\" LIKE 'O''Brien%' ESCAPE '\\'"
+        "substr(\"n\", 1, 7) = 'O''Brien'"
     )
     assert _translate(StringEndsWith(("n",), "O'Brien")) == (
-        "\"n\" LIKE '%O''Brien' ESCAPE '\\'"
+        "substr(\"n\", -7) = 'O''Brien'"
     )
     assert _translate(StringContains(("n",), "100%_O'B")) == (
-        "\"n\" LIKE '%100\\%\\_O''B%' ESCAPE '\\'"
+        "instr(\"n\", '100%_O''B') > 0"
     )
 
     # e2e: the pushed filter executes inside SQLite without error
@@ -408,11 +408,58 @@ def test_sqlite_pushdown_like_quote_escape(spark, tmp_path):
     )
     got = sorted(r.name for r in df.where(F.col("name").startswith("O'")).collect())
     assert got == ["O'Brien", "O'Connor"]
-    assert "LIKE 'O''%'" in open(trace).read()  # executed inside SQLite
+    assert "substr(\"name\", 1, 2) = 'O'''" in open(trace).read()  # ran in SQLite
     got = [r.name for r in df.where(F.col("name").endswith("100%")).collect()]
     assert got == ["D'Arcy 100%"]
     got = [r.name for r in df.where(F.col("name").contains("'Brien")).collect()]
     assert got == ["O'Brien"]
+
+
+def test_sqlite_pushdown_keeps_spark_semantics(spark, tmp_path):
+    """Every pushed filter keeps exactly the rows Spark keeps on the same
+    data, although SQLite's LIKE ignores ASCII case, a NOCASE column
+    compares without case, a DATE column has numeric affinity, and SQLite
+    has no literal for inf/nan."""
+    import math
+    import sqlite3
+
+    from mcp_clickhouse_spark.sources.sqlite_datasource import _translate
+    from mcp_clickhouse_spark.tools import run_select_query
+    from pyspark.sql.datasource import EqualTo, GreaterThan
+
+    db = str(tmp_path / "sem.db")
+    with sqlite3.connect(db) as con:
+        con.execute("CREATE TABLE t (s TEXT, ci TEXT COLLATE NOCASE, d DATE, x REAL)")
+        con.executemany(
+            "INSERT INTO t VALUES (?, ?, ?, ?)",
+            [
+                ("Bob", "Bob", "2024", 1.0),
+                ("bob", "bob", "2023-01-01", math.inf),
+                ("B%_", "B", None, -math.inf),
+                ("", None, "2023-12-31", None),
+                (None, "BOB", "2025-02-02", 2.5),
+            ],
+        )
+    pushed = sqlite(spark, db, "t", num_partitions=2)
+    local = spark.createDataFrame(pushed.collect(), pushed.schema)
+    preds = [
+        F.col("s").startswith("B"), F.col("s").endswith("ob"), F.col("s").contains("o"),
+        F.col("s").startswith("B%"), F.col("s").startswith(""), F.col("s").endswith(""),
+        ~F.col("s").startswith("B"), F.col("s") == "Bob", F.col("s") > "B",
+        F.col("ci") == "Bob", F.col("ci").isin("bob", "x"), ~F.col("ci").isin("Bob"),
+        F.col("ci").startswith("b"), F.col("d") > "2023-06-01", F.col("d") == "2024",
+        F.col("x") > 2.0, F.col("x") == math.inf, F.col("x") < -1e308,
+    ]
+    for p in preds:
+        got = sorted(map(str, pushed.where(p).collect()))
+        assert got == sorted(map(str, local.where(p).collect())), str(p)
+    got = sorted(r.s for r in pushed.where(F.col("s").startswith("B")).collect())
+    assert got == ["B%_", "Bob"]
+    res = run_select_query(spark, f"SELECT s FROM sqlite('{db}', 't') WHERE s LIKE 'B%'")
+    assert sorted(r[0] for r in res["rows"]) == ["B%_", "Bob"]
+    # no SQLite literal for a non-finite float: Spark evaluates that filter
+    assert _translate(GreaterThan(("x",), math.inf)) is None
+    assert _translate(EqualTo(("x",), math.nan)) is None
 
 
 def test_sqlite_datasource_column_pruning(spark, tmp_path):
