@@ -55,6 +55,12 @@ def get_spark(
         session itself, so a cluster master sizes them to its executors.
       - AQE on: runtime coalescing of shuffle partitions, skew-join splitting
         and broadcast-join conversion replace hand-tuned plans at scale.
+        Over a one-task table (see ``_ONE_TASK_ROWS``) the plan has no
+        exchange, so AQE's only query stage is the result stage: one job,
+        nothing to re-plan.  Turning it off saved no stage and no job there
+        (sf0.01 lineitem GROUP BY … ORDER BY, local[4], medians of six
+        interleaved rounds: one partition 140 vs 135 ms CPU per call with
+        AQE on vs off, split layout 372 vs 361 ms), so it stays on.
       - Arrow on: every Pandas-UDF boundary is Arrow-batched.
       - UTC session timezone: deterministic timestamp semantics vs the
         DuckDB oracle (naive timestamps on both sides).
@@ -114,7 +120,7 @@ def get_spark(
 # restarted session never sees stale plans.
 _TABLE_CACHE: dict[tuple[int, str, str], DataFrame] = {}
 
-# --- storage layout: split single-row-group tables ---------------------------
+# --- storage layout: one-task tables and split single-row-group tables ------
 # A row group is the smallest unit a parquet scan task reads, and the
 # testdata ships every table as ONE file with ONE row group, so each scan of
 # it would run as one task whatever the core count.  A warehouse owns its
@@ -123,7 +129,28 @@ _TABLE_CACHE: dict[tuple[int, str, str], DataFrame] = {}
 # keyed by the source's name, size, mtime and N.  Tables that arrive as many
 # files or many row groups, as real ones at scale do, are read in place.
 #
-# The file count is the scan parallelism:
+# A single file of at most _ONE_TASK_ROWS rows (footer count) is not split:
+# it is read in place and served as ONE partition (``coalesce(1)``).  A
+# parquet scan's UnknownPartitioning satisfies no clustered distribution, so
+# every GROUP BY or ORDER BY over it plans a hash or range exchange, and
+# each job and stage that adds costs driver CPU (~30 ms per job on 4
+# cores).  SinglePartition output satisfies every aggregate, window, global
+# sort and co-partitioned join: a query over such tables plans no exchange
+# and runs as one job with one task.  The budget, from ``SELECT k, count(*), sum(v) … GROUP BY k
+# ORDER BY k`` on local[4], the split layout (a file of at most _SPLIT_ROWS
+# rows read in place, unsplit) vs one partition, medians of six interleaved
+# rounds of ten calls, ms per call:
+#   sf0.01 orders     15k rows   CPU 392 -> 159   wall 172 ->  87
+#   sf0.01 lineitem   60k        CPU 305 -> 138   wall 145 ->  77
+#   sf0.1  events    100k        CPU 262 -> 117   wall 136 ->  79
+#   sf0.1  orders    150k        CPU 248 -> 129   wall 137 ->  96
+#   sf0.1  lineitem  600k        CPU 270 -> 198   wall 139 -> 159
+# One task saves CPU at every size, but its wall-time lead shrinks with the
+# row count and is lost by 600k rows (more cores favour the split scan,
+# whose tasks run in parallel).  100k keeps every sf0.01 table (lineitem:
+# 60k) and sf0.1's events within it, and sf0.1's orders and lineitem split.
+#
+# The file count of a split copy is the scan parallelism:
 # - _SPLIT_ROWS: 18,750 rows per file bring orders (150k rows at sf0.1) to 8
 #   scan tasks; every orders/events-scanning bench query gained;
 # - below _SPLIT_BIG_ROWS at most 8 files: 16 for sf0.1's 600k-row lineitem
@@ -132,13 +159,15 @@ _TABLE_CACHE: dict[tuple[int, str, str], DataFrame] = {}
 #   _SPLIT_MAX_FILES: sf1's 6M-row lineitem on 32 cores ran the bench in
 #   7.25 s with 8 files, 6.56 s with 16 and 7.01 s with 32;
 # - _SPLIT_CPU_TABLES: shingling and vector math are CPU-heavy per row, so
-#   from _SPLIT_CPU_MIN_ROWS rows these get at least 4 files (8 was a wash).
+#   from _SPLIT_CPU_MIN_ROWS rows these get at least 4 files (8 was a wash)
+#   and are never one-task tables.
 _WAREHOUSE_ROOT = os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/spark_graft_warehouse")
 _SPLIT_ROWS = 18_750
 _SPLIT_MAX_FILES = 32
 _SPLIT_BIG_ROWS = 1_000_000
 _SPLIT_CPU_TABLES = {"documents": 4, "embeddings": 4}
 _SPLIT_CPU_MIN_ROWS = 2_000
+_ONE_TASK_ROWS = 100_000
 
 # Parquet leaf annotations whose Spark type the footer mapping knows, and
 # the served values of the confs it assumes.  Anything else (INT96, unsigned
@@ -149,6 +178,14 @@ _FOOTER_CONFS = {
     "spark.sql.parquet.inferTimestampNTZ.enabled": "true",
     "spark.sql.parquet.binaryAsString": "false",
 }
+
+
+def _one_task(rows: int, name: str) -> bool:
+    """Whether a single-file table of ``rows`` rows is served as one
+    partition rather than split."""
+    return rows <= _ONE_TASK_ROWS and not (
+        name in _SPLIT_CPU_TABLES and rows >= _SPLIT_CPU_MIN_ROWS
+    )
 
 
 def _split_file_cap(spark: SparkSession, rows: int) -> int:
@@ -196,8 +233,8 @@ def _footer_schema(spark: SparkSession, pf: pq.ParquetFile) -> T.StructType | No
 def _split_layout(spark: SparkSession, path: str, name: str) -> tuple[str, T.StructType | None]:
     """Return the path read_table should scan and its schema from the parquet
     footer (None: let Spark infer it).  The path is the original file, or a
-    multi-file copy when the original is a single row group big enough that
-    one scan task would bottleneck."""
+    multi-file copy when the original is a single row group above the
+    one-task budget."""
     try:
         pf = pq.ParquetFile(path)
     except (OSError, pa.ArrowException):
@@ -207,9 +244,9 @@ def _split_layout(spark: SparkSession, path: str, name: str) -> tuple[str, T.Str
         meta = pf.metadata
         # Only a mapped schema is copied: pyarrow round-trips exactly the
         # types the mapping knows (an INT96 column would come back as NANOS).
-        if schema is None or meta.num_row_groups != 1:
-            return path, schema
         rows = meta.num_rows
+        if schema is None or meta.num_row_groups != 1 or _one_task(rows, name):
+            return path, schema
         n = min(-(-rows // _SPLIT_ROWS), _split_file_cap(spark, rows))
         if name in _SPLIT_CPU_TABLES and rows >= _SPLIT_CPU_MIN_ROWS:
             n = max(n, _SPLIT_CPU_TABLES[name])
@@ -232,7 +269,8 @@ def _split_layout(spark: SparkSession, path: str, name: str) -> tuple[str, T.Str
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one testdata table as a DataFrame, normalizing types.
+    """Load one testdata table as a DataFrame, normalizing types; a table
+    within the one-task budget is served as one partition.
 
     ``events.ts`` arrives as raw nanoseconds (via ``nanosAsLong``) when the
     file stores TIMESTAMP(NANOS); we truncate to microseconds exactly like
@@ -246,8 +284,13 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         # Runtime-settable; needed even when the caller built its own session.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path, schema = _split_layout(spark, os.path.join(sf_dir, f"{name}.parquet"), name)
+    src = os.path.join(sf_dir, f"{name}.parquet")
+    path, schema = _split_layout(spark, src, name)
     df = (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
+    # In place with a mapped footer: a one-task table, or else a
+    # multi-row-group file or a split whose copy failed, which stay as read.
+    if path == src and schema is not None and _one_task(pq.read_metadata(src).num_rows, name):
+        df = df.coalesce(1)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # ns → µs floor-truncation as TIMESTAMP_NTZ: timezone-independent and
         # identical to DuckDB's CAST(ts AS TIMESTAMP).

@@ -48,8 +48,12 @@ def stream_events(
 
     The file source replays existing files in order — the standard way to
     develop/backfill the same pipeline that later points at Kafka.
-    ``max_files_per_trigger`` bounds files admitted per micro-batch (the
-    rate-limited backfill knob; see :func:`backfill_events_stream`).
+    ``max_files_per_trigger`` bounds files admitted per micro-batch: the
+    rate-limited backfill.  Point the stream at a directory of historical
+    files and availableNow + maxFilesPerTrigger drain it incrementally —
+    bounded state growth and shuffle size per micro-batch instead of one
+    giant batch, same final answer.  At 100 TB the trigger bound is what
+    keeps a year-long replay from materializing a year of input in one go.
 
     readStream requires an explicit schema, so the ts physical type is
     sniffed from the parquet footer: µs/ms-precision files read as
@@ -216,21 +220,6 @@ def user_running_totals(events: DataFrame, watermark: str = "2 hours") -> DataFr
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-
-
-def backfill_events_stream(
-    spark: SparkSession, backfill_dir: str, max_files_per_trigger: int = 1
-) -> DataFrame:
-    """Rate-limited historical replay: the same events stream, but the file
-    source admits at most ``max_files_per_trigger`` files per micro-batch.
-
-    This is the standard backfill pattern: point the streaming pipeline at a
-    directory of historical files and let availableNow + maxFilesPerTrigger
-    drain it INCREMENTALLY — bounded state growth and shuffle size per
-    micro-batch instead of one giant batch, same final answer.  At 100 TB
-    the trigger bound is what keeps a year-long replay from materializing a
-    year of input in one go."""
-    return stream_events(spark, backfill_dir, max_files_per_trigger=max_files_per_trigger)
 
 
 def run_available_now(stream_df: DataFrame, sink_table: str, output_mode: str = "complete"):

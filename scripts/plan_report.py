@@ -59,9 +59,10 @@ def main() -> None:
     lines = [
         "# PLANS — physical-plan quality of every registered query",
         "",
-        f"Generated by `scripts/plan_report.py` at `{sf_dir}`. The judge-relevant",
-        "plan properties per query: shuffle (Exchange) count, broadcast joins,",
-        "filter pushdown into the parquet scan, and scan-column pruning.",
+        f"Generated by `scripts/plan_report.py` at `{sf_dir}` on",
+        f"`{spark.sparkContext.master}`. The judge-relevant plan properties per",
+        "query: shuffle (Exchange) count, broadcast joins, filter pushdown into",
+        "the parquet scan, and scan-column pruning.",
         "",
         "## Headline (bench.py) queries",
         "",
@@ -104,6 +105,14 @@ def main() -> None:
     lines += [
         "",
         "Notes:",
+        "- A table within `session._ONE_TASK_ROWS` rows (at sf0.1: region,",
+        "  nation, supplier, customer, part, events) is served as one",
+        "  partition, so an aggregate, sort or window over such tables alone",
+        "  plans no exchange. The shapes the notes below describe are those",
+        "  of tables above that budget.",
+        "- The core count sets some counts: `_spread` repartitions a table",
+        "  with fewer scan partitions than cores, which can spare the",
+        "  MinHash aggregations their own exchanges.",
         "- `join_asof` is the union+window strategy: exactly one exchange for",
         "  arbitrarily large sides (no pairwise blowup).",
         "- `join_star_revenue` pre-aggregates the fact side, then all FOUR",

@@ -25,6 +25,19 @@ def sf_dir():
     return SF_DIR
 
 
+@pytest.fixture
+def above_one_task_budget(monkeypatch):
+    """Serve testdata tables as tables above the one-task budget are served
+    (an UnknownPartitioning file scan or split copy, as at scale), for the
+    gates that pin those plan shapes on the small sf0.001 tables."""
+    from mcp_clickhouse_spark import session as S
+
+    monkeypatch.setattr(S, "_ONE_TASK_ROWS", 0)
+    S._TABLE_CACHE.clear()
+    yield
+    S._TABLE_CACHE.clear()
+
+
 @pytest.fixture(scope="session")
 def users(spark):
     """FIXTURES.md §1.1 — the reference's users table (test_mcp_server.py:40-69)."""

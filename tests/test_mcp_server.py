@@ -8,13 +8,15 @@ three transports funnel into — plus an HTTP/SSE smoke on an ephemeral port.
 Covers: initialize/ping, tools/list, exact rows through tools/call, BOTH
 error contracts (engine path raises → isError content; embedded path returns
 {"status": "error"} payloads), unknown tool/prompt, invalid arguments,
-pagination token walk, prompts, 4-way thread concurrency, GET /health,
-POST /mcp, and the SSE endpoint handshake.
+pagination token walk, prompts, 4-way thread concurrency, TCP_NODELAY on
+the HTTP socket, GET /health, POST /mcp, and the SSE endpoint handshake.
 """
 
 from __future__ import annotations
 
 import json
+import queue
+import socket
 import threading
 import urllib.request
 
@@ -276,6 +278,30 @@ def http_base(server):
     th.start()
     yield f"http://127.0.0.1:{port}"
     httpd.shutdown()
+
+
+def test_http_socket_has_nagle_off(server):
+    """The accepted socket carries TCP_NODELAY: a reply goes out as two
+    sends (headers, then body), and with Nagle on the body would wait for
+    the client's delayed ACK on every keep-alive call."""
+    httpd = make_http_server(server, "127.0.0.1", 0)
+    seen: queue.Queue = queue.Queue()
+    finish = httpd.finish_request
+
+    def spy(request, client_address):
+        finish(request, client_address)
+        seen.put(request.getsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY))
+
+    httpd.finish_request = spy
+    threading.Thread(target=httpd.serve_forever, daemon=True).start()
+    try:
+        url = f"http://127.0.0.1:{httpd.server_address[1]}/health"
+        with urllib.request.urlopen(url, timeout=30) as resp:
+            resp.read()
+        assert seen.get(timeout=30) != 0
+    finally:
+        httpd.shutdown()
+        httpd.server_close()
 
 
 def test_http_health(http_base):

@@ -400,6 +400,7 @@ def test_repetition_filters_line_and_ngram_metrics(spark):
     assert bool(d3.keep) is True
 
 
+@pytest.mark.usefixtures("above_one_task_budget")
 def test_repetition_filters_plan_shape(spark):
     """Two exchanges only: gram counts and the per-doc regroup — the n-gram
     arrays themselves are built shuffle-free in the scan projection."""
@@ -599,6 +600,7 @@ def test_incremental_dedup_semantics(spark):
     assert sorted(r.doc_id for r in kept_exact.collect()) == [10, 11, 12, 13]
 
 
+@pytest.mark.usefixtures("above_one_task_budget")
 def test_incremental_dedup_plan_shape(spark):
     """Keeper selection folds to WindowGroupLimit (map-side partial top-1
     BEFORE the key exchange) and the anti-join adds no exchange on the

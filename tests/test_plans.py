@@ -14,6 +14,9 @@ import mcp_clickhouse_spark.inventory as inventory
 
 inventory.load_all()
 
+# These gates pin the shapes of scans above the one-task budget.
+pytestmark = pytest.mark.usefixtures("above_one_task_budget")
+
 
 def plan_of(spark, sf_dir, name: str) -> str:
     return explain_formatted(QUERIES[name].fn(spark, sf_dir))

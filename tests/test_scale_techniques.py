@@ -136,6 +136,8 @@ def test_split_layout_rewrites_single_row_group(spark, tmp_path, monkeypatch):
     S._TABLE_CACHE.clear()
     df = S.read_table(spark, src_dir, "orders")
     assert df.rdd.getNumPartitions() >= 2  # scan parallelism restored
+    # above the one-task budget: a GROUP BY still plans its exchange
+    assert count_nodes(explain_formatted(df.groupBy("v").count()), "Exchange") >= 1
     assert df.count() == 160_000
     assert df.agg({"v": "sum"}).first()[0] == big.agg({"v": "sum"}).first()[0]
     wh_dirs = os.listdir(str(tmp_path / "wh"))
@@ -147,6 +149,7 @@ def test_split_layout_rewrites_single_row_group(spark, tmp_path, monkeypatch):
     # small table: read from the original path, nothing written
     small_df = S.read_table(spark, src_dir, "nation")
     assert small_df.count() == 100
+    assert small_df.rdd.getNumPartitions() == 1
     assert os.listdir(str(tmp_path / "wh")) == wh_dirs
 
     S._TABLE_CACHE.clear()
@@ -219,28 +222,86 @@ def test_int96_table_is_read_with_inferred_schema(spark, tmp_path, monkeypatch):
 
 def test_register_testdata_launches_no_spark_job(spark, sf_dir, tmp_path, monkeypatch):
     """Cold start: on an empty split-layout warehouse, registering the ten
-    tables (with the lineitem/orders/documents/... split copies) runs no
-    Spark job: schemas come from the footers and pyarrow writes the copies."""
+    tables runs no Spark job: schemas come from the footers, and pyarrow
+    writes any split copy.  At sf0.01 every table is within the one-task
+    budget, so nothing is copied; with the budget at 0, lineitem is split,
+    still without a job."""
     import os
 
     from mcp_clickhouse_spark import session as S
 
     monkeypatch.setattr(S, "_WAREHOUSE_ROOT", str(tmp_path / "wh"))
+    sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
     # own temp views: the suite's shared session keeps its sf0.001 catalog
-    fresh = spark.newSession()
+    one_task, split = spark.newSession(), spark.newSession()
     sc = spark.sparkContext
     group = "test-register-testdata-no-jobs"
     sc.setJobGroup(group, group)
     try:
-        S.register_testdata(fresh, os.path.join(os.path.dirname(sf_dir), "sf0.01"))
+        S.register_testdata(one_task, sf01)
+        copies = os.listdir(tmp_path / "wh") if os.path.exists(tmp_path / "wh") else []
+        monkeypatch.setattr(S, "_ONE_TASK_ROWS", 0)
+        S.register_testdata(split, sf01)
     finally:
         sc.setJobGroup("", "")
         jobs = list(sc.statusTracker().getJobIdsForGroup(group))
-        for key in [k for k in S._TABLE_CACHE if k[0] == id(fresh)]:
+        for key in [k for k in S._TABLE_CACHE if k[0] in (id(one_task), id(split))]:
             del S._TABLE_CACHE[key]
     assert jobs == []
+    assert copies == []
+    assert one_task.table("lineitem").rdd.getNumPartitions() == 1
     assert any(d.startswith("lineitem-") for d in os.listdir(tmp_path / "wh"))
-    assert fresh.table("lineitem").count() == 60_000
+    for fresh in (one_task, split):
+        assert fresh.table("lineitem").count() == 60_000
+
+
+def test_one_task_table_reads_as_single_partition(spark, sf_dir, tmp_path, monkeypatch):
+    """A single-file table within _ONE_TASK_ROWS (sf0.01 lineitem, 60k rows,
+    the largest table the tool-path benchmark reads) is read in place, with
+    no split copy, as one partition whose output is SinglePartition."""
+    import os
+
+    from mcp_clickhouse_spark import session as S
+
+    monkeypatch.setattr(S, "_WAREHOUSE_ROOT", str(tmp_path / "wh"))
+    sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    src = os.path.join(sf01, "lineitem.parquet")
+    assert S._split_layout(spark, src, "lineitem")[0] == src
+    df = S.read_table(spark, sf01, "lineitem")
+    assert df.rdd.getNumPartitions() == 1
+    partitioning = df._jdf.queryExecution().executedPlan().outputPartitioning()
+    assert partitioning.toString() == "SinglePartition"
+    assert not os.path.exists(tmp_path / "wh")
+
+
+def test_one_task_group_by_plans_no_exchange_and_runs_one_job(spark, sf_dir):
+    """A GROUP BY ... ORDER BY over a one-task table plans no Exchange and
+    runs as one Spark job, with the row counts pyarrow reads."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from mcp_clickhouse_spark.session import read_table
+
+    sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    df = (
+        read_table(spark, sf01, "lineitem")
+        .groupBy("l_returnflag")
+        .count()
+        .orderBy("l_returnflag")
+    )
+    assert count_nodes(explain_formatted(df), "Exchange") == 0
+    sc = spark.sparkContext
+    group = "test-one-task-group-by"
+    sc.setJobGroup(group, group)
+    try:
+        rows = [tuple(r) for r in df.collect()]
+    finally:
+        sc.setJobGroup("", "")
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    flags = pq.read_table(os.path.join(sf01, "lineitem.parquet"), columns=["l_returnflag"])
+    want = flags.group_by("l_returnflag").aggregate([([], "count_all")]).to_pylist()
+    assert rows == sorted((w["l_returnflag"], w["count_all"]) for w in want)
 
 
 @pytest.mark.parametrize("name,files", [("lineitem", 8), ("documents", 4)])
@@ -278,6 +339,7 @@ def test_split_layout_unwritable_warehouse_reads_in_place(spark, sf_dir, tmp_pat
 
     (tmp_path / "file").write_text("")
     monkeypatch.setattr(S, "_WAREHOUSE_ROOT", str(tmp_path / "file" / "wh"))
+    monkeypatch.setattr(S, "_ONE_TASK_ROWS", 0)  # lineitem (60k rows) is a split candidate
     src = os.path.join(os.path.dirname(sf_dir), "sf0.01", "lineitem.parquet")
     path, schema = S._split_layout(spark, src, "lineitem")
     assert path == src and schema == spark.read.parquet(src).schema

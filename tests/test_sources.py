@@ -687,6 +687,26 @@ def test_system_snapshots_are_local_relations(spark, sf_dir):
     assert leaf(_execute(spark, "EXPLAIN SYNTAX SELECT 1", "clickhouse"))
 
 
+def test_system_columns_group_by_plans_no_exchange(spark, sf_dir):
+    """The catalog views are served as one partition, so the per-table
+    column count an agent runs over system.columns (GROUP BY ... ORDER BY)
+    plans no Exchange."""
+    from mcp_clickhouse_spark.plans import count_nodes, explain_formatted
+    from mcp_clickhouse_spark.session import register_testdata
+    from mcp_clickhouse_spark.tools import _execute
+
+    register_testdata(spark, sf_dir, ["nation", "region"])
+    df = _execute(
+        spark,
+        "SELECT table, count() AS n FROM system.columns WHERE database = 'default' "
+        "GROUP BY table ORDER BY table",
+        "clickhouse",
+    )
+    assert count_nodes(explain_formatted(df), "Exchange") == 0
+    n = dict(tuple(r) for r in df.collect())
+    assert (n["nation"], n["region"]) == (3, 2)
+
+
 def test_values_view_cluster_merge_table_functions(spark):
     """Round-15 binder closures: CH values()/view()/cluster()/merge()
     table functions in FROM position (previously leaked to Spark as

@@ -132,8 +132,6 @@ def test_backfill_rate_limited_matches_batch(spark, sf_dir, batch_events, tmp_pa
     and the drained result equals the one-shot batch answer."""
     import os
 
-    from mcp_clickhouse_spark.streaming.ops import backfill_events_stream
-
     src = str(tmp_path / "backfill_src")
     os.makedirs(src)
     # historical archive: 4 parquet files named to match the source glob
@@ -148,7 +146,7 @@ def test_backfill_rate_limited_matches_batch(spark, sf_dir, batch_events, tmp_pa
     for i, p in enumerate(parts):
         os.rename(p, os.path.join(src, f"events-{i:02d}.parquet"))
 
-    st = tumbling_counts(backfill_events_stream(spark, src, max_files_per_trigger=1))
+    st = tumbling_counts(stream_events(spark, src, max_files_per_trigger=1))
     q = run_available_now(st, "t_backfill", output_mode="complete")
     # rate limiting really happened: one micro-batch per file
     n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
