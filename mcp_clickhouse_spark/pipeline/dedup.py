@@ -24,39 +24,17 @@ from pyspark.sql import functions as F
 
 
 class _FrameRegistry:
-    """Single bounded owner of BOTH caches the pipeline layer keeps — the
-    spread memo and the persist lifecycle used to be separate module globals
-    whose interaction was subtle enough to flag (r4 verdict: a persisted
-    frame FIFO-evicted while a memoized spread output still referenced it
-    would silently recompute).
+    """Bounded FIFO of the frames ``_persist`` pinned in Spark's CacheManager.
+    A persisted plan is not garbage-collected with its Python ref, and
+    nothing in the server path calls release(), so without the cap a
+    long-lived session would pin executor storage forever."""
 
-    - ``spread``: memoizes ``_spread``'s partition-count probe per
-      (session, input frame, key column).  Values hold (input, output): the
-      input ref pins the object so its id() can never be recycled onto a
-      different DataFrame.  FIFO-16 — an unbounded id()-keyed dict pins
-      DataFrames for the process lifetime (judge round-2 finding).
-    - ``persisted``: frames pinned in Spark's CacheManager by ``_persist``
-      (persisted plans are NOT garbage-collected with the Python ref).
-      FIFO-32 — nothing in the server path calls release(), so without
-      eviction a long-lived session would pin executor storage forever.
-
-    Coupling rule, enforced here: whenever a frame is unpersisted (FIFO
-    eviction or release()), every spread memo whose INPUT is that frame is
-    dropped too, so the memo can never hand back an output whose persisted
-    parent quietly lost its cache.  Spread outputs are plain unpersisted
-    plans, so no other cross-reference between the two stores exists.
-    """
-
-    SPREAD_MAX = 16
     PERSIST_MAX = 32
 
     def __init__(self) -> None:
-        self.spread: dict[tuple, tuple[DataFrame, DataFrame]] = {}
         self.persisted: list[DataFrame] = []
 
     def _unpersist(self, df: DataFrame) -> bool:
-        for key in [k for k, (inp, _) in self.spread.items() if inp is df]:
-            del self.spread[key]
         try:
             df.unpersist(blocking=False)
             return True
@@ -74,11 +52,6 @@ class _FrameRegistry:
         out = df.persist(StorageLevel.MEMORY_AND_DISK)
         self.persisted.append(out)
         return out
-
-    def memo_spread(self, key: tuple, inp: DataFrame, out: DataFrame) -> None:
-        if len(self.spread) >= self.SPREAD_MAX:
-            self.spread.pop(next(iter(self.spread)))
-        self.spread[key] = (inp, out)
 
     def release(self) -> int:
         n = 0
@@ -99,42 +72,49 @@ def _persist(df: DataFrame) -> DataFrame:
 def release_persisted() -> int:
     """Unpersist every frame cached by pipeline operators; returns the count.
 
-    Call after materializing a pipeline query in a long-lived session (the
-    bench harness clears the whole cache between queries; the MCP server can
-    call this per request)."""
+    For a caller that materializes pipeline queries in a long-lived session
+    (tests, and the bench harness, which clears the whole cache between
+    queries).  The MCP server does not call it: the registry's FIFO cap
+    bounds what a server session keeps pinned."""
     return _REG.release()
 
 
 def _spread(df: DataFrame, by: str | None = None) -> DataFrame:
-    """Repartition to the session default parallelism when the input has
-    fewer partitions — CPU-heavy per-row stages (hashing, shingling)
-    otherwise run on however few scan tasks the file layout yields. No-op on
-    well-partitioned inputs (the 100 TB case).
+    """Spread the CPU-heavy per-row stage that follows (hashing, shingling)
+    over the session's cores, as the table's layout calls for:
+
+    - a one-task table (``session.read_table`` serves a small file as one
+      ``coalesce(1)`` partition) comes back unchanged.  Its SinglePartition
+      output satisfies every clustered distribution, so the aggregations and
+      windows downstream plan no exchange.  The test reads the physical
+      plan's output partitioning (4–7 ms of driver planning): no Spark job,
+      no RDD.  It tests the partitioning, not the partition count — a
+      one-row-group file read in place is one partition of
+      UnknownPartitioning, which satisfies nothing and takes the
+      repartition below;
+    - any other input with fewer than ``defaultParallelism`` partitions is
+      repartitioned to that many, otherwise its per-row stages run on
+      however few scan tasks the file layout yields;
+    - an input with at least that many partitions comes back unchanged (the
+      100 TB case).  The partition-count probe converts the plan to an RDD
+      on the driver: 33–47 ms.  (Both figures: medians over fresh frames of
+      sf0.01/sf0.1 documents and lineitem, local[4] on 4 Xeon vCPUs.)
 
     ``by``: hash-partition on that column instead of round-robin.  Explode
     and projections PRESERVE the partitioning, so every downstream
     ``groupBy`` whose keys include ``by`` (e.g. the MinHash (id, bin)→min
     then (id)→map two-level aggregation) is already distribution-satisfied
     and runs WITHOUT an exchange — two shuffles removed from the signature
-    pipeline for the price of the one repartition that was happening anyway.
-
-    Memoized per (session, input DataFrame object): the partition-count probe
-    converts the plan to an RDD on the driver (~0.5 s measured), which would
-    otherwise be paid on every query construction against the session-cached
-    table frames."""
-    key = (id(df.sparkSession), id(df), by)
-    hit = _REG.spread.get(key)
-    if hit is not None:
-        return hit[1]
+    pipeline for the price of the one repartition that was happening anyway."""
+    partitioning = df._jdf.queryExecution().sparkPlan().outputPartitioning()
+    if partitioning.toString() == "SinglePartition":
+        return df
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
-        out = df
-    elif by is not None:
-        out = df.repartition(target, F.col(by))
-    else:
-        out = df.repartition(target)
-    _REG.memo_spread(key, df, out)
-    return out
+        return df
+    if by is not None:
+        return df.repartition(target, F.col(by))
+    return df.repartition(target)
 
 
 def _shingle_zip_expr(text_col: str) -> str:
@@ -311,7 +291,8 @@ def minhash_signatures(
     """
     # Spread the CPU-bound shingle/hash stage across all cores even when the
     # source is a single parquet row-group (one scan task); hash-partitioned
-    # on the id so both aggregation levels below need no exchange.
+    # on the id so both aggregation levels below need no exchange.  A
+    # one-task table stays one partition, which needs none either.
     df = _spread(df, by=id_col)
     if hash_fn == "md5":
         ex = df.select(
@@ -837,10 +818,12 @@ def span_dedup(
     """
     # _spread here, not in doc_spans (the streaming apply side shares
     # doc_spans, and a streaming frame cannot take the partition probe):
-    # a single-row-group parquet file otherwise runs the whole per-row
-    # chunking + md5 map stage on ONE task — the sf5 probe measured the
-    # batch query 12× for 5× data before this, ~5× after.  Hashing by id
-    # also pre-distributes regroup_spans' groupBy(id).
+    # a single-row-group parquet file read in place otherwise runs the whole
+    # per-row chunking + md5 map stage on ONE task — the sf5 probe measured
+    # the batch query 12× for 5× data before this, ~5× after.  Hashing by id
+    # also pre-distributes regroup_spans' groupBy(id).  A one-task table
+    # stays one partition: the chunk-key window and the regroup then plan
+    # no exchange, and the operator runs as one job.
     spans = doc_spans(_spread(df, by=id_col), text_col, id_col, chunk_tokens)
     if max_docs == 1:
         # r17: "appears in exactly one distinct document" ⟺ min(id) ==
@@ -910,7 +893,8 @@ def line_dedup(
     # _spread: run the explode+md5 map stage on every core even when the
     # source is one parquet row group (same rationale as span_dedup /
     # minhash_signatures); id-hash partitioning pre-distributes the
-    # per-doc regroup
+    # per-doc regroup.  A one-task table stays one partition, where the
+    # line aggregate, join and regroup plan no exchange.
     lines = _spread(df, by=id_col).select(
         F.col(id_col),
         F.posexplode(F.split(F.col(text_col), _re.escape(sep))).alias(

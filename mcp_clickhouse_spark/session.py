@@ -149,6 +149,8 @@ _TABLE_CACHE: dict[tuple[int, str, str], DataFrame] = {}
 # row count and is lost by 600k rows (more cores favour the split scan,
 # whose tasks run in parallel).  100k keeps every sf0.01 table (lineitem:
 # 60k) and sf0.1's events within it, and sf0.1's orders and lineitem split.
+# This layout is the one sizing policy the pipeline follows too: its
+# near-dup operators keep a one-task table in one partition (dedup._spread).
 #
 # The file count of a split copy is the scan parallelism:
 # - _SPLIT_ROWS: 18,750 rows per file bring orders (150k rows at sf0.1) to 8

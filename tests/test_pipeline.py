@@ -241,42 +241,109 @@ def test_release_persisted_clears_registry(spark, docs):
     assert dd._REG.persisted == []
 
 
-def test_spread_cache_is_bounded(spark):
-    from mcp_clickhouse_spark.pipeline import dedup as dd
+def _jobs_of(spark, group, fn):
+    """(fn(), number of Spark jobs fn ran), counted under a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "")
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
+
+def test_spread_keeps_one_task_frame(spark, sf_dir, monkeypatch):
+    """A one-task table (SinglePartition) comes back as the same object,
+    with no Spark job and no RDD conversion."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from mcp_clickhouse_spark.pipeline import dedup as dd
+    from mcp_clickhouse_spark.session import read_table
+
+    docs = read_table(spark, sf_dir, "documents")
+
+    def no_rdd(self):
+        raise AssertionError("_spread converted a one-task frame to an RDD")
+
+    monkeypatch.setattr(DataFrame, "rdd", property(no_rdd))
+    out, jobs = _jobs_of(spark, "test-spread-one-task", lambda: dd._spread(docs, by="doc_id"))
+    assert out is docs
+    assert jobs == 0
+
+
+@pytest.mark.usefixtures("above_one_task_budget")
+def test_spread_repartitions_one_row_group_file_by_key(spark, sf_dir):
+    """A one-row-group file read in place is one partition too, but of
+    UnknownPartitioning: it still takes the keyed repartition."""
+    from mcp_clickhouse_spark.pipeline import dedup as dd
+    from mcp_clickhouse_spark.plans import count_nodes, explain_formatted
+    from mcp_clickhouse_spark.session import read_table
+
+    docs = read_table(spark, sf_dir, "documents")
+    assert docs.rdd.getNumPartitions() == 1
+    plan = explain_formatted(dd._spread(docs, by="doc_id"))
+    assert count_nodes(plan, "Exchange") == 1
+    assert "hashpartitioning(doc_id" in plan
+
+
+def test_spread_keeps_no_module_state(spark, sf_dir):
+    """The only state the dedup module keeps is the persist FIFO, and
+    _spread adds nothing to it."""
+    from mcp_clickhouse_spark.pipeline import dedup as dd
+    from mcp_clickhouse_spark.session import read_table
+
+    before = dict(vars(dd))
+    persisted = list(dd._REG.persisted)
     frames = [
-        spark.createDataFrame([(i, "x")], "doc_id long, text string")
-        for i in range(dd._FrameRegistry.SPREAD_MAX + 5)
+        read_table(spark, sf_dir, "documents"),
+        spark.createDataFrame([(1, "a b c")], "doc_id long, text string"),
     ]
     for f in frames:
+        dd._spread(f, by="doc_id")
         dd._spread(f)
-    assert len(dd._REG.spread) <= dd._FrameRegistry.SPREAD_MAX
+    assert vars(dd) == before
+    assert set(vars(dd._REG)) == {"persisted"}
+    assert dd._REG.persisted == persisted
 
 
-def test_registry_eviction_drops_dependent_spread_memos(spark):
-    """The unified registry's coupling rule (r4 verdict 'double-bookkeeping'):
-    unpersisting a frame — by FIFO eviction or release() — must also drop any
-    spread memo keyed on that frame, so the memo can never serve an output
-    whose persisted parent silently lost its cache."""
-    from mcp_clickhouse_spark.pipeline import dedup as dd
+def test_one_task_documents_near_dup_plans_no_exchange(spark, sf_dir):
+    """Over a one-task documents table the MinHash signature aggregations
+    and span dedup's chunk-key window and regroup all plan no Exchange."""
+    from mcp_clickhouse_spark.pipeline.dedup import span_dedup
+    from mcp_clickhouse_spark.plans import count_nodes, explain_formatted
+    from mcp_clickhouse_spark.session import read_table
 
-    dd.release_persisted()
-    pinned = dd._persist(spark.createDataFrame([(1, "a b c")], "doc_id long, text string"))
-    spread_out = dd._spread(pinned, by="doc_id")
-    key = (id(pinned.sparkSession), id(pinned), "doc_id")
-    assert dd._REG.spread[key][1] is spread_out
-    # FIFO-evict `pinned` by filling the persist registry past its cap
-    for i in range(dd._FrameRegistry.PERSIST_MAX):
-        dd._persist(spark.range(2).selectExpr(f"id + {i} AS x"))
-    assert pinned not in dd._REG.persisted
-    assert key not in dd._REG.spread  # memo went with it
-    # and release() purges memos of every frame it unpersists
-    pinned2 = dd._persist(spark.createDataFrame([(2, "x y")], "doc_id long, text string"))
-    dd._spread(pinned2, by="doc_id")
-    key2 = (id(pinned2.sparkSession), id(pinned2), "doc_id")
-    assert key2 in dd._REG.spread
-    dd.release_persisted()
-    assert key2 not in dd._REG.spread and dd._REG.persisted == []
+    docs = read_table(spark, sf_dir, "documents")
+    for df in (minhash_signatures(docs, num_hashes=32), span_dedup(docs)):
+        assert count_nodes(explain_formatted(df), "Exchange") == 0
+
+
+@pytest.mark.parametrize(
+    "op, max_jobs", [("pipe_minhash_lsh", 2), ("pipe_span_dedup", 1)]
+)
+def test_one_task_near_dup_jobs_and_rows(spark, sf_dir, request, op, max_jobs):
+    """On a one-task documents table MinHash-LSH runs in at most 2 jobs and
+    span dedup in 1, and both return the rows they return when the table is
+    served above the one-task budget."""
+    from mcp_clickhouse_spark.inventory import pipeline_ops
+    from mcp_clickhouse_spark.pipeline.dedup import release_persisted
+    from mcp_clickhouse_spark.plans import count_nodes, explain_formatted
+
+    build = getattr(pipeline_ops, op)
+    df = build(spark, sf_dir)
+    # building ran jaccard_verify's AUTO counts, which cached the MinHash
+    # candidates: uncache them so the query runs whole, as a replayed call
+    # (run_prepared, then clearCache) does
+    release_persisted()
+    rows, jobs = _jobs_of(spark, f"test-one-task-{op}", lambda: sorted(map(tuple, df.collect())))
+    assert 0 < jobs <= max_jobs
+    assert rows
+
+    request.getfixturevalue("above_one_task_budget")
+    split = build(spark, sf_dir)
+    assert count_nodes(explain_formatted(split), "Exchange") > 0
+    assert sorted(map(tuple, split.collect())) == rows
+    release_persisted()
 
 
 def test_multimodal_binary_parquet_roundtrip(docs, tmp_path):
