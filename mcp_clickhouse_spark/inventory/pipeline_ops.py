@@ -1465,14 +1465,14 @@ _STREAM_RUN_COUNTER = [0]
 def streaming_minhash_pairs(spark, sf_dir):
     from mcp_clickhouse_spark.streaming import (
         run_available_now,
-        stream_documents,
+        stream_parquet,
         streaming_minhash_neardup,
     )
 
     _STREAM_RUN_COUNTER[0] += 1
     sink = f"t_stream_minhash_{id(spark) % 100000}_{_STREAM_RUN_COUNTER[0]}"
     st = streaming_minhash_neardup(
-        stream_documents(spark, f"{sf_dir}/documents.parquet")
+        stream_parquet(spark, f"{sf_dir}/documents.parquet")
     )
     run_available_now(st, sink, output_mode="append")
     return spark.table(sink).dropDuplicates(["id_a", "id_b"]).select(
@@ -1514,14 +1514,14 @@ def streaming_corpus_stats_q(spark, sf_dir):
     # executing.
     from mcp_clickhouse_spark.streaming import (
         run_available_now,
-        stream_documents,
+        stream_parquet,
         streaming_corpus_stats,
     )
 
     _STREAM_RUN_COUNTER[0] += 1
     sink = f"t_stream_stats_{id(spark) % 100000}_{_STREAM_RUN_COUNTER[0]}"
     st = streaming_corpus_stats(
-        stream_documents(spark, f"{sf_dir}/documents.parquet")
+        stream_parquet(spark, f"{sf_dir}/documents.parquet")
     )
     run_available_now(st, sink, output_mode="complete")
     return spark.table(sink)
@@ -1704,7 +1704,7 @@ def streaming_clean_corpus(spark, sf_dir):
     from mcp_clickhouse_spark.session import _split_layout
     from mcp_clickhouse_spark.streaming.ops import (
         span_filter_apply,
-        stream_documents,
+        stream_parquet,
         streaming_incremental_dedup,
     )
 
@@ -1725,7 +1725,7 @@ def streaming_clean_corpus(spark, sf_dir):
     path, _ = _split_layout(
         spark, os.path.join(sf_dir, "documents.parquet"), "documents"
     )
-    st = scrub_pii(stream_documents(spark, path, max_files_per_trigger=1))
+    st = scrub_pii(stream_parquet(spark, path, max_files_per_trigger=1))
     st = (
         st.where(quality_score_col("text_scrubbed") >= 0.8)
         .select(F.col("text_scrubbed").alias("text"))

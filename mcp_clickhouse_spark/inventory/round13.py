@@ -189,7 +189,7 @@ _STREAM_RUN_COUNTER = [0]
 def streaming_embedding_pairs(spark, sf_dir):
     from mcp_clickhouse_spark.streaming import (
         run_available_now,
-        stream_embeddings,
+        stream_parquet,
         streaming_embedding_neardup,
     )
 
@@ -199,7 +199,7 @@ def streaming_embedding_pairs(spark, sf_dir):
     # synthetic corpus has no true near-dups (max pairwise cosine ≈0.51
     # at sf0.01), so this sits where the data has signal
     st = streaming_embedding_neardup(
-        stream_embeddings(spark, f"{sf_dir}/embeddings.parquet"),
+        stream_parquet(spark, f"{sf_dir}/embeddings.parquet"),
         threshold=0.45,
         max_bucket_size=1000,  # the batch default — the 16-doc stream
         # default evicts this corpus's sparse matches

@@ -396,7 +396,7 @@ def minhash_lsh_candidates(
 
     Docs sharing ALL rows of any band land in the same (band, bucket); pairs
     are generated inside buckets only. Returns distinct (id_a, id_b),
-    persisted (three downstream reads in jaccard_verify).
+    persisted: jaccard_verify reads it once, plus its AUTO mode's count.
 
     **Identical signatures collapse first** (round 11 — the sf5 scale probe
     showed the same quadratic-in-cluster-size blowup the r9 judge flagged
@@ -499,6 +499,15 @@ def neardup_candidates(
     return bucket_pairs(banded, id_col, max_bucket_size, payload)
 
 
+def check_bucket_cap(max_bucket_size: int) -> None:
+    """Reject a bucket cap below 2, which would silently drop every pair."""
+    if max_bucket_size < 2:
+        raise ValueError(
+            f"max_bucket_size must be >= 2, got {max_bucket_size}:"
+            f" a bucket capped below two members yields no pairs"
+        )
+
+
 def bucket_pairs(
     banded: DataFrame,
     id_col: str,
@@ -519,11 +528,7 @@ def bucket_pairs(
     degenerate 100 TB corpus.  A cap below 2 would silently drop every
     pair (each synthetic star bucket holds two rows), so it is rejected.
     """
-    if max_bucket_size < 2:
-        raise ValueError(
-            f"max_bucket_size must be >= 2, got {max_bucket_size}:"
-            f" a bucket capped below two members yields no pairs"
-        )
+    check_bucket_cap(max_bucket_size)
     cap_w = Window.partitionBy("band", "bucket").orderBy(id_col)
     item = F.struct(id_col, *payload) if payload else F.col(id_col)
     pairs = (
@@ -575,9 +580,12 @@ def jaccard_verify(
     the choice is workload-shaped, measured at sf0.1:
 
     - ``None`` (default, round 9): AUTO — count both frames and apply
-      should_precompute_sets.  Candidates arrive persisted from
-      minhash_lsh_candidates, so its count is a cache scan; the docs
-      count is parquet-footer metadata.  A duplicate-heavy corpus (the
+      should_precompute_sets.  Both counts run Spark jobs when the
+      operator is built: the candidates count materializes the frame
+      minhash_lsh_candidates persisted (the verify join then reads it
+      from cache), and ``docs.count()`` scans the corpus.  At sf0.01 on
+      local[4], a session's first ``pipe_minhash_lsh`` call runs 5 jobs,
+      a replayed one 2.  A duplicate-heavy corpus (the
       shape that makes near-dup dedup worth running at all) flips the
       pair count far past the corpus size, where post-join verification
       is the 5× bottleneck of the whole pipeline (sf1 measurement in

@@ -6,9 +6,8 @@ from mcp_clickhouse_spark.streaming.ops import (  # noqa: F401
     run_available_now,
     session_counts,
     sliding_counts,
-    stream_documents,
-    stream_embeddings,
     stream_events,
+    stream_parquet,
     streaming_dedup,
     streaming_embedding_neardup,
     streaming_incremental_dedup,

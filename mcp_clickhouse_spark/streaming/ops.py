@@ -1,9 +1,13 @@
-"""Streaming event analytics: the `events` pipelines as readStream graphs.
+"""Streaming twins: the `events` analytics and the document pipeline
+operators as readStream graphs.
 
-Each transformation here is the SAME logical plan as its batch twin in
-inventory/timeseries.py — Structured Streaming's contract — plus the
-streaming-only concerns: watermarks for late data, stateful dedup, and an
-applyInPandasWithState custom operator.
+Each transformation here is the SAME logical plan as its batch twin
+(inventory/timeseries.py, pipeline/) — Structured Streaming's contract —
+plus the streaming-only concerns: watermarks for late data, stateful dedup,
+and applyInPandasWithState operators.  Both near-dup operators share one
+stateful bucket emitter (``_bucket_pairs_stream``), and every parquet stream
+but ``events`` comes from ``stream_parquet``, typed from the parquet footer
+with no Spark job.
 
 Scale notes: state stores shard by the grouping key across executors;
 watermarks bound state size (without one, a 100 TB stream accretes state
@@ -13,7 +17,7 @@ tests and backfills.
 
 from __future__ import annotations
 
-from typing import Iterator, Tuple
+from typing import Callable, Iterator, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -236,45 +240,113 @@ def run_available_now(stream_df: DataFrame, sink_table: str, output_mode: str = 
     return q
 
 
-_DOCS_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("text", StringType()),
-        StructField("lang", StringType()),
-        StructField("source", StringType()),
-        StructField("n_chars", LongType()),
-    ]
-)
-
-_NEARDUP_SCHEMA = StructType(
-    [
-        StructField("band", LongType()),
-        StructField("bucket", LongType()),
-        StructField("id_a", LongType()),
-        StructField("id_b", LongType()),
-        StructField("est_jaccard", DoubleType()),
-    ]
-)
-
-
-def stream_documents(
+def stream_parquet(
     spark: SparkSession, path: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
-    """readStream over a documents parquet directory (the continuous-crawl
-    ingest shape; file source for backfill/tests, Kafka in production).
+    """readStream over a parquet file or directory (the continuous-ingest
+    shape: the file source for backfills and tests, Kafka in production).
 
-    A single-FILE path (e.g. ``<sf_dir>/documents.parquet``) streams via
-    its parent directory + a pathGlobFilter — the file source only accepts
+    The file source needs its schema up front.  It comes from the first
+    file's footer (``session._footer_schema``, as ``read_table`` takes it),
+    so building the stream runs no Spark job; where the footer mapping
+    declines, or no file is readable, Spark infers the schema.  A
+    single-FILE path (e.g. ``<sf_dir>/documents.parquet``) streams via its
+    parent directory + a pathGlobFilter, since the file source only accepts
     directories."""
+    import glob
     import os
 
-    reader = spark.readStream.schema(_DOCS_SCHEMA)
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mcp_clickhouse_spark.session import _footer_schema
+
+    src = path
+    reader = spark.readStream
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
     if os.path.isfile(path):
+        files = [path]
         reader = reader.option("pathGlobFilter", os.path.basename(path))
         path = os.path.dirname(path)
-    return reader.parquet(path)
+    else:  # like Spark, skip names starting with "_" (glob skips ".")
+        files = sorted(glob.glob(os.path.join(path, "[!_]*.parquet")))
+    try:
+        with pq.ParquetFile(files[0]) as pf:
+            schema = _footer_schema(spark, pf)
+    except (IndexError, OSError, pa.ArrowException):  # no file, or unreadable
+        schema = None
+    return reader.schema(schema or spark.read.parquet(src).schema).parquet(path)
+
+
+def _bucket_pairs_stream(
+    banded: DataFrame,
+    score: Callable[[list, list], float | None],
+    max_bucket_size: int,
+    score_col: str,
+) -> DataFrame:
+    """Near-dup pairs from a stream of ``(band, bucket, id, val)`` rows (the
+    four columns in that order): the one stateful emitter of both streaming
+    near-dup operators, as ``dedup.bucket_pairs`` is of the batch ones.
+
+    applyInPandasWithState keeps, per (band, bucket), the
+    ``max_bucket_size`` LOWEST ids seen (the batch cap policy) and their
+    values, as typed ``ids ARRAY<BIGINT>, vals ARRAY<val type>`` state.  Each
+    micro-batch's rows run in id order:
+    - a known id (a replay, or a duplicate delivery in one micro-batch)
+      emits nothing;
+    - in a full bucket a higher id is dropped; a lower one evicts the
+      highest BEFORE pairing, so pairs form only among retained members,
+      never with the evictee;
+    - a newly retained id pairs with every retained co-occupant whose
+      ``score(val, val_j)`` is not None.
+
+    Output rows are ``(band, bucket, id_a < id_b, <score_col> DOUBLE)``.
+    """
+    from mcp_clickhouse_spark.pipeline.dedup import check_bucket_cap
+
+    check_bucket_cap(max_bucket_size)
+    banded = banded.toDF("band", "bucket", "id", "val")
+    cols = ["band", "bucket", "id_a", "id_b", score_col]
+    out_schema = f"band BIGINT, bucket BIGINT, id_a BIGINT, id_b BIGINT, {score_col} DOUBLE"
+
+    def emit(
+        key: Tuple[int, int], pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        ids, vals = map(list, state.get) if state.exists else ([], [])
+        # by id only: the values of a tied id are arrays, which do not compare
+        rows = sorted(
+            ((int(i), v) for pdf in pdfs for i, v in zip(pdf["id"], pdf["val"])),
+            key=lambda r: r[0],
+        )
+        out = []
+        for i, v in rows:
+            if i in ids:
+                continue
+            if len(ids) >= max_bucket_size:
+                top = max(ids)
+                if i > top:
+                    continue
+                k = ids.index(top)
+                del ids[k], vals[k]
+            v = v.tolist()
+            for j, vj in zip(ids, vals):
+                s = score(v, vj)
+                if s is not None:
+                    out.append((*key, min(i, j), max(i, j), s))
+            ids.append(i)
+            vals.append(v)
+        state.update((ids, vals))
+        if out:
+            yield pd.DataFrame(out, columns=cols)
+
+    return banded.groupBy("band", "bucket").applyInPandasWithState(
+        emit,
+        outputStructType=out_schema,
+        stateStructType=f"ids ARRAY<BIGINT>, vals ARRAY<{dict(banded.dtypes)['val']}>",
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
 
 
 def streaming_minhash_neardup(
@@ -294,11 +366,9 @@ def streaming_minhash_neardup(
        identical values to the batch aggregation.
     2. Banding: per band, xxhash64 of the band's signature rows → (band,
        bucket) keys, exploded per doc.  Same expression as the batch LSH.
-    3. State store keyed by (band, bucket) via applyInPandasWithState:
-       each bucket remembers the (id, signature) of up to
-       ``max_bucket_size`` docs with the LOWEST ids (the batch cap
-       policy); a newly retained doc emits one pair per retained
-       co-occupant with the signature-agreement Jaccard estimate.
+    3. The shared emitter (:func:`_bucket_pairs_stream`) pairs each newly
+       retained doc with its bucket's co-occupants, scored by signature
+       agreement (the Jaccard estimate).
 
     Scale/state notes: state shards by (band, bucket) across executors and
     is bounded at max_bucket_size entries per bucket — the same degenerate-
@@ -313,78 +383,19 @@ def streaming_minhash_neardup(
     bands (and across retries); consumers dedup on (id_a, id_b) —
     same ``.distinct()`` contract as the batch candidate generator.
     """
-    from mcp_clickhouse_spark.pipeline.dedup import with_minhash_signature
-
-    from mcp_clickhouse_spark.pipeline.dedup import band_bucket_posexplode
-
-    sig = with_minhash_signature(docs, num_hashes=num_hashes).selectExpr(
-        "doc_id",
-        "signature",
-        band_bucket_posexplode(bands, num_hashes // bands),
-    ).select(
-        F.col("band").cast("long"),
-        "bucket",
-        "doc_id",
-        F.concat_ws(",", F.expr("transform(signature, x -> CAST(x AS STRING))")).alias(
-            "sig_csv"
-        ),
+    from mcp_clickhouse_spark.pipeline.dedup import (
+        band_bucket_posexplode,
+        with_minhash_signature,
     )
 
-    def emit(
-        key: Tuple[int, int], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        band, bucket = key
-        ids: list[int]
-        sigs: list[str]
-        if state.exists:
-            stored_ids, stored_sigs = state.get
-            ids, sigs = list(stored_ids), list(stored_sigs)
-        else:
-            ids, sigs = [], []
-        rows = sorted(
-            (int(i), s)
-            for pdf in pdfs
-            for i, s in zip(pdf["doc_id"], pdf["sig_csv"])
-        )
-        out_a, out_b, out_j = [], [], []
-        for i, s in rows:
-            if i in ids:
-                continue  # replay/duplicate delivery of a known doc
-            if len(ids) >= max_bucket_size:
-                if i > max(ids):
-                    continue  # bucket full of lower ids: batch cap drops it
-                # evict BEFORE pairing: the batch cap pairs only among the
-                # retained (lowest-id) members, never with the evictee
-                drop = ids.index(max(ids))
-                ids.pop(drop)
-                sigs.pop(drop)
-            vec = s.split(",")
-            for j, sj in zip(ids, sigs):
-                agree = sum(a == b for a, b in zip(vec, sj.split(",")))
-                lo, hi = (j, i) if j < i else (i, j)
-                out_a.append(lo)
-                out_b.append(hi)
-                out_j.append(agree / float(num_hashes))
-            ids.append(i)
-            sigs.append(s)
-        state.update((ids, sigs))
-        if out_a:
-            yield pd.DataFrame(
-                {
-                    "band": band,
-                    "bucket": bucket,
-                    "id_a": out_a,
-                    "id_b": out_b,
-                    "est_jaccard": out_j,
-                }
-            )
-
-    return sig.groupBy("band", "bucket").applyInPandasWithState(
-        emit,
-        outputStructType=_NEARDUP_SCHEMA,
-        stateStructType="ids ARRAY<BIGINT>, sigs ARRAY<STRING>",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    banded = with_minhash_signature(docs, num_hashes=num_hashes).selectExpr(
+        band_bucket_posexplode(bands, num_hashes // bands), "doc_id", "signature"
+    )
+    return _bucket_pairs_stream(
+        banded,
+        lambda v, vj: sum(a == b for a, b in zip(v, vj)) / float(num_hashes),
+        max_bucket_size,
+        "est_jaccard",
     )
 
 
@@ -417,35 +428,6 @@ def span_filter_apply(
     return regroup_spans(flagged)
 
 
-_EMBED_NEARDUP_SCHEMA = StructType(
-    [
-        StructField("band", LongType()),
-        StructField("bucket", LongType()),
-        StructField("id_a", LongType()),
-        StructField("id_b", LongType()),
-        StructField("cosine", DoubleType()),
-    ]
-)
-
-
-def stream_embeddings(
-    spark: SparkSession, path: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """readStream over an embeddings parquet path (schema peeked from the
-    files — the file source needs it statically; single files stream via
-    parent dir + pathGlobFilter like stream_documents)."""
-    import os
-
-    schema = spark.read.parquet(path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    if os.path.isfile(path):
-        reader = reader.option("pathGlobFilter", os.path.basename(path))
-        path = os.path.dirname(path)
-    return reader.parquet(path)
-
-
 def streaming_embedding_neardup(
     vecs: DataFrame,
     threshold: float = 0.45,
@@ -457,12 +439,12 @@ def streaming_embedding_neardup(
     max_bucket_size: int = 16,
 ) -> DataFrame:
     """Streaming embedding-cosine near-dup detection — the continuous twin
-    of ``pipeline.similarity.embedding_neardup_pairs`` (round 13; the
-    replay-pin item carried from r11 #8).  As vectors arrive, each is
-    random-hyperplane-banded with the SAME seeded plane expressions as the
-    batch op (``similarity.band_plane_exprs``), and a state store keyed by
-    (band, bucket) emits exact-cosine pairs against the bucket's retained
-    co-occupants, keeping ``cosine >= threshold``.
+    of ``pipeline.similarity.embedding_neardup_pairs``.  As vectors arrive,
+    each is random-hyperplane-banded with the SAME seeded plane expressions
+    as the batch op (``similarity.band_plane_exprs``), and the shared
+    emitter (:func:`_bucket_pairs_stream`) pairs it with the bucket's
+    retained co-occupants by exact cosine (float64, rounded to 6 places),
+    keeping ``cosine >= threshold``.
 
     Cap/evict policy mirrors the batch ``bucket_pairs`` exactly (retain
     the ``max_bucket_size`` LOWEST ids), so an ID-ORDERED bounded replay
@@ -472,93 +454,30 @@ def streaming_embedding_neardup(
     streaming_minhash_neardup).  With OUT-OF-ORDER arrival the stream
     emits a SUPERSET of the batch pairs: a late lower id can evict a
     higher id whose already-emitted pairs cannot be retracted in append
-    mode.  State is
-    bounded per bucket; production adds a TTL to trade recall for state —
-    kept timeout-free here so replays match batch."""
+    mode.  State is bounded per bucket; production adds a TTL to trade
+    recall for state — kept timeout-free here so replays match batch."""
     from mcp_clickhouse_spark.pipeline.similarity import band_plane_exprs
 
     plane_cols, bucket_exprs = band_plane_exprs(
         vec_col, bands, planes_per_band, dim
     )
-    banded = (
-        vecs.select(
-            F.col(id_col).alias("vec_id"),
-            F.concat_ws(
-                ",", F.expr(f"transform({vec_col}, x -> CAST(x AS STRING))")
-            ).alias("vec_csv"),
-            *plane_cols,
-        )
-        .select(
-            "vec_id",
-            "vec_csv",
-            F.posexplode(F.array(*[F.expr(e) for e in bucket_exprs])).alias(
-                "band", "bucket"
-            ),
-        )
-        .select(F.col("band").cast("long"), F.col("bucket").cast("long"),
-                "vec_id", "vec_csv")
+    banded = vecs.select(id_col, vec_col, *plane_cols).select(
+        F.posexplode(F.array(*[F.expr(e) for e in bucket_exprs])).alias(
+            "band", "bucket"
+        ),
+        id_col,
+        vec_col,
     )
 
-    def emit(
-        key: Tuple[int, int], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        band, bucket = key
-        if state.exists:
-            stored_ids, stored_vecs = state.get
-            ids, vcsvs = list(stored_ids), list(stored_vecs)
-        else:
-            ids, vcsvs = [], []
-        rows = sorted(
-            (int(i), v)
-            for pdf in pdfs
-            for i, v in zip(pdf["vec_id"], pdf["vec_csv"])
-        )
-        out_a, out_b, out_c = [], [], []
-        for i, v in rows:
-            if i in ids:
-                continue  # replay/duplicate delivery
-            if len(ids) >= max_bucket_size:
-                if i > max(ids):
-                    continue  # bucket full of lower ids: batch cap drops it
-                drop = ids.index(max(ids))
-                ids.pop(drop)
-                vcsvs.pop(drop)
-            vec = [float(x) for x in v.split(",")]
-            ni = sum(x * x for x in vec) ** 0.5
-            for j, vj_csv in zip(ids, vcsvs):
-                vj = [float(x) for x in vj_csv.split(",")]
-                nj = sum(x * x for x in vj) ** 0.5
-                if ni == 0.0 or nj == 0.0:
-                    continue
-                cos = round(
-                    sum(a * b for a, b in zip(vec, vj)) / (ni * nj), 6
-                )
-                if cos >= threshold:
-                    lo, hi = (j, i) if j < i else (i, j)
-                    out_a.append(lo)
-                    out_b.append(hi)
-                    out_c.append(cos)
-            ids.append(i)
-            vcsvs.append(v)
-        state.update((ids, vcsvs))
-        if out_a:
-            yield pd.DataFrame(
-                {
-                    "band": band,
-                    "bucket": bucket,
-                    "id_a": out_a,
-                    "id_b": out_b,
-                    "cosine": out_c,
-                }
-            )
+    def cosine(v: list, vj: list) -> float | None:
+        ni = sum(x * x for x in v) ** 0.5
+        nj = sum(x * x for x in vj) ** 0.5
+        if ni == 0.0 or nj == 0.0:
+            return None
+        cos = round(sum(a * b for a, b in zip(v, vj)) / (ni * nj), 6)
+        return cos if cos >= threshold else None
 
-    return banded.groupBy("band", "bucket").applyInPandasWithState(
-        emit,
-        outputStructType=_EMBED_NEARDUP_SCHEMA,
-        stateStructType="ids ARRAY<BIGINT>, vecs ARRAY<STRING>",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _bucket_pairs_stream(banded, cosine, max_bucket_size, "cosine")
 
 
 def streaming_corpus_stats(docs: DataFrame) -> DataFrame:

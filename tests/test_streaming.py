@@ -254,7 +254,7 @@ def test_streaming_minhash_matches_batch_candidates(spark, neardup_corpus):
         minhash_signatures,
     )
     from mcp_clickhouse_spark.streaming.ops import (
-        stream_documents,
+        stream_parquet,
         streaming_minhash_neardup,
     )
 
@@ -274,7 +274,7 @@ def test_streaming_minhash_matches_batch_candidates(spark, neardup_corpus):
     assert batch_pairs, "corpus must yield at least one candidate pair"
 
     st = streaming_minhash_neardup(
-        stream_documents(spark, neardup_corpus, max_files_per_trigger=1),
+        stream_parquet(spark, neardup_corpus, max_files_per_trigger=1),
         num_hashes=16,
         bands=4,
         max_bucket_size=16,
@@ -292,7 +292,7 @@ def test_streaming_minhash_matches_batch_candidates(spark, neardup_corpus):
 
 def test_streaming_minhash_state_caps_bucket(spark, tmp_path):
     from mcp_clickhouse_spark.streaming.ops import (
-        stream_documents,
+        stream_parquet,
         streaming_minhash_neardup,
     )
 
@@ -303,7 +303,7 @@ def test_streaming_minhash_state_caps_bucket(spark, tmp_path):
     p = str(tmp_path / "docs")
     spark.createDataFrame(rows, schema).coalesce(1).write.parquet(p)
     st = streaming_minhash_neardup(
-        stream_documents(spark, p), num_hashes=16, bands=4, max_bucket_size=3
+        stream_parquet(spark, p), num_hashes=16, bands=4, max_bucket_size=3
     )
     run_available_now(st, "t_neardup_cap", output_mode="append")
     pairs = {(r.id_a, r.id_b) for r in spark.table("t_neardup_cap").collect()}
@@ -321,7 +321,7 @@ def test_stateless_text_filters_are_streaming_safe(spark, sf_dir):
         language_id_col,
         quality_score_col,
     )
-    from mcp_clickhouse_spark.streaming.ops import stream_documents
+    from mcp_clickhouse_spark.streaming.ops import stream_parquet
 
     def apply(df):
         scored = df.select(
@@ -331,7 +331,7 @@ def test_stateless_text_filters_are_streaming_safe(spark, sf_dir):
         )
         return scored
 
-    st = apply(stream_documents(spark, f"{sf_dir}/documents.parquet"))
+    st = apply(stream_parquet(spark, f"{sf_dir}/documents.parquet"))
     run_available_now(st, "t_stream_filters", output_mode="append")
     got = {r.doc_id: (r.lid, r.q) for r in spark.table("t_stream_filters").collect()}
     batch = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -341,7 +341,7 @@ def test_stateless_text_filters_are_streaming_safe(spark, sf_dir):
     # C4 line filters (multi-column verdicts) stream identically too
     c4 = c4_line_filters(batch)
     verdict_cols = [c for c in c4.columns if c not in batch.columns]
-    st2 = c4_line_filters(stream_documents(spark, f"{sf_dir}/documents.parquet"))
+    st2 = c4_line_filters(stream_parquet(spark, f"{sf_dir}/documents.parquet"))
     run_available_now(st2.select("doc_id", *verdict_cols), "t_stream_c4",
                       output_mode="append")
     got2 = {r.doc_id: tuple(r)[1:] for r in spark.table("t_stream_c4").collect()}
@@ -373,11 +373,11 @@ def test_streaming_span_filter_matches_batch(spark, sf_dir):
 
 def test_streaming_corpus_stats_matches_batch(spark, sf_dir):
     from mcp_clickhouse_spark.streaming import (
-        stream_documents,
+        stream_parquet,
         streaming_corpus_stats,
     )
 
-    st = streaming_corpus_stats(stream_documents(spark, f"{sf_dir}/documents.parquet"))
+    st = streaming_corpus_stats(stream_parquet(spark, f"{sf_dir}/documents.parquet"))
     run_available_now(st, "t_corpus_stats", output_mode="complete")
     got = {(r.source, r.lang): (r.n_docs, r.total_chars, r.total_tokens)
            for r in spark.table("t_corpus_stats").collect()}
@@ -621,7 +621,7 @@ def test_streaming_embedding_neardup_matches_batch(spark, tmp_path):
     mode (round-14 advice; the op docstring states the same bound)."""
     from mcp_clickhouse_spark.pipeline.similarity import embedding_neardup_pairs
     from mcp_clickhouse_spark.streaming.ops import (
-        stream_embeddings,
+        stream_parquet,
         streaming_embedding_neardup,
     )
 
@@ -647,7 +647,7 @@ def test_streaming_embedding_neardup_matches_batch(spark, tmp_path):
     assert batch_pairs, "corpus must yield at least one near-dup pair"
 
     st = streaming_embedding_neardup(
-        stream_embeddings(spark, p, max_files_per_trigger=1), **kw
+        stream_parquet(spark, p, max_files_per_trigger=1), **kw
     )
     run_available_now(st, "t_embed_neardup", output_mode="append")
     got = spark.table("t_embed_neardup").collect()
@@ -661,11 +661,64 @@ def test_streaming_embedding_neardup_matches_batch(spark, tmp_path):
     assert planted and min(r.cosine for r in planted) > 0.99
 
 
+def _replay_rows(spark, tmp_path, table, build):
+    """Sorted output rows of ``build(stream)`` over three layouts of the
+    rows of pyarrow ``table``: two files (one micro-batch each); the same
+    two plus a third that repeats every id of the first; one file holding
+    every row twice, so each duplicate lands in the same micro-batch."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mcp_clickhouse_spark.streaming.ops import stream_parquet
+
+    half = table.num_rows // 2
+    layouts = {
+        "once": [table.slice(0, half), table.slice(half)],
+        "replay": [table.slice(0, half), table.slice(half), table.slice(0, half)],
+        "twice": [pa.concat_tables([table, table])],
+    }
+    out = {}
+    for name, parts in layouts.items():
+        d = tmp_path / name
+        d.mkdir()
+        for j, part in enumerate(parts):
+            pq.write_table(part, d / f"part-{j}.parquet")
+            # the file source admits files by modification time
+            os.utime(d / f"part-{j}.parquet", (1_700_000_000 + j,) * 2)
+        sink = f"t_replay_{tmp_path.name}_{name}"
+        stream = stream_parquet(spark, str(d), max_files_per_trigger=1)
+        run_available_now(build(stream), sink, output_mode="append")
+        out[name] = sorted(tuple(r) for r in spark.table(sink).collect())
+    return out
+
+
+def test_streaming_minhash_replay_emits_nothing_new(spark, tmp_path, neardup_corpus):
+    """Known ids streamed again, in a later micro-batch or twice within one,
+    emit no row beyond a single delivery's."""
+    import pyarrow.parquet as pq
+
+    from mcp_clickhouse_spark.streaming.ops import streaming_minhash_neardup
+
+    rows = pq.read_table(neardup_corpus).sort_by("doc_id")
+    got = _replay_rows(
+        spark, tmp_path, rows,
+        lambda st: streaming_minhash_neardup(st, num_hashes=16, bands=4),
+    )
+    assert got["once"], "corpus must yield at least one pair"
+    assert got["replay"] == got["once"]
+    assert got["twice"] == got["once"]
+
+
 def test_streaming_embedding_neardup_cap_and_replay_dedup(spark, tmp_path):
     """The bucket cap retains the LOWEST ids (the batch bucket_pairs
-    policy) and a duplicate replay of a known id emits nothing new."""
+    policy), and a replay of known ids, in a later micro-batch or twice
+    within one, emits nothing new."""
+    import pyarrow as pa
+
     from mcp_clickhouse_spark.streaming.ops import (
-        stream_embeddings,
+        stream_parquet,
         streaming_embedding_neardup,
     )
 
@@ -673,10 +726,67 @@ def test_streaming_embedding_neardup_cap_and_replay_dedup(spark, tmp_path):
     docs = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     p = str(tmp_path / "emb_cap")
     docs.coalesce(1).write.parquet(p)
-    st = streaming_embedding_neardup(
-        stream_embeddings(spark, p), threshold=0.45, bands=2,
-        planes_per_band=6, dim=4, max_bucket_size=3,
-    )
-    run_available_now(st, "t_embed_cap", output_mode="append")
+
+    def build(stream):
+        return streaming_embedding_neardup(
+            stream, threshold=0.45, bands=2, planes_per_band=6, dim=4,
+            max_bucket_size=3,
+        )
+
+    run_available_now(build(stream_parquet(spark, p)), "t_embed_cap", output_mode="append")
     pairs = {(r.id_a, r.id_b) for r in spark.table("t_embed_cap").collect()}
     assert pairs == {(0, 1), (0, 2), (1, 2)}
+
+    table = pa.table(
+        {
+            "vec_id": pa.array([i for i, _ in rows], pa.int64()),
+            "embedding": pa.array([v for _, v in rows], pa.list_(pa.float32())),
+        }
+    )
+    got = _replay_rows(spark, tmp_path, table, build)
+    assert {(r[2], r[3]) for r in got["once"]} == pairs
+    assert got["replay"] == got["once"]
+    assert got["twice"] == got["once"]
+
+
+@pytest.mark.parametrize("cap", [0, 1])
+@pytest.mark.parametrize("twin", ["minhash", "embedding"])
+def test_streaming_neardup_rejects_bucket_cap_below_two(spark, sf_dir, twin, cap):
+    """A cap below 2 fails when the operator is built, not inside a Python
+    worker once the stream runs."""
+    from mcp_clickhouse_spark.streaming.ops import (
+        stream_parquet,
+        streaming_embedding_neardup,
+        streaming_minhash_neardup,
+    )
+
+    op, table = {
+        "minhash": (streaming_minhash_neardup, "documents"),
+        "embedding": (streaming_embedding_neardup, "embeddings"),
+    }[twin]
+    stream = stream_parquet(spark, f"{sf_dir}/{table}.parquet")
+    with pytest.raises(ValueError, match="max_bucket_size must be >= 2"):
+        op(stream, max_bucket_size=cap)
+
+
+def test_stream_parquet_runs_no_job_and_matches_read_table(spark, sf_dir):
+    """The stream's schema comes from the parquet footer: building a
+    documents or embeddings stream launches no Spark job, and its schema is
+    the one read_table serves."""
+    import os
+
+    from mcp_clickhouse_spark.streaming.ops import stream_parquet
+
+    sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    names = ("documents", "embeddings")
+    sc = spark.sparkContext
+    group = "test-stream-parquet-no-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        streams = {n: stream_parquet(spark, f"{sf01}/{n}.parquet") for n in names}
+    finally:
+        sc.setJobGroup("", "")
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    for n, stream in streams.items():
+        assert stream.isStreaming
+        assert stream.schema == read_table(spark, sf01, n).schema
